@@ -47,10 +47,11 @@ def main(argv=None) -> int:
     from pyspark.sql import SparkSession
 
     from pyspark_cdc.export import export_changes_log
+    from pyspark_cdc.session import apply_engine_conf
     from pyspark_cdc.sink import ParquetLake
 
     spark = SparkSession.builder.appName("pyspark-cdc-export").getOrCreate()
-    spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
+    apply_engine_conf(spark)
     lake = ParquetLake(spark, args.table_dir, mode="mor", compact_every=None)
     meta = lake.current_meta()
     if meta is None:

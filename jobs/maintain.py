@@ -85,10 +85,11 @@ def main(argv=None) -> int:
 
     from pyspark.sql import SparkSession
 
+    from pyspark_cdc.session import apply_engine_conf
     from pyspark_cdc.sink import ParquetLake
 
     spark = SparkSession.builder.appName("pyspark-cdc-maintain").getOrCreate()
-    spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
+    apply_engine_conf(spark)
     lake = ParquetLake(
         spark, args.table_dir, n_buckets=args.n_buckets, mode="mor",
         compact_every=None, major_every=args.major_every,

@@ -122,16 +122,13 @@ def main(argv=None) -> int:
     from pyspark.sql import SparkSession
 
     from pyspark_cdc import generate
+    from pyspark_cdc.session import apply_engine_conf
     from pyspark_cdc.sink import ParquetLake
     from pyspark_cdc.stream import replay_batch, replay_stream
 
     spark = SparkSession.builder.appName("pyspark_cdc_replay").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    # engine-required session settings (idempotent if already set)
-    spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
+    apply_engine_conf(spark)
 
     if args.generate:
         generate.write_log(

@@ -49,10 +49,11 @@ def main(argv=None) -> int:
     from pyspark.sql import SparkSession
 
     from pyspark_cdc.search_sync import SearchIndexSync
+    from pyspark_cdc.session import apply_engine_conf
     from pyspark_cdc.sink import ParquetLake
 
     spark = SparkSession.builder.appName("pyspark-cdc-sync").getOrCreate()
-    spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
+    apply_engine_conf(spark)
     lake = ParquetLake(spark, args.table_dir, mode="mor", compact_every=None)
     sync = SearchIndexSync(spark, args.index_dir, lake, route=args.route,
                            pin=args.pin)

@@ -11,6 +11,41 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Session-level SQL settings the engine's plans assume — the one set that
+# get_spark and every spark-submit job (apply_engine_conf) apply.
+ENGINE_SQL_CONF: dict[str, str] = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+    # extras merge (parse.py) concats flat + unwrapped maps; inner wins
+    "spark.sql.mapKeyDedupPolicy": "LAST_WIN",
+    # LWW max_by is a TypedImperativeAggregate => ObjectHashAggregate;
+    # the default 128-key fallback degrades the partial combine to a
+    # sort over full-width rows. 64k keys * ~2KB row buffer stays well
+    # inside task memory.
+    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold": "65536",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.parquet.compression.codec": "snappy",
+    # CDC batches are wide-but-short; don't let tiny files dominate
+    "spark.sql.files.maxPartitionBytes": "134217728",
+    # Lake reads name every bucket dir of the manifest (64+ paths). Above
+    # this many paths Spark lists them with a parallel Spark job, one task
+    # per directory; on a local or POSIX filesystem the driver lists a
+    # few hundred dirs faster than that job launches, so lake reads list
+    # on the driver (SCALING.md, "Listing lake directories").
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": "100000",
+}
+
+
+def apply_engine_conf(spark: SparkSession) -> None:
+    """Set ENGINE_SQL_CONF on a session a spark-submit job obtained with
+    getOrCreate. A key the submitter passed with --conf keeps its value."""
+    submitted = spark.sparkContext.getConf()
+    for k, v in ENGINE_SQL_CONF.items():
+        if not submitted.contains(k):
+            spark.conf.set(k, v)
+
 
 def get_spark(
     app_name: str = "pyspark_cdc",
@@ -34,21 +69,7 @@ def get_spark(
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        # extras merge (parse.py) concats flat + unwrapped maps; inner wins
-        .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-        # LWW max_by is a TypedImperativeAggregate => ObjectHashAggregate;
-        # the default 128-key fallback degrades the partial combine to a
-        # sort over full-width rows. 64k keys * ~2KB row buffer stays well
-        # inside task memory.
-        .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.compression.codec", "snappy")
-        # CDC batches are wide-but-short; don't let tiny files dominate
-        .config("spark.sql.files.maxPartitionBytes", "134217728")
+        .config(map=ENGINE_SQL_CONF)
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("PYSPARK_CDC_DRIVER_MEM", "8g"))
     )

@@ -33,8 +33,11 @@ WHEN NOT MATCHED INSERT` (SURVEY.md S5/S6/J2/J3) — on plain parquet:
   merge against the tombstone — strictly safer than the reference, which
   accepts cross-partition reorder loss (SURVEY.md T3).
 * Additive schema evolution: extras-map keys observed in a batch become
-  real string columns; old files read as null via parquet mergeSchema
-  (north rule: new envelope columns auto-propagate to the sink schema).
+  real string columns, recorded in the manifest's column list (north
+  rule: new envelope columns auto-propagate to the sink schema). Every
+  read is planned from the manifest — an explicit schema built from that
+  list, no footer or schema-inference job — so a column an older file
+  lacks reads as null.
 
 The MERGE itself is the same map-side-combining hash aggregate as the LWW
 stage: union(target-bucket rows, batch rows) -> max_by per key. Catalyst
@@ -134,6 +137,18 @@ class CommitConflict(Exception):
 DLQ_STATUSES = ("ok", "tombstone", "malformed", "unknown_op",
                 "bad_payload", "missing_key", "missing_route")
 
+# The columns _flatten_parsed_delta reads from a parsed delta, typed as
+# parse.parse_envelopes writes them (`status` is the partition column).
+# A static read schema: no per-delta schema-inference job.
+PARSED_DELTA_SCHEMA = T.StructType([
+    T.StructField("status", T.StringType()),
+    T.StructField("effective_op", T.StringType()),
+    *[T.StructField(c, T.StringType()) for c in DOMAIN_COLS],
+    T.StructField("extras", T.MapType(T.StringType(), T.StringType())),
+    T.StructField(ROUTE_COL, T.StringType()),
+    *[T.StructField(c, T.LongType()) for c in ORD_COLS],
+])
+
 _MERGE_OBS_AGGS: dict[int, list] = {}
 
 
@@ -167,6 +182,67 @@ def _merge_obs_aggs(n_buckets: int) -> list:
 
 def bucket_expr(n_buckets: int):
     return F.pmod(F.xxhash64(*KEY_COLS), F.lit(n_buckets))
+
+
+_M64 = (1 << 64) - 1
+_P1, _P2, _P3, _P4, _P5 = (
+    0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9,
+    0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5,
+)
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _xxh64_round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def _xxh64(data: bytes, seed: int) -> int:
+    """XXH64 of `data` (unsigned 64-bit seed and result) — the algorithm
+    behind Spark's xxhash64, which hashes a string as its UTF-8 bytes."""
+    n, i = len(data), 0
+    if n >= 32:
+        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed,
+             (seed - _P1) & _M64]
+        while i + 32 <= n:
+            for j in range(4):
+                lane = int.from_bytes(data[i + 8 * j:i + 8 * j + 8], "little")
+                v[j] = _xxh64_round(v[j], lane)
+            i += 32
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12)
+             + _rotl(v[3], 18)) & _M64
+        for lane in v:
+            h = ((h ^ _xxh64_round(0, lane)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        h ^= _xxh64_round(0, int.from_bytes(data[i:i + 8], "little"))
+        h = (_rotl(h, 27) * _P1 + _P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        h ^= int.from_bytes(data[i:i + 4], "little") * _P1 & _M64
+        h = (_rotl(h, 23) * _P2 + _P3) & _M64
+        i += 4
+    for b in data[i:]:
+        h ^= b * _P5 & _M64
+        h = _rotl(h, 11) * _P1 & _M64
+    h = (h ^ (h >> 33)) * _P2 & _M64
+    h = (h ^ (h >> 29)) * _P3 & _M64
+    return h ^ (h >> 32)
+
+
+def key_bucket_of(key: tuple[str, str], n_buckets: int) -> int:
+    """bucket_expr(n_buckets) of one primary key, on the driver: Spark's
+    xxhash64 chains the key columns through the seed (42 first; a null
+    column leaves the hash unchanged), and pmod of the signed result."""
+    h = 42
+    for v in key:
+        if v is not None:
+            h = _xxh64(v.encode("utf-8"), h)
+    return (h - (1 << 64) if h >> 63 else h) % n_buckets
 
 
 def resolve_lww(df: DataFrame) -> DataFrame:
@@ -758,6 +834,10 @@ class ParquetLake:
     # ---------------- data plane ----------------
 
     def _row_schema(self, extra_cols: list[str]) -> T.StructType:
+        """The flat row shape of a manifest column list — also the read
+        schema of base buckets and flat deltas, where `__bucket` and
+        `route` are typed partition columns (a numeric-looking route
+        stays the string it was written as)."""
         fields = [T.StructField(c, T.StringType(), True) for c in DOMAIN_COLS]
         fields += [T.StructField(ROUTE_COL, T.StringType(), True)]
         fields += [T.StructField(c, T.StringType(), True) for c in extra_cols]
@@ -775,55 +855,56 @@ class ParquetLake:
 
     def _read_buckets(self, meta: dict, buckets: list[int], extra_cols: list[str]) -> DataFrame:
         """Base rows of the given buckets. Each bucket dir is a partitioned
-        root with route=R subdirs — partition discovery recovers `route`
-        as a column (and a route predicate on the result prunes at the
-        directory level)."""
+        root with route=R subdirs — read as the typed `route` partition
+        column (a route predicate on the result prunes at the directory
+        level)."""
         paths = [
             os.path.join(self.table_dir, meta["buckets"][str(b)])
             for b in buckets
             if str(b) in meta["buckets"]
         ]
-        df = self._read_bucket_tree(paths)
+        schema = self._row_schema(extra_cols)
+        df = self._read_bucket_tree(paths, schema)
         if df is None:
-            return self.spark.createDataFrame([], self._row_schema(extra_cols))
-        df = self._route_as_string(df)
-        for c in [ROUTE_COL, *extra_cols]:
-            if c not in df.columns:
-                df = df.withColumn(c, F.lit(None).cast("string"))
+            return self.spark.createDataFrame([], schema)
         return df.withColumn(BUCKET_COL, bucket_expr(self.n_buckets))
 
-    def _read_bucket_tree(self, paths: list[str]):
+    def _read_bucket_tree(self, paths: list[str], schema: T.StructType):
         """Bucket dirs (possibly spanning several snapshots) -> one
-        DataFrame. Bucket dirs are `__bucket=B` roots holding `route=R`
-        subdirs; partition discovery needs each snapshot's data dir as
-        basePath to recover (__bucket, route) without tripping
-        CONFLICTING_DIRECTORY_STRUCTURES, and dirs from different
-        snapshots are separate trees, so group by parent and union."""
+        DataFrame under the manifest's row schema. Bucket dirs are
+        `__bucket=B` roots holding `route=R` subdirs; each snapshot's
+        data dir is the basePath that types (__bucket, route) as
+        partition columns, and dirs from different snapshots are separate
+        trees (one load of several trips
+        CONFLICTING_DIRECTORY_STRUCTURES), so group by parent and union.
+        The explicit schema and the session's listing threshold
+        (session.ENGINE_SQL_CONF) leave building this DataFrame without
+        a Spark job: no footer read, no parallel listing."""
         if not paths:
             return None
         groups: dict[str, list[str]] = {}
         for p in paths:
             groups.setdefault(os.path.dirname(p), []).append(p)
         parts = [
-            self.spark.read.option("mergeSchema", "true")
+            self.spark.read.schema(schema)
             .option("basePath", parent)
             .parquet(*sorted(ps))
             for parent, ps in sorted(groups.items())
         ]
         df = parts[0]
         for p in parts[1:]:
-            df = df.unionByName(p, allowMissingColumns=True)
+            df = df.unionByName(p)
         return df
 
-    @staticmethod
-    def _route_as_string(df: DataFrame) -> DataFrame:
-        """Partition-column type inference could read a numeric-looking
-        tenant (route=123) back as int; the lake contract is string.
-        Callers apply this AFTER any route filter so partition pruning
-        sees the raw column."""
-        if ROUTE_COL in df.columns:
-            return df.withColumn(ROUTE_COL, F.col(ROUTE_COL).cast("string"))
-        return df
+    def _read_flat_delta(self, dp: str, extra_cols: list[str],
+                         route: str | None = None) -> DataFrame:
+        """A flat delta root (minor-fold output, or a merge() MoR batch):
+        (bucket, route)-partitioned like the base, read under the
+        manifest's row schema with the bucket column dropped."""
+        flat = self.spark.read.schema(self._row_schema(extra_cols)).parquet(dp)
+        if route is not None:
+            flat = flat.filter(F.col(ROUTE_COL) == route)
+        return flat.drop(BUCKET_COL)
 
     @staticmethod
     def _obs_get(obs, out_dir: str, **defaults) -> dict:
@@ -1339,10 +1420,12 @@ class ParquetLake:
         filter over an already manifest-pruned, compact_every-bounded
         backlog (the status partition dirs still prune dead letters);
         only the BASE carries route partition dirs."""
-        df = self.spark.read.parquet(dp).filter(F.col("status") == "ok")
+        df = (
+            self.spark.read.schema(PARSED_DELTA_SCHEMA).parquet(dp)
+            .filter(F.col("status") == "ok")
+        )
         if route is not None:
             df = df.filter(F.col(ROUTE_COL) == route)
-        df = self._route_as_string(df)
         deleted = F.col("effective_op") == "d"
 
         def payload(c, name: str):
@@ -1443,9 +1526,9 @@ class ParquetLake:
 
         # A backlog whose rows are ALL dead letters folds to ZERO ok rows:
         # the write leaves only _SUCCESS (no partition dirs), and
-        # registering that directory as a flat delta would break every
-        # subsequent read (spark.read.parquet on a file-less dir cannot
-        # infer a schema). LWW associativity makes dropping the fold exact:
+        # registering that directory as a flat delta would leave every
+        # later read listing a file-less dir. LWW associativity makes
+        # dropping the fold exact:
         # max over (base ∪ ∅) == max over base, and dead-letter rows never
         # participate in the merge anyway (any minor fold discards them).
         wrote_rows = got["n_rows"] > 0
@@ -2070,25 +2153,27 @@ class ParquetLake:
                 return True  # no filter: exclude-nothing == keep-everything
             return (int(b) in bucket_set) != exclude
 
-        base_paths = [
-            os.path.join(self.table_dir, p)
-            for b, p in meta["buckets"].items()
+        selected = [
+            b for b in meta["buckets"]
             if bucket_has_route(b) and bucket_selected(b)
         ]
-        base = self._read_bucket_tree(base_paths)
+        if route is not None and any(b not in bucket_routes for b in selected):
+            # a bucket with no manifest route list was written before
+            # route partitioning: it has no per-tenant layout, and
+            # silently returning every tenant's rows would break the
+            # isolation contract, so refuse loudly
+            raise ValueError(
+                "route-scoped read on a base written without route "
+                "partitioning; run a compaction on the current engine first"
+            )
+        base = self._read_bucket_tree(
+            [os.path.join(self.table_dir, meta["buckets"][b]) for b in selected],
+            self._row_schema(extra_cols),
+        )
         if base is not None:
             if route is not None:
-                if ROUTE_COL not in base.columns:
-                    # a pre-route base has no per-tenant layout: silently
-                    # returning every tenant's rows would break the
-                    # isolation contract, so refuse loudly
-                    raise ValueError(
-                        "route-scoped read on a base written without route "
-                        "partitioning; run a compaction on the current "
-                        "engine first"
-                    )
                 base = base.filter(F.col(ROUTE_COL) == route)
-            base = self._normalize_rows(self._route_as_string(base), extra_cols)
+            base = self._normalize_rows(base, extra_cols)
         return base
 
     def _read_split(
@@ -2136,14 +2221,9 @@ class ParquetLake:
                     self._flatten_parsed_delta(dp, extra_cols, route=route)
                 )
             else:
-                flat = (
-                    self.spark.read.option("mergeSchema", "true")
-                    .parquet(dp)
-                    .drop(BUCKET_COL)
+                delta_parts.append(
+                    self._read_flat_delta(dp, extra_cols, route=route)
                 )
-                if route is not None and ROUTE_COL in flat.columns:
-                    flat = flat.filter(F.col(ROUTE_COL) == route)
-                delta_parts.append(self._route_as_string(flat))
         delta = None
         if delta_parts:
             delta = delta_parts[0]
@@ -2418,29 +2498,22 @@ class ParquetLake:
 
     def key_bucket(self, repo: str, path: str) -> int:
         """The key-hash bucket of a primary key — the engine's own
-        bucket_expr evaluated over literals by Catalyst's constant
-        folding (a LocalRelation plan: no tasks, no scan)."""
+        bucket_expr, computed on the driver (key_bucket_of: no Spark
+        job)."""
         return self.key_buckets([(repo, path)])[(repo, path)]
 
     def key_buckets(
         self, keys: list[tuple[str, str]], n_buckets: int | None = None
     ) -> dict[tuple[str, str], int]:
         """key -> key-hash bucket for a batch of primary keys, computed
-        in ONE LocalRelation job with the engine's own bucket function
-        (bucket_expr over a local key list: no scan; the collect is
-        bounded by the request size, not the table). n_buckets overrides
-        the instance's modulus — lookups pass the modulus of the MANIFEST
-        they read, so they stay correct when another process rebucket()ed
-        the table, and when time-traveling across a rebucket boundary."""
-        if not keys:
-            return {}
-        rows = (
-            self.spark.createDataFrame(keys, ["repo", "path"])
-            .select("repo", "path",
-                    bucket_expr(n_buckets or self.n_buckets).alias("b"))
-            .collect()
-        )
-        return {(r["repo"], r["path"]): int(r["b"]) for r in rows}
+        on the driver by key_bucket_of, a bit-exact twin of bucket_expr
+        (Spark's xxhash64 + pmod; ~35 µs a key, no Spark job). n_buckets
+        overrides the instance's modulus — lookups pass the modulus of
+        the MANIFEST they read, so they stay correct when another process
+        rebucket()ed the table, and when time-traveling across a rebucket
+        boundary."""
+        n = n_buckets or self.n_buckets
+        return {k: key_bucket_of(k, n) for k in keys}
 
     def lookup(
         self,
@@ -2493,10 +2566,10 @@ class ParquetLake:
         O(union of key buckets + bucket-pruned backlog) cost.
 
         Same pruning as lookup(), vectorized over the key set: the
-        buckets of all keys are computed in ONE LocalRelation job with
-        the engine's own bucket_expr; only those base bucket dirs are
-        listed; deltas whose manifest bucket list cannot intersect the
-        key buckets are skipped. Within the surviving scan, key matching
+        buckets of all keys are computed on the driver (key_buckets, no
+        Spark job); only those base bucket dirs are listed; deltas whose
+        manifest bucket list cannot intersect the key buckets are
+        skipped. Within the surviving scan, key matching
         is an OR-of-conjunctions predicate (lands in PushedFilters —
         row-group skipping) up to LOOKUP_PREDICATE_MAX keys, and a
         broadcast left-semi join above it (the key list broadcasts; the
@@ -2781,13 +2854,9 @@ class ParquetLake:
                     )
                 )
             else:
-                flat = (
-                    self.spark.read.option("mergeSchema", "true")
-                    .parquet(dp)
+                parts.append(
+                    self._read_flat_delta(dp, extra_cols, route=prune_route)
                 )
-                if prune_route is not None and ROUTE_COL in flat.columns:
-                    flat = flat.filter(F.col(ROUTE_COL) == prune_route)
-                parts.append(self._route_as_string(flat))
         versions = parts[0]
         for p in parts[1:]:
             versions = versions.unionByName(p, allowMissingColumns=True)

@@ -82,7 +82,7 @@ def _assert_applies(lake, a, b):
     applied = _apply_changes(state_a, changes)
     # additive schema evolution: a column born inside the range is absent
     # from the from-snapshot read's schema; align on the union (missing
-    # == null, exactly how parquet mergeSchema reads old files)
+    # == null, exactly how an old file reads under the manifest's schema)
     cols = {c for r in [*applied.values(), *state_b.values()] for c in r}
     norm = lambda s: {  # noqa: E731
         k: {c: r.get(c) for c in cols} for k, r in s.items()

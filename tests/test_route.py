@@ -125,6 +125,61 @@ def test_numeric_route_stays_string(spark, tmp_path):
     assert {r["route"] for r in out.collect()} == {"123"}
 
 
+def test_zero_padded_route_keeps_its_name_through_folds(spark, tmp_path):
+    """A numeric-looking route with leading zeros ('007') must come back
+    as '007' from every reader after it lands in route partition dirs — a
+    major fold's base and a minor fold's flat delta. Inferring partition
+    types would read route=007 back as the integer 7, and a route-keyed
+    consumer (SearchIndexSync) would file the folded documents under '7'.
+    The lake migrates keys between routes (route_stable_keys=False), so
+    read_changes also compares each changed key's prior route: a prior
+    route read as '7' would emit a spurious departure delete."""
+
+    def batch(i, lsn0):
+        recs = [
+            {
+                "key": json.dumps({"repo": "r/x", "path": f"f{k}.py"}),
+                "value": generate._env(
+                    "u", generate._after("r/x", f"f{k}.py", lsn0 + k),
+                    lsn=lsn0 + k,
+                ),
+                "topic": "007",
+                "partition": 0,
+                "offset": lsn0 + k,
+            }
+            for k in range(i, i + 4)
+        ]
+        return spark.createDataFrame(recs, schema=generate.KAFKA_SHAPE)
+
+    lake = ParquetLake(
+        spark, str(tmp_path / "lake"), n_buckets=4, mode="mor",
+        compact_every=None, route_stable_keys=False,
+    )
+    process_batch(batch(0, 100), 0, lake)
+    lake.compact_now("major")  # route=007 dirs in the base
+    a = lake.current_meta()["id"]
+    process_batch(batch(2, 200), 1, lake)
+    lake.compact_now("minor")  # route=007 dirs in a flat delta
+    process_batch(batch(4, 300), 2, lake)  # and one raw parsed delta
+    meta = lake.current_meta()
+    assert [d["format"] for d in meta["deltas"]] == ["flat", "parsed"]
+
+    keys = [("r/x", f"f{k}.py") for k in range(8)]
+    changes = lake.read_changes(a).collect()
+    assert {(r["path"], r["_change_type"]) for r in changes} == {
+        ("f2.py", "update"), ("f3.py", "update"),
+        *((f"f{k}.py", "insert") for k in range(4, 8)),
+    }
+    for name, rows in {
+        "read": lake.read().collect(),
+        "read_route": lake.read(route="007").collect(),
+        "lookup_many": lake.lookup_many(keys).collect(),
+        "read_changes": changes,
+    }.items():
+        assert {r["route"] for r in rows} == {"007"}, name
+    assert len(lake.read(route="007").collect()) == 8
+
+
 def test_manifest_level_delta_pruning(spark, tmp_path):
     """A delta holding only tenant A's rows is skipped entirely (not even
     listed) by a tenant-B read: its manifest entry records its routes."""
