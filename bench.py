@@ -9,7 +9,8 @@ local[$SPARK_GRAFT_CPUS] (default 32) and prints ONE JSON line:
 
 Headline workload:
   * q_replay        — the flagship: deterministic Debezium event-log replay
-                      (parse -> LWW dedup -> bucketed COW MERGE) sized by sf;
+                      (parse -> delta append -> tiered folds into the
+                      bucketed base) sized by sf;
                       `replay_events_per_sec` is the BASELINE.json north metric.
   * q_lww_state     — CDC final-state query over the driver `events` table.
   * q1_pricing      — TPC-H Q1-shaped agg over lineitem (scan+agg throughput).
@@ -151,8 +152,17 @@ def _jvm_rate(spark, n: int) -> float:
 # ordinary degraded windows 3–6; storm windows measure 0.15–1.4 (2026-08-18
 # incident, BENCH/BASELINE.md host-calibration appendix) while the
 # pure-Python CPU probe stays healthy — the hypervisor throttles the JVM
-# specifically, 20–100x.
+# specifically, 20–100x. Calibrated at local[32]; the probe's rate scales
+# with the session's cores, so the gate compares against storm_mrows().
 STORM_MROWS = 2.5
+STORM_CALIBRATION_CPUS = 32
+
+
+def storm_mrows(spark) -> float:
+    """STORM_MROWS scaled to this session's cores (defaultParallelism):
+    at local[4] the threshold is 2.5 * 4/32 = 0.31 Mrows/s."""
+    cpus = spark.sparkContext.defaultParallelism
+    return STORM_MROWS * cpus / STORM_CALIBRATION_CPUS
 
 
 def jvm_probe(spark, n: int = 30_000_000) -> dict:
@@ -178,7 +188,7 @@ def jvm_probe(spark, n: int = 30_000_000) -> dict:
     # proportionally more per-task overhead at 256 partitions and would
     # skew the stamp low vs prior rounds' 3x30M stamps).
     sizing = _jvm_rate(spark, 5_000_000)
-    rep_n = n if sizing >= STORM_MROWS else 5_000_000
+    rep_n = n if sizing >= storm_mrows(spark) else 5_000_000
     # contention is BURSTY (measured 3.4x swing in 2 min) => 3 reps
     rates = sorted(_jvm_rate(spark, rep_n) for _ in range(3))
     return {
@@ -194,19 +204,21 @@ def wait_out_storm(spark, first_rate: float, max_waits: int = 5) -> dict:
 
     This shared VM has minute-scale windows in which the hypervisor
     throttles JVM execution 20–100x while pure-Python CPU stays healthy
-    (see STORM_MROWS). Measuring the engine inside such a window records
-    the host, not the engine — so if the calibration probe reads a storm,
-    sleep and re-probe up to max_waits times (~45 s apart, each re-probe a
-    single bounded 5M-row rep) and start measuring only when the window
+    (see STORM_MROWS, scaled per core by storm_mrows). Measuring the
+    engine inside such a window records the host, not the engine — so
+    if the calibration probe reads a storm, sleep and re-probe up to
+    max_waits times (~45 s apart, each re-probe a single bounded 5M-row
+    rep) and start measuring only when the window
     clears or the budget is spent. Every attempt's rate is recorded in the
     output JSON (`jvm_probe_wait_rates`) — nothing is dropped or hidden,
     and the gate never touches a reported wall; it only chooses WHEN the
     measurement starts, exactly like re-running a benchmark on a quiet
     machine.
     """
+    threshold = storm_mrows(spark)
     waits: list[float] = [round(first_rate, 2)]
     rate = first_rate
-    while rate < STORM_MROWS and len(waits) <= max_waits:
+    while rate < threshold and len(waits) <= max_waits:
         time.sleep(45)
         rate = _jvm_rate(spark, 5_000_000)
         waits.append(round(rate, 2))

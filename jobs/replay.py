@@ -75,13 +75,8 @@ def main(argv=None) -> int:
     ap.add_argument("--checkpoint", help="checkpoint dir (stream mode)")
     ap.add_argument("--metrics-dir", help="lineage metrics dir")
     ap.add_argument("--n-buckets", type=int, default=64)
-    ap.add_argument("--table-mode", choices=["cow", "mor"], default="mor",
-                    help="merge strategy: mor (delta-append + read-time LWW "
-                         "+ periodic compaction; O(batch) per micro-batch, "
-                         "the streaming default) or cow (rewrite touched "
-                         "buckets every batch)")
     ap.add_argument("--compact-every", type=int, default=10,
-                    help="mor: fold deltas into the base every N batches; "
+                    help="fold the delta backlog every N batches; "
                          "0 disables inline folds (decoupled deployment — "
                          "run jobs/maintain.py as a separate process)")
     ap.add_argument("--max-files-per-trigger", type=int)
@@ -138,7 +133,7 @@ def main(argv=None) -> int:
 
     lake = ParquetLake(
         spark, args.table_dir, n_buckets=args.n_buckets,
-        mode=args.table_mode, compact_every=args.compact_every or None,
+        compact_every=args.compact_every or None,
     )
 
     probe_pre = _jvm_stamp(spark) if args.probe_stamps else None
@@ -164,11 +159,11 @@ def main(argv=None) -> int:
             if r == args.runs:
                 lake = run_lake = ParquetLake(
                     spark, run_dir, n_buckets=args.n_buckets,
-                    mode=args.table_mode, compact_every=args.compact_every or None)
+                    compact_every=args.compact_every or None)
             else:
                 warm_dirs.append(run_dir)
                 run_lake = ParquetLake(spark, run_dir, n_buckets=args.n_buckets,
-                                       mode=args.table_mode, compact_every=args.compact_every or None)
+                                       compact_every=args.compact_every or None)
             # lineage metrics only for the final measured run, so the
             # metrics dir never mixes batch_ids from warm-up replays
             mdir = args.metrics_dir if r == args.runs else None

@@ -52,12 +52,6 @@ def _lineage_aggs() -> list:
     return _LINEAGE_AGGS
 
 
-def batch_lineage(parsed: DataFrame, batch_id) -> DataFrame:
-    return parsed.groupBy("topic", "partition").agg(
-        *_lineage_aggs()
-    ).withColumn("batch_id", F.lit(batch_id).cast("long"))
-
-
 def delta_lineage(spark, delta_dir: str, batch_id) -> DataFrame:
     """Per-(topic, partition) lineage for a just-written PARSED delta
     (sink.merge_parsed layout: partitioned by status, columns include

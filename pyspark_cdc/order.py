@@ -4,27 +4,21 @@ The reference gets ordering implicitly from Kafka partition order
 (sync.go:36-43 sequential iteration over PK-keyed topics); micro-batches
 destroy that, so ordering becomes explicit here (SURVEY.md section 2.3 J1).
 
-Two implementations:
+``lww_aggregate`` — ``groupBy(key).agg(max_by(row, ord))`` — is the
+explicit LWW stage. It is a hash aggregate with MAP-SIDE PARTIAL COMBINE:
+a hot key's rows are reduced to one candidate per task *before* the
+shuffle, so a key holding 50% of a 10^10-event batch ships ~n_tasks rows,
+not 5*10^9. No salting needed — partial aggregation IS the salt, chosen
+by the engine. The lake's read and folds resolve LWW with the same
+max_by over ``packed_ord`` (sink.resolve_lww), so ingest needs no
+separate LWW stage at all.
 
-* ``lww_aggregate`` (default) — ``groupBy(key).agg(max_by(row, ord))``.
-  This is a hash aggregate with MAP-SIDE PARTIAL COMBINE: a hot key's
-  rows are reduced to one candidate per task *before* the shuffle, so a
-  key holding 50% of a 10^10-event batch ships ~n_tasks rows, not 5*10^9.
-  No salting needed — partial aggregation IS the salt, chosen by the
-  engine. This is strictly better at scale than any window.
-
-* ``lww_window`` — the textbook row_number()-over-window formulation, with
-  optional explicit two-phase salting. Kept for parity tests and for
-  plan comparison; a window must co-locate ALL rows of a key in one
-  partition with no partial reduction, which is exactly what hot-key skew
-  breaks.
-
-Both return one row per (repo, path): the winning change event.
+It returns one row per (repo, path): the winning change event.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .schemas import KEY_COLS, LSN_COL, OFFSET_COL, TS_COL, TX_COL
@@ -42,7 +36,7 @@ ORD_COLS = [LSN_COL, TX_COL, TS_COL, OFFSET_COL]
 # PRIMARY KEY across partitions without LSNs is operating outside any
 # ordering contract this engine could honor.
 
-# Columns carried through LWW into the MERGE.
+# Columns an LWW winner carries (lww_aggregate's output row).
 CARRY_COLS = ["effective_op", "commit", "lang", "content", "extras", "route", *ORD_COLS]
 
 _SIGN_BIT = -(1 << 63)
@@ -79,15 +73,11 @@ def packed_ord(cols: list[str] = ORD_COLS):
     return F.unhex(F.concat(*parts))
 
 
-def _ok_only(parsed: DataFrame) -> DataFrame:
-    return parsed.filter(F.col("status") == "ok")
-
-
 def lww_aggregate(parsed: DataFrame) -> DataFrame:
     """One-shuffle LWW: max_by(row-struct, packed ordering scalar); the
     packed binary orders exactly as the oracle's (lsn, tx_id, ts_ms,
     offset) sort key."""
-    ok = _ok_only(parsed)
+    ok = parsed.filter(F.col("status") == "ok")
     row = F.struct(*[F.col(c) for c in CARRY_COLS])
     return (
         ok.groupBy(*KEY_COLS)
@@ -95,35 +85,3 @@ def lww_aggregate(parsed: DataFrame) -> DataFrame:
         .select(*KEY_COLS, "_w.*")
     )
 
-
-def lww_window(parsed: DataFrame, salt_buckets: int | None = None) -> DataFrame:
-    """row_number()==1 over a per-key window; optional two-phase salting
-    for hot keys (phase 1 reduces each (key, salt) slice to one candidate,
-    phase 2 picks the winner among <= salt_buckets candidates)."""
-    ok = _ok_only(parsed).select(*KEY_COLS, *CARRY_COLS)
-    ord_desc = [F.col(c).desc() for c in ORD_COLS]
-
-    if salt_buckets:
-        salted = ok.withColumn("_salt", F.pmod(F.xxhash64(*ORD_COLS), F.lit(salt_buckets)))
-        w1 = Window.partitionBy(*KEY_COLS, "_salt").orderBy(*ord_desc)
-        phase1 = (
-            salted.withColumn("_rn", F.row_number().over(w1))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn", "_salt")
-        )
-        ok = phase1
-
-    w = Window.partitionBy(*KEY_COLS).orderBy(*ord_desc)
-    return (
-        ok.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
-def lww(parsed: DataFrame, method: str = "aggregate", **kwargs) -> DataFrame:
-    if method == "aggregate":
-        return lww_aggregate(parsed)
-    if method == "window":
-        return lww_window(parsed, **kwargs)
-    raise ValueError(f"unknown lww method: {method}")

@@ -1,27 +1,27 @@
-"""Exactly-once MERGE sink: a bucketed parquet lake with an Iceberg-style
-snapshot manifest and two merge strategies (COW and merge-on-read).
+"""Exactly-once MERGE sink: a bucketed merge-on-read parquet lake with an
+Iceberg-style snapshot manifest.
 
 Why not Iceberg itself: the sandbox has no Iceberg runtime jar (SURVEY.md
 section 7.3 risk #1), so this module implements the same contract —
 `MERGE INTO sink ON (repo,path) WHEN MATCHED [AND op='d'] DELETE/UPDATE
 WHEN NOT MATCHED INSERT` (SURVEY.md S5/S6/J2/J3) — on plain parquet:
 
-* The table is hash-bucketed on the merge key: bucket =
-  pmod(xxhash64(repo, path), n_buckets). A COW MERGE reads and rewrites
-  ONLY the buckets its batch touches (copy-on-write at bucket
-  granularity, like Iceberg COW with bucket partition transform);
-  untouched buckets are carried forward by manifest reference. At 100 TB
-  you'd raise n_buckets so a bucket is a few GB — batch cost scales with
-  batch key spread, not table size.
-* mode='mor' (merge-on-read, the streaming default): a batch appends its
-  rows as DELTA files — no table read, no sort, O(batch) per micro-batch
-  (a 100 TB table cannot be rewritten per micro-batch). LWW resolves at
-  read (small backlogs via a broadcast key-set join against the base —
-  zero table-wide shuffle; large ones via the global aggregate) and at
+* Merge-on-read ingest: a batch appends its parsed rows as one DELTA —
+  no table read, no sort, O(batch) per micro-batch (a 100 TB table
+  cannot be rewritten per micro-batch). LWW resolves at read (small
+  backlogs via a broadcast key-set join against the base — zero
+  table-wide shuffle; large ones via the global aggregate) and at
   TIERED compaction: every `compact_every` batches a MINOR fold merges
   the deltas among themselves (O(recent data), no base read), and every
   `major_every`-th compaction folds into the base — the Iceberg v2 /
   Hudi / Paimon MoR + LSM-tiering design.
+* The base is hash-bucketed on the merge key: bucket =
+  pmod(xxhash64(repo, path), n_buckets). A major fold reads and
+  rewrites ONLY the buckets its deltas touch (copy-on-write at bucket
+  granularity, like Iceberg with a bucket partition transform);
+  untouched buckets are carried forward by manifest reference. At
+  100 TB you'd raise n_buckets so a bucket is a few GB — fold cost
+  scales with the backlog's key spread, not table size.
 * Each commit writes an immutable snapshot manifest (bucket -> data dir,
   applied batch ids, column list) and atomically swaps the `current`
   pointer (os.replace). A crash mid-merge leaves the old snapshot
@@ -39,9 +39,9 @@ WHEN NOT MATCHED INSERT` (SURVEY.md S5/S6/J2/J3) — on plain parquet:
   list, no footer or schema-inference job — so a column an older file
   lacks reads as null.
 
-The MERGE itself is the same map-side-combining hash aggregate as the LWW
-stage: union(target-bucket rows, batch rows) -> max_by per key. Catalyst
-sees one shuffle on the merge key; AQE coalesces/splits partitions.
+The MERGE itself is one per-key max_by aggregate over union(base rows,
+delta rows) — at read time and in every fold (resolve_lww,
+resolve_lww_clustered) — so where LWW resolves cannot change the winner.
 
 Reference parity: upsert = Meilisearch AddDocuments PK-replace
 (sync.go:84), delete = DeleteDocument (sync.go:71,108-113), delete of a
@@ -250,9 +250,9 @@ def resolve_lww(df: DataFrame) -> DataFrame:
     full row by the packed (lsn, tx_id, ts_ms, offset) ordering scalar
     (order.packed_ord) — Kafka arrival order is the final tie-break,
     exactly as the reference's sequential consumer loop would apply an
-    exact-tie pair. Used by the COW merge aggregation and by the MoR read
-    path — max is associative, so resolving at write time, at compaction,
-    or at read time yields the identical winner."""
+    exact-tie pair. Used by the read path; the folds use its clustered
+    twin — max is associative, so resolving at compaction or at read
+    time yields the identical winner."""
     non_key = [c for c in df.columns if c not in KEY_COLS]
     row = F.struct(*[F.col(c) for c in non_key])
     return (
@@ -292,23 +292,20 @@ def resolve_lww_clustered(df: DataFrame, n_buckets: int) -> DataFrame:
 
 
 class ParquetLake:
-    """Single-writer lake table. Metadata ops are driver-side file ops on a
-    shared filesystem (local here; a real deployment swaps this layer for
-    an Iceberg/metastore catalog — the data plane is unchanged).
+    """Merge-on-read lake table. Metadata ops are driver-side file ops on
+    a shared filesystem (local here; a real deployment swaps this layer
+    for an Iceberg/metastore catalog — the data plane is unchanged).
+    Several writers may share one table: commits are optimistic and
+    rebase or abort under a short commit lock (_commit_with_rebase).
 
-    Two merge strategies (same manifest, same exactly-once contract):
-
-    * mode='cow' (copy-on-write): each batch unions with its touched base
-      buckets, resolves LWW, and rewrites those buckets. Read = plain scan.
-      Batch cost is O(touched table data) — right for low-rate tables and
-      for compaction.
-    * mode='mor' (merge-on-read, the streaming default): each batch writes
-      ONLY its own rows as bucket-partitioned delta files — no table read,
-      no sort; cost is O(batch) regardless of table size (a 100 TB table
-      cannot be rewritten per micro-batch). LWW resolves at read time
-      (resolve_lww over base+deltas) and at compaction, which runs the COW
-      path over everything once every `compact_every` batches to bound
-      read amplification. Iceberg v2 / Hudi / Paimon MoR is this design.
+    Each batch writes ONLY its own rows as one status-partitioned delta
+    (merge_parsed) — no table read, no sort; cost is O(batch) regardless
+    of table size. LWW resolves at read time (resolve_lww over
+    base+deltas) and at compaction: every `compact_every` batches a
+    minor fold merges the deltas and every `major_every`-th fold rewrites
+    the touched base buckets, bounding read amplification
+    (compact_every=1, major_every=1 folds every batch into the base).
+    Iceberg v2 / Hudi / Paimon MoR is this design.
     """
 
     def __init__(
@@ -316,7 +313,7 @@ class ParquetLake:
         spark: SparkSession,
         table_dir: str,
         n_buckets: int = 32,
-        mode: str = "cow",
+        mode: str = "mor",
         compact_every: int | None = 10,
         tombstone_horizon_lsn: int | None = None,
         broadcast_delta_bytes: int = 32 * 1024 * 1024,
@@ -327,12 +324,15 @@ class ParquetLake:
         snapshot_retention: int = SNAPSHOT_RETENTION,
         route_stable_keys: bool = True,
     ):
-        if mode not in ("cow", "mor"):
-            raise ValueError(f"unknown lake mode: {mode}")
+        if mode != "mor":
+            raise ValueError(
+                f"unknown lake mode {mode!r}: the lake is merge-on-read "
+                "only; to fold every batch into the base pass "
+                "compact_every=1, major_every=1"
+            )
         self.spark = spark
         self.table_dir = table_dir
         self.n_buckets = n_buckets
-        self.mode = mode
         # compact_every=None disables INLINE compaction entirely — the
         # decoupled deployment mode where a separate maintenance process
         # calls compact_now() while the ingest job only appends deltas
@@ -677,18 +677,22 @@ class ParquetLake:
         # independent.
         snap_file = os.path.join(self._meta_dir, f"snap-{meta['id']}.json")
         payload = json.dumps(meta)
+        # Published whole (written under a temp name, then hard-linked):
+        # current_meta's forward scan reads snap-K as soon as it exists.
+        tmp_snap = os.path.join(self._meta_dir, f".snap.{uuid.uuid4().hex}")
+        with open(tmp_snap, "w") as f:
+            f.write(payload)
+            f.flush()
+            os.fsync(f.fileno())
         try:
-            # O_EXCL: snapshot files are immutable and ids single-assign.
-            # If two writers ever reach this point for the same id (a
-            # stale-broken lock whose holder resumed — see _commit_lock),
-            # the loser fails LOUDLY here and rebases, instead of both
-            # writers last-wins-overwriting snap file + pointer and one
-            # committed batch silently vanishing.
-            fd = os.open(snap_file, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            with os.fdopen(fd, "w") as f:
-                f.write(payload)
-                f.flush()
-                os.fsync(f.fileno())
+            # link() fails if the name exists: snapshot files are
+            # immutable and ids single-assign. If two writers ever reach
+            # this point for the same id (a stale-broken lock whose
+            # holder resumed — see _commit_lock), the loser fails LOUDLY
+            # here and rebases, instead of both writers
+            # last-wins-overwriting snap file + pointer and one committed
+            # batch silently vanishing.
+            os.link(tmp_snap, snap_file)
         except FileExistsError:
             with open(snap_file) as f:
                 existing = f.read()
@@ -698,6 +702,8 @@ class ParquetLake:
                 )
             # identical content: our own crash-retry after writing the
             # snap but before the pointer swap — fall through to the swap
+        finally:
+            os.unlink(tmp_snap)
         tmp = os.path.join(self._meta_dir, f".current.{uuid.uuid4().hex}")
         with open(tmp, "w") as f:
             f.write(str(meta["id"]))
@@ -853,22 +859,6 @@ class ParquetLake:
         ]
         return T.StructType(fields)
 
-    def _read_buckets(self, meta: dict, buckets: list[int], extra_cols: list[str]) -> DataFrame:
-        """Base rows of the given buckets. Each bucket dir is a partitioned
-        root with route=R subdirs — read as the typed `route` partition
-        column (a route predicate on the result prunes at the directory
-        level)."""
-        paths = [
-            os.path.join(self.table_dir, meta["buckets"][str(b)])
-            for b in buckets
-            if str(b) in meta["buckets"]
-        ]
-        schema = self._row_schema(extra_cols)
-        df = self._read_bucket_tree(paths, schema)
-        if df is None:
-            return self.spark.createDataFrame([], schema)
-        return df.withColumn(BUCKET_COL, bucket_expr(self.n_buckets))
-
     def _read_bucket_tree(self, paths: list[str], schema: T.StructType):
         """Bucket dirs (possibly spanning several snapshots) -> one
         DataFrame under the manifest's row schema. Bucket dirs are
@@ -898,7 +888,7 @@ class ParquetLake:
 
     def _read_flat_delta(self, dp: str, extra_cols: list[str],
                          route: str | None = None) -> DataFrame:
-        """A flat delta root (minor-fold output, or a merge() MoR batch):
+        """A flat delta root (a minor fold's output):
         (bucket, route)-partitioned like the base, read under the
         manifest's row schema with the bucket column dropped."""
         flat = self.spark.read.schema(self._row_schema(extra_cols)).parquet(dp)
@@ -929,341 +919,6 @@ class ParquetLake:
                 raise  # rows WERE written; the failure is something else
             return defaults
 
-    def merge(
-        self,
-        changes: DataFrame,
-        batch_id,
-        input_persisted: bool = False,
-        side_summary: DataFrame | None = None,
-    ) -> dict:
-        """Idempotent MERGE of one batch of change rows (columns KEY_COLS +
-        order.CARRY_COLS). The batch may contain MULTIPLE rows per key —
-        the merge aggregation's per-key max_by over union(target, batch)
-        resolves last-writer-wins inline (max is associative), so callers
-        need not pre-deduplicate. Returns commit stats.
-
-        input_persisted=True: the caller already holds `changes` (or its
-        lineage) resident; skip the internal persist. The merge runs two
-        actions over the batch (bucket/extras summary collect + the COW
-        rewrite), so unpersisted input would pay its compute twice.
-
-        side_summary: optional small aggregate DataFrame (e.g. per-partition
-        lineage) to ride along in the merge's summary job — one Spark job
-        instead of two; its rows come back in stats["side_rows"]. Streaming
-        uses this so a micro-batch costs exactly TWO jobs (summary+lineage
-        collect, then the COW write).
-        """
-        from pyspark import StorageLevel
-
-        meta = self.current_meta() or self._empty_meta()
-        if self._batch_applied(meta, batch_id):
-            return {"status": "skipped_duplicate_batch", "batch_id": batch_id}
-
-        src = changes.withColumn(BUCKET_COL, bucket_expr(self.n_buckets))
-        if input_persisted:
-            return self._merge_impl(src, batch_id, meta, side_summary)
-        src = src.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            return self._merge_impl(src, batch_id, meta, side_summary)
-        finally:
-            src.unpersist()
-
-    def _merge_impl(
-        self, src: DataFrame, batch_id, meta: dict, side_summary: DataFrame | None = None
-    ) -> dict:
-        t0 = time.monotonic()
-        # One scalable pass: touched buckets + observed open-world keys
-        # (explode multiplies by ~#extras per row; hash-agg partial-combines
-        # down to <= n_buckets * n_keys rows before the collect). An optional
-        # caller aggregate (lineage) is unioned in so it shares the job.
-        summary_df = (
-            src.select(
-                BUCKET_COL, F.col(ROUTE_COL),
-                F.explode_outer(F.map_keys("extras")).alias("_k"),
-            )
-            .groupBy(BUCKET_COL, ROUTE_COL, "_k")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .withColumn("_side", F.lit("merge"))
-        )
-        if side_summary is not None:
-            summary_df = summary_df.unionByName(
-                side_summary.withColumn("_side", F.lit("side")),
-                allowMissingColumns=True,
-            )
-        rows = summary_df.collect()
-        summary = [r for r in rows if r["_side"] == "merge"]
-        side_rows = [r for r in rows if r["_side"] == "side"]
-        t_summary = time.monotonic() - t0
-        touched = sorted({r[BUCKET_COL] for r in summary})
-        batch_pairs = {(r[BUCKET_COL], r[ROUTE_COL]) for r in summary}
-        observed_keys = sorted(
-            {r["_k"] for r in summary if r["_k"] is not None}
-            - RESERVED_COLS
-        )
-        if not touched:
-            committed = self._commit_with_rebase(
-                meta, lambda m: None if self._batch_applied(m, batch_id)
-                else dict(self._with_batch(m, batch_id),
-                          id=m["id"] + 1, parent=m["id"]))
-            status = ("empty_batch" if committed is not None
-                      else "skipped_duplicate_batch")
-            return {"status": status, "batch_id": batch_id,
-                    "side_rows": side_rows}
-
-        # Additive schema evolution: union of stored and observed columns.
-        extra_cols = list(meta["extra_columns"])
-        for k in observed_keys:
-            if k not in extra_cols:
-                extra_cols.append(k)
-
-        src_flat = src.select(
-            *KEY_COLS,
-            *[F.col(c) for c in DOMAIN_COLS if c not in KEY_COLS],
-            F.col(ROUTE_COL),
-            *[F.element_at(F.col("extras"), k).alias(k) for k in extra_cols],
-            F.col(LSN_COL),
-            F.col(TX_COL),
-            F.col(TS_COL),
-            F.col(OFFSET_COL),
-            (F.col("effective_op") == "d").alias(DELETED_COL),
-            F.col(BUCKET_COL),
-        )
-        # Deleted rows keep the key + lsn only (tombstone): null out payload
-        # so a tombstone never leaks stale content.
-        payload_cols = [c for c in DOMAIN_COLS if c not in KEY_COLS] + extra_cols
-        for c in payload_cols:
-            src_flat = src_flat.withColumn(
-                c, F.when(F.col(DELETED_COL), F.lit(None).cast("string")).otherwise(F.col(c))
-            )
-        # minhash_bands: signatures are NOT computed here — the post-LWW
-        # fill (fill_band_columns, applied after every resolve) signs only
-        # the rows that win, so losing versions never pay the shingle cost.
-
-        stats = {
-            "status": "committed",
-            "batch_id": batch_id,
-            "touched_buckets": len(touched),
-            "new_columns": [k for k in observed_keys if k not in meta["extra_columns"]],
-            "summary_sec": round(t_summary, 3),
-            "side_rows": side_rows,
-        }
-        if self.mode == "mor":
-            new_meta = self._merge_mor(
-                src_flat, touched, batch_pairs, extra_cols, meta, batch_id, stats
-            )
-        else:
-            new_meta = self._merge_cow(
-                src_flat, touched, batch_pairs, extra_cols, meta, batch_id, stats
-            )
-        stats["snapshot"] = new_meta["id"]
-        return stats
-
-    def _merge_cow(
-        self, src_flat: DataFrame, touched, batch_pairs, extra_cols,
-        # batch_pairs is CONSUMED only by the MoR path (write-layout
-        # repartition); it rides here for the shared dispatch signature
-        meta: dict, batch_id, stats: dict,
-    ) -> dict:
-        """Union touched base buckets with the batch, resolve LWW, rewrite
-        those buckets."""
-        for _ in range(3):
-            if not meta.get("deltas"):
-                break
-            # COW over a table with pending MoR deltas: fold them into the
-            # base first so the bucket rewrite below sees every version.
-            # _compact may abort under a concurrent-writer conflict and
-            # return the fresh manifest (possibly with NEW deltas) — retry
-            # the fold on that; COW correctness requires a delta-free base.
-            meta = self._compact(meta, full=self.full_major)
-        if meta.get("deltas"):
-            raise RuntimeError(
-                "COW merge could not clear the delta backlog: concurrent "
-                "writers keep advancing the table (COW mode expects a "
-                "single writer; use mode='mor' for concurrent ingest)"
-            )
-
-        tgt = self._read_buckets(meta, touched, extra_cols)
-        tgt = tgt.unionByName(src_flat, allowMissingColumns=True)
-        # Single-exchange merge (resolve_lww_clustered): hash straight to
-        # ~one partition per touched bucket; the LWW aggregation and the
-        # dynamic-partition write below share that stage, so each leaf dir
-        # is written by exactly the task that owns its bucket (no second
-        # exchange, no AQE-coalesced fat writers fanning out to all
-        # leaves, and no partial-agg pass — base rows are one-per-key, so
-        # map-side combining never reduces anything here).
-        merged = resolve_lww_clustered(tgt, max(len(touched), 1))
-        if self.minhash_bands:
-            # post-LWW signing: only unsigned winners (new versions that
-            # beat their base row) pay the shingle cost — same stage as
-            # the write, no extra exchange
-            merged = fill_band_columns(merged)
-
-        data_rel = self._new_data_rel("s", meta)
-        out_dir = os.path.join(self.table_dir, data_rel)
-
-        # The rewritten buckets and their route lists ride the rewrite's
-        # own job (Observation): the distinct (bucket, route) pair set is
-        # O(touched x routes) — tiny — where the previous post-write
-        # os.listdir + per-bucket walk was O(rewritten files) on the
-        # driver.
-        from pyspark.sql import Observation
-
-        obs = Observation(f"merge_cow_{batch_id}")
-        merged = merged.observe(
-            obs,
-            F.collect_set(
-                F.struct(
-                    F.col(BUCKET_COL).cast("string").alias("b"),
-                    F.col(ROUTE_COL).alias("r"),
-                )
-            ).alias("pairs"),
-        )
-
-        t0 = time.monotonic()
-        merged.write.partitionBy(BUCKET_COL, ROUTE_COL).mode("overwrite").parquet(out_dir)
-        stats["write_sec"] = round(time.monotonic() - t0, 3)
-        pairs = self._obs_get(obs, out_dir, pairs=[])["pairs"] or []
-
-        written = {int(p["b"]) for p in pairs}
-        routes_by_bucket: dict[str, set] = {}
-        for p in pairs:
-            if p["r"] is not None:
-                routes_by_bucket.setdefault(p["b"], set()).add(p["r"])
-
-        def build(m: dict) -> dict | None:
-            if self._batch_applied(m, batch_id):
-                return None  # a concurrent writer applied this batch
-            self._check_writer_modulus(m)
-            # The rewrite read meta's touched buckets and assumed a
-            # delta-free table; a concurrent commit that repointed any of
-            # them (or appended deltas) invalidates the output. Only
-            # metadata-neutral concurrent commits (empty batches) can be
-            # rebased over — COW is the single-writer batch mode.
-            if [d["path"] if isinstance(d, dict) else d
-                    for d in m.get("deltas", [])] != \
-               [d["path"] if isinstance(d, dict) else d
-                    for d in meta.get("deltas", [])] or any(
-                    m["buckets"].get(str(b)) != meta["buckets"].get(str(b))
-                    for b in touched):
-                raise RuntimeError(
-                    "COW merge conflicts with a concurrent data commit "
-                    "(COW mode expects a single writer; use mode='mor' "
-                    "for concurrent ingest + decoupled compaction)"
-                )
-            new_buckets = dict(m["buckets"])
-            bucket_routes = dict(m.get("bucket_routes", {}))
-            for b in touched:
-                if b in written:
-                    new_buckets[str(b)] = os.path.join(
-                        data_rel, f"{BUCKET_COL}={b}"
-                    )
-                    bucket_routes[str(b)] = sorted(
-                        routes_by_bucket.get(str(b), set())
-                    )
-                else:
-                    new_buckets.pop(str(b), None)
-                    bucket_routes.pop(str(b), None)
-            cols = list(m["extra_columns"])
-            cols += [c for c in extra_cols if c not in cols]
-            return {
-                "id": m["id"] + 1,
-                "parent": m["id"],
-                "n_buckets": self.n_buckets,
-                "minhash_bands": self.minhash_bands,
-                "extra_columns": cols,
-                "buckets": new_buckets,
-                "bucket_routes": bucket_routes,
-                "deltas": m.get("deltas", []),
-                **{k: v for k, v in self._with_batch(m, batch_id).items()
-                   if k in ("batch_wm", "recent_batch_ids")},
-            }
-
-        new_meta = self._commit_with_rebase(meta, build)
-        if new_meta is None:  # duplicate batch won the race: drop our write
-            shutil.rmtree(out_dir, ignore_errors=True)
-            stats["status"] = "skipped_duplicate_batch"
-            return self.current_meta()
-        # COW is the one commit path that never reaches a compaction, so
-        # it must run its own retention: every merge rewrites bucket dirs
-        # and commits a snapshot, and without this a long-running COW
-        # table accumulates manifests AND superseded bucket generations
-        # without bound (the expire docstring's "bounds disk growth of
-        # the long-running tail job" was only true for MoR).
-        self.expire_snapshots(keep_last=self.snapshot_retention)
-        return new_meta
-
-    def _merge_mor(
-        self, src_flat: DataFrame, touched, batch_pairs, extra_cols,
-        meta: dict, batch_id, stats: dict,
-    ) -> dict:
-        """Append the batch as bucket-partitioned delta files — O(batch),
-        no table read, no sort. LWW resolves at read/compaction; compaction
-        (the COW aggregation over base + all deltas) runs every
-        `compact_every` batches to bound read amplification."""
-        from pyspark.sql import Observation
-
-        data_rel = self._new_data_rel("d", meta)
-        out_dir = os.path.join(self.table_dir, data_rel)
-
-        # Route list for manifest-level tenant pruning rides the delta
-        # write itself (no post-write directory walk).
-        obs = Observation(f"merge_mor_{batch_id}")
-        src_flat = src_flat.observe(
-            obs, F.collect_set(F.col(ROUTE_COL)).alias("routes")
-        )
-
-        t0 = time.monotonic()
-        # one task per (bucket, route) leaf the batch actually touches
-        src_flat.repartition(
-            max(len(batch_pairs), 1), F.col(BUCKET_COL), F.col(ROUTE_COL)
-        ).write.partitionBy(BUCKET_COL, ROUTE_COL).mode("overwrite").parquet(out_dir)
-        stats["write_sec"] = round(time.monotonic() - t0, 3)
-
-        delta_entry = {
-            "path": data_rel, "format": "flat",
-            "routes": sorted(
-                self._obs_get(obs, out_dir, routes=[])["routes"] or []
-            ),
-            "buckets": sorted(int(b) for b in touched),
-            "bytes": self._tree_bytes(out_dir),
-        }
-
-        def build(m: dict) -> dict | None:
-            if self._batch_applied(m, batch_id):
-                return None  # a concurrent writer applied this batch
-            self._check_writer_modulus(m)
-            cols = list(m["extra_columns"])
-            cols += [c for c in extra_cols if c not in cols]
-            return {
-                "id": m["id"] + 1,
-                "parent": m["id"],
-                "n_buckets": self.n_buckets,
-                "minhash_bands": self.minhash_bands,
-                "extra_columns": cols,
-                "buckets": dict(m["buckets"]),
-                "bucket_routes": dict(m.get("bucket_routes", {})),
-                "minor_count": m.get("minor_count", 0),
-                "deltas": m.get("deltas", []) + [delta_entry],
-                **{k: v for k, v in self._with_batch(m, batch_id).items()
-                   if k in ("batch_wm", "recent_batch_ids")},
-            }
-
-        # batch durable before compaction; a delta append rebases over ANY
-        # concurrent commit (compaction folds consume only deltas already
-        # in the manifest they read, never this not-yet-committed one)
-        new_meta = self._commit_with_rebase(meta, build)
-        if new_meta is None:
-            shutil.rmtree(out_dir, ignore_errors=True)
-            stats["status"] = "skipped_duplicate_batch"
-            return self.current_meta()
-
-        if (self.compact_every is not None
-                and self._raw_delta_count(new_meta) >= self.compact_every):
-            t0 = time.monotonic()
-            new_meta = self._maybe_compact(new_meta)
-            stats["compact_sec"] = round(time.monotonic() - t0, 3)
-        return new_meta
-
     def merge_parsed(self, parsed: DataFrame, batch_id) -> dict:
         """ONE-JOB, ZERO-SHUFFLE merge-on-read ingest of a full parsed
         micro-batch (the streaming hot path): the parsed rows — ALL
@@ -1275,8 +930,8 @@ class ParquetLake:
         with no exchange at all. (The previous design shuffled the batch
         onto the bucket before writing — but nothing ever consumes deltas
         per bucket: read and compaction scan them whole, and only the
-        compacted BASE needs bucket separation for COW rewrites. Dropping
-        that shuffle measured 2.2x on a 2M-event batch; the earlier
+        compacted BASE needs bucket separation. Dropping that shuffle
+        measured 2.2x on a 2M-event batch; the earlier
         summary-collect job, which re-paid the entire JSON parse, was
         another 2x. File count per delta = O(source tasks x statuses),
         bounded by compact_every.)
@@ -1289,11 +944,10 @@ class ParquetLake:
         assignment, and LWW tombstone-nulling move to read/compaction
         time, where the manifest already knows every observed column.
 
-        Requires mode='mor'. Idempotent per batch_id like merge()."""
+        Idempotent per batch_id: a batch id already in the manifest's
+        applied-batch log is skipped."""
         from pyspark.sql import Observation
 
-        if self.mode != "mor":
-            raise ValueError("merge_parsed requires mode='mor'")
         t_enter = time.monotonic()
         meta = self.current_meta() or self._empty_meta()
         if self._batch_applied(meta, batch_id):
@@ -1618,8 +1272,7 @@ class ParquetLake:
         drop the delta list. SUBSET major (the default): only the base
         buckets the deltas actually touch — recorded per delta at commit
         time, no re-scan — are read and rewritten; untouched buckets are
-        carried forward by manifest reference, exactly as _merge_cow
-        already carries untouched buckets. LWW associativity makes the
+        carried forward by manifest reference. LWW associativity makes the
         subset fold exact: an untouched bucket has NO delta versions, so
         max over (that bucket ∪ ∅) is the bucket unchanged. This makes
         the recurring major cost O(touched base + backlog), not O(table)
@@ -2004,7 +1657,7 @@ class ParquetLake:
         the NEW bucket modulus, flipping the manifest's n_buckets in the
         same atomic commit. A creation-time bucket count is the one
         layout decision that goes stale as a lake grows 1000x: at 10^10
-        events, 64 buckets means ~1.5 TB per bucket — every COW rewrite,
+        events, 64 buckets means ~1.5 TB per bucket — every bucket rewrite,
         subset fold, and point lookup degrades with it. rebucket() is the
         planned full-table maintenance op (run rarely, from the
         decoupled maintenance process) that resets that decision without
@@ -2182,7 +1835,7 @@ class ParquetLake:
     ):
         """(base, delta) DataFrames, either possibly None, both normalized
         to the full row schema. Base rows are UNIQUE per key (every base
-        writer — COW merge and compaction — is a resolve_lww output);
+        writer — major fold and rebucket — is a resolve_lww output);
         deltas hold multi-version rows. Base bucket paths are bucket dirs
         (route-partitioned roots) while delta paths are their own
         partitioned ROOTS, so they are read separately (mixing both in one
@@ -2231,21 +1884,6 @@ class ParquetLake:
                 delta = delta.unionByName(p, allowMissingColumns=True)
             delta = self._normalize_rows(delta, extra_cols)
         return base, delta
-
-    def _read_all(
-        self, meta: dict, extra_cols: list[str], route: str | None = None
-    ) -> DataFrame:
-        """All row versions (base + deltas) as one DataFrame."""
-        base, delta = self._read_split(meta, extra_cols, route=route)
-        if base is None and delta is None:
-            return self.spark.createDataFrame(
-                [], self._row_schema(extra_cols)
-            ).drop(BUCKET_COL)
-        if base is None:
-            return delta
-        if delta is None:
-            return base
-        return base.unionByName(delta, allowMissingColumns=True)
 
     def _tree_bytes(self, path: str) -> int:
         """Total file bytes under a path via the Hadoop FileSystem's
@@ -2700,11 +2338,17 @@ class ParquetLake:
         fold can merge deltas that predate the range start); an
         empty-batch commit changes nothing. The union of the returned
         entries' files therefore holds exactly the row versions written
-        in the range, each once."""
+        in the range, each once.
+
+        A commit that repoints base buckets without consuming a delta or
+        changing the modulus is a copy-on-write data commit (older lakes
+        may hold them): its rows never reached a delta, so the range is
+        refused rather than read short."""
         prev = {
             d["path"] if isinstance(d, dict) else d
             for d in (from_meta or {}).get("deltas", [])
         }
+        prev_meta = from_meta or {}
         entries: list[dict] = []
         for m in chain:
             deltas = [
@@ -2714,11 +2358,22 @@ class ParquetLake:
             cur = {d["path"] for d in deltas}
             removed = prev - cur
             if not removed:
+                modulus = m.get("n_buckets")
+                if (m.get("buckets", {}) != prev_meta.get("buckets", {})
+                        and prev_meta.get("n_buckets", modulus) == modulus):
+                    raise ValueError(
+                        f"snapshot {m['id']} rewrote base buckets without "
+                        "consuming a delta (a copy-on-write commit): it "
+                        "left no per-commit delta trail to read changes "
+                        "from — resync from a fresh bootstrap, or read "
+                        "changes from that commit onward"
+                    )
                 entries.extend(
                     d for d in deltas
                     if d["path"] not in prev and not d.get("merged")
                 )
             prev = cur
+            prev_meta = m
         return entries
 
     def read_changes(
@@ -2773,18 +2428,7 @@ class ParquetLake:
         contribute nothing) + O(changed-bucket subset of the FROM
         snapshot) to classify against prior state, pruned by the same
         manifest bucket lists as every other subset read. Small ranges
-        broadcast; large ranges fall back to a shuffle join.
-
-        Requires mode='mor' (data commits must appear in the delta log;
-        a COW data commit rewrites buckets in place and leaves no
-        per-commit row trail — Iceberg's incremental read has the same
-        append/delta-only restriction)."""
-        if self.mode != "mor":
-            raise ValueError(
-                "read_changes requires mode='mor': COW data commits "
-                "rewrite buckets in place and leave no per-commit delta "
-                "trail to extract changes from"
-            )
+        broadcast; large ranges fall back to a shuffle join."""
         cur = self.current_meta()
         if to_snapshot_id is None:
             if cur is None:

@@ -1,17 +1,18 @@
 """Pipeline drivers: batch replay and checkpointed Structured Streaming.
 
 The streaming job is the Spark re-expression of the reference's consumer
-loop (SURVEY.md section 3.1 stage 6): source -> parse -> LWW -> MERGE,
-with the offset commit happening AFTER the sink write (the reference's
-sink-then-commit contract, sync.go:117-119, maps to Structured Streaming
-committing the epoch to the checkpoint after foreachBatch returns).
+loop (SURVEY.md section 3.1 stage 6): source -> parse -> delta append,
+with LWW resolved at read and fold time, and the offset commit happening
+AFTER the sink write (the reference's sink-then-commit contract,
+sync.go:117-119, maps to Structured Streaming committing the epoch to the
+checkpoint after foreachBatch returns).
 
 The source here is a file stream over the Kafka-shaped parquet log; a real
 deployment swaps ONE line for format("kafka") — every downstream column is
 already Kafka's (key/value/topic/partition/offset).
 
 Exactly-once: checkpointed source offsets give each micro-batch a stable
-batch_id; ParquetLake.merge() records applied batch ids and skips
+batch_id; ParquetLake.merge_parsed() records applied batch ids and skips
 duplicates, so a crash between sink commit and checkpoint commit replays
 the epoch as a no-op (SURVEY.md T1).
 """
@@ -20,8 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .metrics import MetricsWriter, Stopwatch
-from .order import lww
+from .metrics import MetricsWriter, Stopwatch, delta_lineage
 from .parse import parse_envelopes
 from .sink import ParquetLake
 from .sources import file_batch, file_stream
@@ -32,83 +32,36 @@ def process_batch(
     batch_id,
     lake: ParquetLake,
     metrics: MetricsWriter | None = None,
-    lww_method: str = "fused",
     route_from_fields: bool = False,
 ) -> dict:
-    """parse -> LWW -> MERGE for one micro-batch; lineage written per batch.
+    """parse -> delta append for one micro-batch; lineage written per batch.
 
-    Hot path (mor + fused, the streaming default): ONE Spark job. The
-    parsed batch — all statuses — streams straight into the bucketed
-    delta write (ParquetLake.merge_parsed); commit metadata (counts,
-    observed open-world keys) is collected during that write via the
-    Observation API, and per-(topic, partition) lineage is derived from
-    the just-written delta by a small column-pruned job only when metrics
-    are enabled. The previous design paid a separate summary job that
-    re-ran the entire per-row JSON parse (persisted), which measured 2x
-    the end-to-end batch wall on a 2M-event batch.
-
-    lww_method='fused' resolves LWW *inside* the MERGE read/compaction:
-    the per-key max_by aggregation picks the same winner whether or not
-    the batch was pre-deduplicated (max is associative), so a separate
-    LWW shuffle of the whole batch is pure overhead. 'aggregate'/'window'
-    keep the explicit pre-dedup stage (parity tests, plan comparison) and
-    use the two-job merge() path, as does COW mode (whose merge must read
-    the touched base buckets before writing anyway).
+    ONE Spark job: the parsed batch — all statuses — streams straight
+    into the lake's delta write (ParquetLake.merge_parsed); commit
+    metadata (counts, observed open-world keys) is collected during that
+    write via the Observation API, and per-(topic, partition) lineage is
+    derived from the just-written delta by a small column-pruned job only
+    when metrics are enabled. LWW is not a separate stage: the per-key
+    max_by of the lake's read and folds picks the same winner whether or
+    not the batch was pre-deduplicated (max is associative), so a
+    separate LWW shuffle of the whole batch would be pure overhead.
     """
-    from pyspark import StorageLevel
-    from pyspark.sql import functions as F
+    parsed = parse_envelopes(batch_df, route_from_fields=route_from_fields)
+    with Stopwatch() as sw:
+        stats = lake.merge_parsed(parsed, batch_id)
+    if metrics and metrics.metrics_dir:
+        if stats.get("delta_dir"):
+            # sync by default; a MetricsWriter(async_lineage=True)
+            # overlaps this small job with the next batch's ingest
+            def _lineage(dd=stats["delta_dir"], bid=batch_id, w=sw.wall_ms):
+                rows = delta_lineage(lake.spark, dd, bid).collect()
+                metrics.write_rows(rows, bid, wall_ms=w)
 
-    from .metrics import batch_lineage, delta_lineage
-    from .order import CARRY_COLS
-    from .schemas import KEY_COLS
-
-    want_lineage = bool(metrics and metrics.metrics_dir)
-
-    if lake.mode == "mor" and lww_method == "fused":
-        parsed = parse_envelopes(batch_df, route_from_fields=route_from_fields)
-        with Stopwatch() as sw:
-            stats = lake.merge_parsed(parsed, batch_id)
-        if want_lineage:
-            if stats.get("delta_dir"):
-                # sync by default; a MetricsWriter(async_lineage=True)
-                # overlaps this small job with the next batch's ingest
-                def _lineage(dd=stats["delta_dir"], bid=batch_id, w=sw.wall_ms):
-                    rows = delta_lineage(lake.spark, dd, bid).collect()
-                    metrics.write_rows(rows, bid, wall_ms=w)
-
-                metrics.submit(_lineage)
-            else:
-                # duplicate/empty epoch: zero-count continuity row so
-                # downstream per-batch consumers see every batch_id
-                metrics.write_empty_row(batch_id, stats["status"], wall_ms=sw.wall_ms)
-        return stats
-
-    parsed = parse_envelopes(
-        batch_df, route_from_fields=route_from_fields
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        # Lineage rides along in the merge's summary job (side_summary) and
-        # is written driver-side afterwards — a micro-batch costs exactly
-        # TWO Spark jobs: (summary+lineage collect) and (COW agg+write).
-        side = batch_lineage(parsed, batch_id) if want_lineage else None
-        with Stopwatch() as sw:
-            if lww_method == "fused":
-                src = parsed.filter(F.col("status") == "ok").select(
-                    *KEY_COLS, *CARRY_COLS
-                )
-                stats = lake.merge(src, batch_id, input_persisted=True, side_summary=side)
-            else:
-                deduped = lww(parsed, method=lww_method)
-                stats = lake.merge(deduped, batch_id, side_summary=side)
-        if metrics:
-            if stats.get("side_rows"):
-                metrics.write_rows(stats.get("side_rows"), batch_id, wall_ms=sw.wall_ms)
-            elif want_lineage and stats.get("status") in (
-                "skipped_duplicate_batch", "empty_batch",
-            ):
-                metrics.write_empty_row(batch_id, stats["status"], wall_ms=sw.wall_ms)
-    finally:
-        parsed.unpersist()
+            metrics.submit(_lineage)
+        else:
+            # duplicate/empty epoch: zero-count continuity row so
+            # downstream per-batch consumers see every batch_id
+            metrics.write_empty_row(batch_id, stats["status"], wall_ms=sw.wall_ms)
     return stats
 
 
@@ -118,13 +71,12 @@ def replay_batch(
     lake: ParquetLake,
     metrics_dir: str | None = None,
     batch_id=0,
-    lww_method: str = "fused",
     route_from_fields: bool = False,
 ) -> dict:
     """One-shot batch replay of a whole event log (bench + tests)."""
     raw = file_batch(spark, log_dir)
     return process_batch(
-        raw, batch_id, lake, MetricsWriter(metrics_dir), lww_method,
+        raw, batch_id, lake, MetricsWriter(metrics_dir),
         route_from_fields=route_from_fields,
     )
 
@@ -134,7 +86,6 @@ def run_stream(
     lake: ParquetLake,
     checkpoint_dir: str,
     metrics_dir: str | None = None,
-    lww_method: str = "fused",
     available_now: bool = True,
     route_from_fields: bool = False,
 ):
@@ -150,7 +101,7 @@ def run_stream(
     )
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        process_batch(batch_df, batch_id, lake, metrics, lww_method,
+        process_batch(batch_df, batch_id, lake, metrics,
                       route_from_fields=route_from_fields)
 
     writer = raw.writeStream.foreachBatch(handle).option(
@@ -168,7 +119,6 @@ def replay_stream(
     checkpoint_dir: str,
     metrics_dir: str | None = None,
     max_files_per_trigger: int | None = None,
-    lww_method: str = "fused",
     route_from_fields: bool = False,
     available_now: bool = True,
 ):
@@ -178,6 +128,6 @@ def replay_stream(
     file streams discover newly landed log files, the continuous
     deployment shape (jobs/replay.py --continuous)."""
     raw = file_stream(spark, log_dir, max_files_per_trigger)
-    return run_stream(raw, lake, checkpoint_dir, metrics_dir, lww_method,
+    return run_stream(raw, lake, checkpoint_dir, metrics_dir,
                       route_from_fields=route_from_fields,
                       available_now=available_now)

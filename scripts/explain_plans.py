@@ -93,9 +93,8 @@ def main() -> int:
         must_not=["BatchEvalPython", "SortAggregate", "Window", "Exchange"],
     )
 
-    # 3. fused LWW + MERGE aggregation (COW merge / MoR read+compaction —
-    # the one-key-shuffle claim)
-    lake = ParquetLake(spark, os.path.join(work, "lake"), n_buckets=16)
+    # 3. fused LWW + MERGE aggregation (the per-key max_by the lake's read
+    # and folds resolve LWW with — the one-key-shuffle claim)
     src = (
         parsed.filter(F.col("status") == "ok")
         .select(*KEY_COLS, *CARRY_COLS)
@@ -137,8 +136,11 @@ def main() -> int:
         f"(found {n_exchanges})"
     )
 
-    # 4. filter pushdown + column pruning on the lake read path
-    final = lake_read_plan_df(spark, lake, parsed, src)
+    # 4. filter pushdown + column pruning on the lake read path (a lake
+    # folded into its base after the batch: the plan is the base scan)
+    lake = ParquetLake(spark, os.path.join(work, "lake"), n_buckets=16,
+                       compact_every=1, major_every=1)
+    final = lake_read_plan_df(lake, parsed)
     check(
         "lake point-lookup (pushdown + pruning)",
         formatted(final),
@@ -452,7 +454,7 @@ def main() -> int:
     # two filtered branches would duplicate the whole range-scan + join
     # subtree (Catalyst shares no subplans across union branches), so the
     # audit pins: explode present, NO Union, and the same number of
-    # parquet scans as the stable-mode plan.
+    # parquet scans as the route-stable plan.
     mor3_mig = ParquetLake(
         spark, os.path.join(work, "mor3"), n_buckets=16, mode="mor",
         compact_every=100, route_stable_keys=False,
@@ -469,14 +471,14 @@ def main() -> int:
     n_scans_mig = mig_plan.count("Scan parquet")
     ok_scans = n_scans_mig == n_scans_stable
     sections[-1][2].append(
-        f"{'OK ' if ok_scans else 'FAIL'} scan count matches stable-mode "
+        f"{'OK ' if ok_scans else 'FAIL'} scan count matches route-stable "
         f"plan ({n_scans_mig} vs {n_scans_stable}) — no duplicated "
         "range-scan subtree"
     )
     if not ok_scans:
         failures.append(
             "migrating-mode read_changes duplicates parquet scans vs "
-            "stable mode"
+            "the route-stable feed"
         )
 
     # 5. representative suite queries
@@ -525,11 +527,11 @@ def main() -> int:
     return 1 if failures else 0
 
 
-def lake_read_plan_df(spark, lake, parsed, src):
+def lake_read_plan_df(lake, parsed):
     """Materialize a tiny lake then build the Q13-style point lookup."""
     from pyspark.sql import functions as F
 
-    lake.merge(src, 0, input_persisted=False)
+    lake.merge_parsed(parsed, 0)
     return (
         lake.read()
         .filter((F.col("repo") == "org1/proj") & F.col("path").startswith("src/"))

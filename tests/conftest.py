@@ -24,3 +24,14 @@ def tmp_table(tmp_path):
 
 def rows_by_key(df):
     return {(r["repo"], r["path"]): r.asDict() for r in df.collect()}
+
+
+def assert_state_equal(engine_rows: dict, oracle_state: dict):
+    """Every column read() returns equals the oracle's row (a column the
+    oracle row lacks must read null), and the key sets match."""
+    assert set(engine_rows) == set(oracle_state)
+    for k, exp in oracle_state.items():
+        got = engine_rows[k]
+        all_cols = set(exp) | {c for c, v in got.items() if v is not None}
+        for c in all_cols:
+            assert got.get(c) == exp.get(c), (k, c, got.get(c), exp.get(c))

@@ -229,9 +229,13 @@ def test_empty_range_and_validation(spark, tmp_path):
     assert CHANGE_TYPE_COL in lake.read_changes(b, b).columns
     with pytest.raises(ValueError, match="newer than"):
         lake.read_changes(b, 0)
-    cow = ParquetLake(spark, str(tmp_path / "cow"), n_buckets=4, mode="cow")
-    with pytest.raises(ValueError, match="mor"):
-        cow.read_changes(0)
+    # a copy-on-write data commit (repoints a base bucket, consumes no
+    # delta) left no delta trail: the range is refused, not read short
+    meta = lake.current_meta()
+    lake._commit_snapshot(dict(meta, id=b + 1, parent=b,
+                               buckets={"0": "data/s-cow/__bucket=0"}))
+    with pytest.raises(ValueError, match="copy-on-write"):
+        lake.read_changes(b, b + 1)
 
 
 def test_expired_intermediate_snapshot_raises(spark, tmp_path):

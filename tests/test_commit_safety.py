@@ -6,7 +6,9 @@ and retention vs pins:
   lock (ownership-checked release);
 * two writers that both reach the critical section (only possible after
   a stale break) must produce a LOUD CommitConflict, never a silently
-  lost commit (O_EXCL snapshot-file create);
+  lost commit (exclusive link of a fully written snapshot file);
+* a concurrent reader must never see a snapshot file that exists but is
+  not yet written;
 * a lost pointer-swap race or a crash between snap write and pointer
   swap must self-heal on read (forward-scan in current_meta);
 * expire_snapshots must read the pinned refs under the commit lock so a
@@ -113,6 +115,47 @@ def test_double_commit_of_same_id_is_a_loud_conflict(spark, tmp_path):
     # conflict
     lake._commit_snapshot_unlocked(a)
     assert lake.current_meta()["id"] == 2
+
+
+def test_reader_never_sees_a_partial_snapshot(spark, tmp_path):
+    """current_meta's forward scan adopts snap-K as soon as it exists, so
+    a commit must publish the file whole: readers polling during a run
+    of commits must always parse a manifest (creating the file in place
+    exposed it empty between create and write)."""
+    import sys
+    import threading
+
+    lake = _lake(spark, tmp_path)
+    readers = [_lake(spark, tmp_path) for _ in range(6)]
+    errors: list[str] = []
+    stop = threading.Event()
+
+    def poll(reader):
+        while not stop.is_set():
+            try:
+                reader.current_meta()
+            except ValueError as e:  # json.JSONDecodeError
+                errors.append(repr(e))
+                stop.set()
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    threads = [threading.Thread(target=poll, args=(r,)) for r in readers]
+    try:
+        for t in threads:
+            t.start()
+        for i in range(1, 301):
+            if stop.is_set():
+                break
+            lake._commit_snapshot(_meta(lake, i))
+    finally:
+        stop.set()
+        for t in threads:
+            t.join(timeout=10)
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert lake.current_meta()["id"] == 300
 
 
 def test_crash_between_snap_write_and_pointer_swap_self_heals(spark, tmp_path):

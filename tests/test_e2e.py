@@ -8,23 +8,15 @@ from __future__ import annotations
 
 import hashlib
 
+from conftest import assert_state_equal
 from pyspark.sql import functions as F
 
 from pyspark_cdc import generate, oracle
 from pyspark_cdc.order import lww_aggregate
 from pyspark_cdc.parse import parse_envelopes
 from pyspark_cdc.sink import ParquetLake
-from pyspark_cdc.stream import replay_batch
+from pyspark_cdc.stream import process_batch, replay_batch
 from pyspark_cdc.udfs import extract_doc_json, sha256_udf
-
-
-def _assert_state_equal(engine_rows: dict, oracle_state: dict):
-    assert set(engine_rows) == set(oracle_state)
-    for k, exp in oracle_state.items():
-        got = engine_rows[k]
-        all_cols = set(exp) | {c for c, v in got.items() if v is not None}
-        for c in all_cols:
-            assert got.get(c) == exp.get(c), (k, c, got.get(c), exp.get(c))
 
 
 def test_replay_matches_oracle_with_sha256(spark, tmp_path):
@@ -38,7 +30,7 @@ def test_replay_matches_oracle_with_sha256(spark, tmp_path):
     engine = {(r["repo"], r["path"]): r.asDict() for r in final.collect()}
 
     o = oracle.replay_parquet_log(log_dir)
-    _assert_state_equal(
+    assert_state_equal(
         {k: {c: v for c, v in r.items() if c != "content_sha"} for k, r in engine.items()},
         o["state"],
     )
@@ -59,12 +51,11 @@ def test_every_edge_case_key_lands_correctly(spark, tmp_path):
     """Edge-case-only log: the 16 FIXTURES.md F3 scenarios end to end."""
     log = generate.edge_case_df(spark)
     lake = ParquetLake(spark, str(tmp_path / "edge_lake"), n_buckets=8)
-    deduped = lww_aggregate(parse_envelopes(log))
-    lake.merge(deduped, 0)
+    process_batch(log, 0, lake)
     rows = {(r["repo"], r["path"]): r.asDict() for r in lake.read().collect()}
 
     exp = oracle.replay(generate.edge_case_events())["state"]
-    _assert_state_equal(rows, exp)
+    assert_state_equal(rows, exp)
 
     # spot-check the trickiest semantics explicitly
     assert rows[("edge/r1", "a.py")]["content"].endswith("v3")  # LWW

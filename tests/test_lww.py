@@ -1,12 +1,13 @@
-"""J1 last-writer-wins: aggregate (max_by) vs window parity, shuffled input
-order, same-lsn tx tie-break, salted-window variant."""
+"""J1 last-writer-wins: shuffled input order, same-lsn tx tie-break, the
+map-side partial aggregate, and the fused ingest (LWW resolved inside the
+lake's read and folds) against the pure-Python oracle."""
 
 from __future__ import annotations
 
 import json
 import random
 
-from pyspark_cdc.order import lww_aggregate, lww_window
+from pyspark_cdc.order import lww_aggregate
 from pyspark_cdc.parse import parse_envelopes
 from pyspark_cdc.schemas import KAFKA_SHAPE
 
@@ -53,28 +54,6 @@ def test_lww_tx_tiebreak(spark):
     assert len(rows) == 1 and rows[0]["content"] == "second"
 
 
-def test_aggregate_equals_window_equals_salted(spark):
-    rnd = random.Random(42)
-    events = [
-        _env(f"r{k % 5}", f"p{k}", lsn, tx=rnd.randint(0, 3))
-        for k in range(50)
-        for lsn in rnd.sample(range(1, 100), 8)
-    ]
-    rnd.shuffle(events)
-    parsed = _log(spark, events)
-
-    def snap(df):
-        return {
-            (r["repo"], r["path"]): (r["content"], r["__lsn"], r["__tx_id"])
-            for r in df.collect()
-        }
-
-    a = snap(lww_aggregate(parsed))
-    w = snap(lww_window(parsed))
-    s = snap(lww_window(parsed, salt_buckets=8))
-    assert a == w == s
-
-
 def test_lww_plan_has_partial_aggregate(spark):
     """The scale property: max_by LWW must be a hash aggregate with a
     map-side partial (two HashAggregate nodes around the exchange), so hot
@@ -87,15 +66,18 @@ def test_lww_plan_has_partial_aggregate(spark):
     assert "partial_max_by" in plan, plan
 
 
-def test_fused_merge_equals_explicit_lww_paths(spark, tmp_path):
-    """The fused path (LWW resolved inside the MERGE aggregation) must land
-    the same lake state as replay with an explicit pre-MERGE dedup stage,
-    for every lww method, on a log with duplicates/out-of-order/tx ties."""
+def test_fused_merge_equals_oracle(spark, tmp_path):
+    """The fused path (LWW resolved inside the lake's read and folds, no
+    pre-dedup stage) must land exactly the oracle's state on a shuffled
+    log with duplicates, out-of-order versions and tx ties — with the
+    backlog resolved at read time and after a fold into the base."""
     import random as _random
 
+    from conftest import assert_state_equal
+
+    from pyspark_cdc.oracle import replay
     from pyspark_cdc.sink import ParquetLake
     from pyspark_cdc.stream import replay_batch
-    from pyspark_cdc.schemas import KAFKA_SHAPE
 
     rnd = _random.Random(11)
     events = [_env("r", f"p{k}", lsn) for k in range(25) for lsn in range(1, 9)]
@@ -108,17 +90,18 @@ def test_fused_merge_equals_explicit_lww_paths(spark, tmp_path):
     ]
     log_dir = str(tmp_path / "log")
     spark.createDataFrame(recs, schema=KAFKA_SHAPE).repartition(4).write.parquet(log_dir)
+    want = replay(recs)["state"]
 
-    states = {}
-    for method in ("fused", "aggregate", "window"):
-        lake = ParquetLake(spark, str(tmp_path / f"lake_{method}"), n_buckets=8)
-        replay_batch(spark, log_dir, lake, lww_method=method)
-        states[method] = {
-            (r["repo"], r["path"]): (r["content"], r["commit"])
-            for r in lake.read().collect()
-        }
-    assert states["fused"] == states["aggregate"] == states["window"]
-    assert states["fused"][("r", "p3")][0] is not None
+    lake = ParquetLake(spark, str(tmp_path / "lake"), n_buckets=8)
+    replay_batch(spark, log_dir, lake)
+    read = {(r["repo"], r["path"]): r.asDict() for r in lake.read().collect()}
+    assert_state_equal(read, want)
+    assert read[("r", "p3")]["content"] is not None
+
+    lake.compact_now(tier="major")
+    assert lake.current_meta()["deltas"] == []
+    folded = {(r["repo"], r["path"]): r.asDict() for r in lake.read().collect()}
+    assert folded == read
 
 
 def test_stringified_numeric_lsn_matches_engine(spark):

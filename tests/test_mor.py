@@ -1,14 +1,16 @@
-"""Merge-on-read lake mode: delta-append merges, read-time LWW, periodic
-compaction — final state must equal the COW lake and the pure-Python
-oracle on the same log (max_by is associative, so WHERE the LWW resolves
-cannot change the winner)."""
+"""Merge-on-read lake: delta-append merges, read-time LWW, periodic
+compaction — final state must equal the pure-Python oracle on the same
+log whether LWW resolves at read time or in a fold into the base (max_by
+is associative, so WHERE the LWW resolves cannot change the winner)."""
 
 from __future__ import annotations
 
 import os
 
+from conftest import assert_state_equal
+
 from pyspark_cdc import generate
-from pyspark_cdc.oracle import replay
+from pyspark_cdc.oracle import replay, replay_parquet_log
 from pyspark_cdc.sink import ParquetLake
 from pyspark_cdc.stream import replay_batch, replay_stream
 
@@ -25,25 +27,23 @@ def _write_log(spark, tmp_path, n=3_000, files=6):
     return log_dir
 
 
-def test_mor_equals_cow_and_oracle(spark, tmp_path):
+def test_mor_equals_oracle(spark, tmp_path):
+    """The same log lands the oracle's state, every column, both with
+    the batch outstanding as a delta (read-time LWW) and folded into the
+    base right after the batch (compact_every=1, major_every=1)."""
     log_dir = _write_log(spark, tmp_path)
-
-    cow = ParquetLake(spark, str(tmp_path / "cow"), n_buckets=16, mode="cow")
-    replay_batch(spark, log_dir, cow)
+    oracle = replay_parquet_log(log_dir)["state"]
 
     mor = ParquetLake(spark, str(tmp_path / "mor"), n_buckets=16, mode="mor")
     replay_batch(spark, log_dir, mor)
+    assert mor.current_meta()["buckets"] == {}
+    assert_state_equal(_rows(mor), oracle)
 
-    assert _rows(cow) == _rows(mor)
-
-    # oracle parity (content only; dict replay of reference semantics)
-    recs = [r.asDict() for r in spark.read.parquet(log_dir).collect()]
-    recs.sort(key=lambda r: (r["offset"], r["partition"]))
-    oracle = replay(recs)["state"]
-    got = _rows(mor)
-    assert set(got) == set(oracle)
-    for k, exp in oracle.items():
-        assert got[k].get("content") == exp.get("content"), k
+    folded = ParquetLake(spark, str(tmp_path / "folded"), n_buckets=16,
+                         compact_every=1, major_every=1)
+    replay_batch(spark, log_dir, folded)
+    assert folded.current_meta()["deltas"] == []
+    assert_state_equal(_rows(folded), oracle)
 
 
 def test_mor_streaming_compacts_and_stays_correct(spark, tmp_path):
@@ -64,9 +64,7 @@ def test_mor_streaming_compacts_and_stays_correct(spark, tmp_path):
     assert len(meta["deltas"]) <= 3
     assert len(mor.applied_batch_ids()) == 8
 
-    cow = ParquetLake(spark, str(tmp_path / "cow"), n_buckets=16, mode="cow")
-    replay_batch(spark, log_dir, cow)
-    assert _rows(cow) == _rows(mor)
+    assert_state_equal(_rows(mor), replay_parquet_log(log_dir)["state"])
 
 
 def test_mor_duplicate_batch_is_noop(spark, tmp_path):
@@ -115,12 +113,10 @@ def test_compaction_expires_snapshots_and_orphan_dirs(spark, tmp_path):
                        for d in m.get("deltas", [])}
     on_disk = {os.path.join("data", d)
                for d in os.listdir(str(tmp_path / "mor" / "data"))}
-    assert on_disk <= referenced | {os.path.join("data", "d0")} or on_disk <= referenced
+    assert on_disk <= referenced
 
-    # final state still equals a fresh COW replay
-    cow = ParquetLake(spark, str(tmp_path / "cow"), n_buckets=8, mode="cow")
-    replay_batch(spark, log_dir, cow)
-    assert _rows(cow) == _rows(mor)
+    # final state still equals the oracle
+    assert_state_equal(_rows(mor), replay_parquet_log(log_dir)["state"])
 
 
 def test_crash_between_delta_write_and_commit_is_safe(spark, tmp_path):
@@ -707,13 +703,13 @@ def test_subset_mor_read_joins_only_touched_buckets(spark, tmp_path):
     """The read-path twin of the subset major: between compactions the
     steady-state MoR read broadcast-joins ONLY the base buckets the
     outstanding deltas touch (the manifest's per-delta bucket lists);
-    untouched buckets stream through join-free. All four paths must agree
+    untouched buckets stream through join-free. All three paths must agree
     row-for-row — the subset broadcast read (the new default), the
-    whole-base broadcast join (the legacy-manifest fallback), the global
-    LWW aggregate, and a fresh COW replay of the same batches — and the
-    path-level proof is in inputFiles(): the join side's base scan lists
-    ONLY touched-bucket files, the pass-through side only the rest, and
-    together they cover the base exactly."""
+    whole-base broadcast join (the legacy-manifest fallback) and the
+    global LWW aggregate — and equal the oracle's replay of the same
+    batches. The path-level proof is in inputFiles(): the join side's
+    base scan lists ONLY touched-bucket files, the pass-through side
+    only the rest, and together they cover the base exactly."""
     from pyspark_cdc.schemas import KAFKA_SHAPE
     from pyspark_cdc.stream import process_batch
 
@@ -758,7 +754,7 @@ def test_subset_mor_read_joins_only_touched_buckets(spark, tmp_path):
     touched = ParquetLake._delta_touched_buckets(meta)
     assert set(touched) == {touched_bucket, kb[new_key]}
 
-    # 1) the four strategies agree row-for-row
+    # 1) the three strategies agree row-for-row and with the oracle
     got = _rows(lake)  # default path: subset broadcast (tiny delta bytes)
     assert got[tk[0]]["content"] == "v2000"
     assert got[tk[2]]["content"] == "v2300"
@@ -773,11 +769,7 @@ def test_subset_mor_read_joins_only_touched_buckets(spark, tmp_path):
     assert _rows(lake) == got  # global LWW aggregate
     lake.broadcast_delta_bytes = 32 * 1024 * 1024
 
-    cow = ParquetLake(spark, str(tmp_path / "cow"), n_buckets=n_buckets,
-                      mode="cow")
-    for bid, recs_ in enumerate(batches):
-        feed(cow, bid, recs_)
-    assert _rows(cow) == got
+    assert_state_equal(got, replay([r for b in batches for r in b])["state"])
 
     # 2) path-level pruning proof: the join side scans only touched
     # buckets, the pass-through side only the rest, covering the base

@@ -228,24 +228,6 @@ def test_decoupled_ingest_plus_maintenance_equals_inline(spark, tmp_path):
     assert ing.current_meta()["buckets"]        # majors really ran
 
 
-def test_cow_mode_refuses_concurrent_data_commits(spark, tmp_path):
-    """COW stays a single-writer mode by contract: a racing data commit
-    cannot be rebased over a bucket rewrite (the rewrite's input is the
-    whole bucket), so the loser raises with a clear message instead of
-    silently dropping the winner's rows."""
-    a = ParquetLake(spark, str(tmp_path / "t"), n_buckets=4, mode="cow")
-    b = ParquetLake(spark, str(tmp_path / "t"), n_buckets=4, mode="cow")
-
-    b0, _ = _upserts(spark, [1, 2, 3], 1, 10)
-    process_batch(b0, 0, a)
-
-    b1, _ = _upserts(spark, [1, 2], 2, 20)      # same keys: same buckets
-    b2, _ = _upserts(spark, [2, 3], 3, 30)
-    _one_shot(a, lambda: process_batch(b1, 1, b))
-    with pytest.raises(RuntimeError, match="COW .*single writer"):
-        process_batch(b2, 2, a)
-
-
 def test_orphan_grace_protects_inflight_dirs(spark, tmp_path):
     """expire_snapshots must not delete an unreferenced-but-young dir:
     with concurrent writers it may be another writer's fully-written,

@@ -1,28 +1,33 @@
 """ParquetLake MERGE contract: idempotent duplicate batches, cross-batch
 LWW guard, tombstone protection against late older upserts, revive across
 batches, delete of never-inserted key, additive schema evolution across
-batches, bucket-level copy-on-write reuse."""
+batches, bucket-level copy-on-write reuse by the major fold, and the one
+ingest path (every batch lands as a parsed delta)."""
 
 from __future__ import annotations
 
 import json
 import os
 
+import pytest
 from conftest import rows_by_key
 
-from pyspark_cdc.order import lww_aggregate
 from pyspark_cdc.parse import parse_envelopes
 from pyspark_cdc.schemas import KAFKA_SHAPE
 from pyspark_cdc.sink import ParquetLake
+from pyspark_cdc.stream import process_batch
 
 
-def _deduped(spark, events):
+def _batch(spark, events):
     recs = [
         {"key": None, "value": v, "topic": "t", "partition": 0, "offset": i}
         for i, v in enumerate(events)
     ]
-    raw = spark.createDataFrame(recs, schema=KAFKA_SHAPE)
-    return lww_aggregate(parse_envelopes(raw))
+    return spark.createDataFrame(recs, schema=KAFKA_SHAPE)
+
+
+def _merge(lake, events, batch_id):
+    return process_batch(_batch(lake.spark, events), batch_id, lake)
 
 
 def _env(repo, path, lsn, op="u", content=None, extra=None, delete=False):
@@ -46,50 +51,49 @@ def _env(repo, path, lsn, op="u", content=None, extra=None, delete=False):
 
 def test_duplicate_batch_id_is_noop(spark, tmp_table):
     lake = ParquetLake(spark, tmp_table, n_buckets=4)
-    b = _deduped(spark, [_env("r", "p", 1, content="one")])
-    assert lake.merge(b, 0)["status"] == "committed"
-    b2 = _deduped(spark, [_env("r", "p", 2, content="two")])
+    assert _merge(lake, [_env("r", "p", 1, content="one")], 0)["status"] == "committed"
     # same epoch id replayed (foreachBatch retry) => skipped
-    assert lake.merge(b2, 0)["status"] == "skipped_duplicate_batch"
+    stats = _merge(lake, [_env("r", "p", 2, content="two")], 0)
+    assert stats["status"] == "skipped_duplicate_batch"
     assert rows_by_key(lake.read())[("r", "p")]["content"] == "one"
 
 
 def test_cross_batch_lsn_guard(spark, tmp_table):
     lake = ParquetLake(spark, tmp_table, n_buckets=4)
-    lake.merge(_deduped(spark, [_env("r", "p", 10, content="new")]), 0)
+    _merge(lake, [_env("r", "p", 10, content="new")], 0)
     # a later batch replays an OLDER change (at-least-once) => must lose
-    lake.merge(_deduped(spark, [_env("r", "p", 5, content="stale")]), 1)
+    _merge(lake, [_env("r", "p", 5, content="stale")], 1)
     assert rows_by_key(lake.read())[("r", "p")]["content"] == "new"
 
 
 def test_tombstone_blocks_late_older_upsert(spark, tmp_table):
     lake = ParquetLake(spark, tmp_table, n_buckets=4)
-    lake.merge(_deduped(spark, [_env("r", "p", 1), _env("r", "p", 9, op="d")]), 0)
+    _merge(lake, [_env("r", "p", 1), _env("r", "p", 9, op="d")], 0)
     assert rows_by_key(lake.read()) == {}
-    lake.merge(_deduped(spark, [_env("r", "p", 5, content="zombie")]), 1)
+    _merge(lake, [_env("r", "p", 5, content="zombie")], 1)
     assert rows_by_key(lake.read()) == {}, "older upsert must not resurrect a deleted key"
 
 
 def test_revive_across_batches(spark, tmp_table):
     # document_repository.py:42: upsert after delete re-inserts
     lake = ParquetLake(spark, tmp_table, n_buckets=4)
-    lake.merge(_deduped(spark, [_env("r", "p", 1), _env("r", "p", 2, delete=True)]), 0)
+    _merge(lake, [_env("r", "p", 1), _env("r", "p", 2, delete=True)], 0)
     assert rows_by_key(lake.read()) == {}
-    lake.merge(_deduped(spark, [_env("r", "p", 3, content="revived")]), 1)
+    _merge(lake, [_env("r", "p", 3, content="revived")], 1)
     assert rows_by_key(lake.read())[("r", "p")]["content"] == "revived"
 
 
 def test_delete_never_inserted_is_noop(spark, tmp_table):
     lake = ParquetLake(spark, tmp_table, n_buckets=4)
-    lake.merge(_deduped(spark, [_env("ghost", "p", 1, op="d")]), 0)
+    _merge(lake, [_env("ghost", "p", 1, op="d")], 0)
     assert rows_by_key(lake.read()) == {}
 
 
 def test_schema_evolution_across_batches(spark, tmp_table):
     lake = ParquetLake(spark, tmp_table, n_buckets=4)
-    lake.merge(_deduped(spark, [_env("r", "old", 1)]), 0)
-    stats = lake.merge(
-        _deduped(spark, [_env("r", "new", 2, extra={"branch": "main", "stars": 7})]), 1
+    _merge(lake, [_env("r", "old", 1)], 0)
+    stats = _merge(
+        lake, [_env("r", "new", 2, extra={"branch": "main", "stars": 7})], 1
     )
     assert set(stats["new_columns"]) == {"branch", "stars"}
     rows = rows_by_key(lake.read())
@@ -101,16 +105,19 @@ def test_schema_evolution_across_batches(spark, tmp_table):
 
 
 def test_copy_on_write_reuses_untouched_buckets(spark, tmp_table):
-    lake = ParquetLake(spark, tmp_table, n_buckets=64)
-    lake.merge(_deduped(spark, [_env(f"r{i}", f"p{i}", 1) for i in range(40)]), 0)
+    """A major fold rewrites only the base buckets its deltas touch;
+    every other bucket keeps its path in the next manifest."""
+    lake = ParquetLake(spark, tmp_table, n_buckets=64,
+                       compact_every=1, major_every=1)
+    _merge(lake, [_env(f"r{i}", f"p{i}", 1) for i in range(40)], 0)
     meta0 = lake.current_meta()
-    lake.merge(_deduped(spark, [_env("r0", "p0", 2, content="touched")]), 1)
+    _merge(lake, [_env("r0", "p0", 2, content="touched")], 1)
     meta1 = lake.current_meta()
     reused = sum(
         1 for b, p in meta1["buckets"].items() if meta0["buckets"].get(b) == p
     )
     changed = len(meta1["buckets"]) - reused
-    assert changed <= 2, "merge must rewrite only touched buckets"
+    assert changed <= 2, "a fold must rewrite only touched buckets"
     assert reused >= len(meta0["buckets"]) - 2
     # and the data under reused paths was not rewritten (same files)
     assert rows_by_key(lake.read())[("r0", "p0")]["content"] == "touched"
@@ -124,38 +131,38 @@ def test_empty_table_read(spark, tmp_table):
 
 def test_snapshot_files_are_immutable_history(spark, tmp_table):
     lake = ParquetLake(spark, tmp_table, n_buckets=4)
-    lake.merge(_deduped(spark, [_env("r", "p", 1)]), 0)
-    lake.merge(_deduped(spark, [_env("r", "p", 2)]), 1)
+    _merge(lake, [_env("r", "p", 1)], 0)
+    _merge(lake, [_env("r", "p", 2)], 1)
     metas = [f for f in os.listdir(os.path.join(tmp_table, "_meta")) if f.startswith("snap-")]
     assert len(metas) == 2
     assert lake.applied_batch_ids() == [0, 1]
 
 
-def test_reserved_extras_keys_never_promoted_cow(spark, tmp_table):
+def test_reserved_extras_keys_never_promoted_across_batches(spark, tmp_table):
     """A source field named like an engine-internal column ("__deleted"
     is the Debezium ExtractNewRecordState SMT convention; "__lsn" etc.)
     must NOT be promoted to a real column — promotion would make every
     later merge/read raise AMBIGUOUS_REFERENCE and brick the table
     (round-4 review). The record itself still applies normally."""
     lake = ParquetLake(spark, tmp_table, n_buckets=4)
-    lake.merge(_deduped(spark, [
+    _merge(lake, [
         _env("r", "p", 1, content="live",
              extra={"__deleted": "true", "__lsn": "999", "tier": "gold"}),
-    ]), 0)
+    ], 0)
     assert lake.extra_columns() == ["tier"]  # real evolution still works
     row = rows_by_key(lake.read())[("r", "p")]
     assert row["content"] == "live" and row["tier"] == "gold"
     # the decoy "__deleted" extras value neither deletes the row nor
     # poisons later merges/reads
-    lake.merge(_deduped(spark, [_env("r", "p", 2, content="v2")]), 1)
+    _merge(lake, [_env("r", "p", 2, content="v2")], 1)
     assert rows_by_key(lake.read())[("r", "p")]["content"] == "v2"
 
 
 def test_reserved_extras_keys_never_promoted_mor(spark, tmp_table):
-    """Same guard on the streaming MoR path (merge_parsed collects
-    observed keys via an Observation): without it the commit SUCCEEDS and
-    every subsequent read of the parsed delta dies flattening the
-    promoted duplicate column."""
+    """Same guard at merge_parsed itself (it collects observed keys via
+    an Observation), with a "__bucket" decoy: without it the commit
+    SUCCEEDS and every subsequent read of the parsed delta dies
+    flattening the promoted duplicate column."""
     recs = [
         {"key": None,
          "value": _env("r", "p", 1, content="live",
@@ -178,10 +185,10 @@ def test_reopen_adopts_manifest_n_buckets(spark, tmp_table):
     hash keys to different buckets and leave stale duplicates in the old
     dirs — silent wrong results, round-4 review)."""
     lake = ParquetLake(spark, tmp_table, n_buckets=8)
-    lake.merge(_deduped(spark, [_env("r", "p", 1, content="v1")]), 0)
+    _merge(lake, [_env("r", "p", 1, content="v1")], 0)
     reopened = ParquetLake(spark, tmp_table, n_buckets=64)
     assert reopened.n_buckets == 8
-    reopened.merge(_deduped(spark, [_env("r", "p", 2, content="v2")]), 1)
+    _merge(reopened, [_env("r", "p", 2, content="v2")], 1)
     rows = rows_by_key(reopened.read())
     assert len(rows) == 1 and rows[("r", "p")]["content"] == "v2"
     assert reopened.applied_batch_count() == len(reopened.applied_batch_ids()) == 2
@@ -192,10 +199,9 @@ def test_route_scoped_read_on_preroute_base_raises(spark, tmp_table):
     tenant-scoped read; silently returning every tenant's rows would
     break the isolation contract, so read(route=X) must refuse loudly
     (round-4 review). Plain read() keeps working (route backfills null)."""
-    import pytest
-
-    lake = ParquetLake(spark, tmp_table, n_buckets=2)
-    lake.merge(_deduped(spark, [_env("r", "p", 1, content="v1")]), 0)
+    lake = ParquetLake(spark, tmp_table, n_buckets=2,
+                       compact_every=1, major_every=1)
+    _merge(lake, [_env("r", "p", 1, content="v1")], 0)
     meta = lake.current_meta()
     # simulate a pre-route (round-2-era) base: rewrite one bucket dir
     # without route dirs and strip the manifest's route lists
@@ -214,7 +220,7 @@ def test_route_scoped_read_on_preroute_base_raises(spark, tmp_table):
 
 
 def test_clustered_lww_same_winners_single_exchange(spark, tmp_path):
-    """resolve_lww_clustered (the compaction/COW fold aggregation) must
+    """resolve_lww_clustered (the fold aggregation) must
     pick exactly the winners resolve_lww picks — bucket is a function of
     the key, so the groups are identical even when a key's rows disagree
     on route — and its full fold plan (repartition -> LWW aggregate ->
@@ -263,32 +269,18 @@ def test_clustered_lww_same_winners_single_exchange(spark, tmp_path):
     assert plan.count("Exchange") == 1, plan
 
 
-def test_cow_long_run_is_retention_bounded(spark, tmp_table):
-    """A long-running COW table must not grow manifests and superseded
-    bucket generations without bound: every COW merge commits a snapshot
-    and rewrites bucket dirs, and (unlike MoR) no compaction ever runs to
-    trigger retention — so the merge path itself must expire. Before the
-    fix, expire_snapshots was unreachable in cow mode and N batches left
-    N manifests plus up to N generations of rewritten buckets."""
-    import os
+def test_one_ingest_path_appends_a_parsed_delta(spark, tmp_table):
+    """A lake opened with the defaults ingests every batch as one
+    parsed delta and writes no base until a fold runs."""
+    lake = ParquetLake(spark, tmp_table, n_buckets=4)
+    stats = _merge(lake, [_env("r", "p", 1), _env("r", "q", 2)], 0)
+    assert stats["status"] == "committed"
+    meta = lake.current_meta()
+    assert [d["format"] for d in meta["deltas"]] == ["parsed"]
+    assert meta["buckets"] == {}
+    assert set(rows_by_key(lake.read())) == {("r", "p"), ("r", "q")}
 
-    lake = ParquetLake(spark, tmp_table, n_buckets=4, mode="cow",
-                       snapshot_retention=3)
-    for i in range(8):
-        b = _deduped(spark, [_env("r", "p", lsn=10 + i,
-                                  content=f"v{i}")])
-        lake.merge(b, i)
 
-    snaps = [f for f in os.listdir(os.path.join(tmp_table, "_meta"))
-             if f.startswith("snap-")]
-    assert len(snaps) <= 3 + 1, snaps  # retention window (+ tolerance)
-    data_dirs = os.listdir(os.path.join(tmp_table, "data"))
-    # every kept snapshot references at most one generation of the one
-    # touched bucket; 8 un-expired generations would mean no sweeping
-    assert len(data_dirs) <= 3 + 1, data_dirs
-
-    rows = {(r["repo"], r["path"]): r["content"]
-            for r in lake.read().collect()}
-    assert rows == {("r", "p"): "v7"}
-    # time travel within the retention window still works
-    assert lake.read(snapshot_id=lake.current_meta()["id"] - 1).count() == 1
+def test_cow_mode_is_refused(spark, tmp_table):
+    with pytest.raises(ValueError, match="compact_every=1, major_every=1"):
+        ParquetLake(spark, tmp_table, n_buckets=4, mode="cow")
