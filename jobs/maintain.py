@@ -44,10 +44,7 @@ def fold_aborted(before_meta: dict | None, after_meta: dict | None) -> bool:
     consumed them while ours lost the race, the backlog is folded either
     way — reporting success matches the observable table state.)"""
     def paths(meta):
-        return {
-            d["path"] if isinstance(d, dict) else d
-            for d in (meta or {}).get("deltas", [])
-        }
+        return {d["path"] for d in (meta or {}).get("deltas", [])}
     return paths(before_meta) <= paths(after_meta)
 
 

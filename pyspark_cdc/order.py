@@ -4,24 +4,22 @@ The reference gets ordering implicitly from Kafka partition order
 (sync.go:36-43 sequential iteration over PK-keyed topics); micro-batches
 destroy that, so ordering becomes explicit here (SURVEY.md section 2.3 J1).
 
-``lww_aggregate`` — ``groupBy(key).agg(max_by(row, ord))`` — is the
-explicit LWW stage. It is a hash aggregate with MAP-SIDE PARTIAL COMBINE:
-a hot key's rows are reduced to one candidate per task *before* the
-shuffle, so a key holding 50% of a 10^10-event batch ships ~n_tasks rows,
-not 5*10^9. No salting needed — partial aggregation IS the salt, chosen
-by the engine. The lake's read and folds resolve LWW with the same
-max_by over ``packed_ord`` (sink.resolve_lww), so ingest needs no
-separate LWW stage at all.
+LWW is ``groupBy(key).agg(max_by(row, packed_ord))`` — sink.resolve_lww
+at read time, and its clustered twin in the folds — so ingest needs no
+separate LWW stage at all. The read-side aggregate has a MAP-SIDE
+PARTIAL COMBINE: a hot key's rows are reduced to one candidate per task
+*before* the shuffle, so a key holding 50% of a 10^10-event batch ships
+~n_tasks rows, not 5*10^9. No salting needed — partial aggregation IS
+the salt, chosen by the engine.
 
-It returns one row per (repo, path): the winning change event.
+This module holds the ordering tuple and its packed comparator.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .schemas import KEY_COLS, LSN_COL, OFFSET_COL, TS_COL, TX_COL
+from .schemas import LSN_COL, OFFSET_COL, TS_COL, TX_COL
 
 ORD_COLS = [LSN_COL, TX_COL, TS_COL, OFFSET_COL]
 # Uniqueness caveat, stated rather than papered over: the tuple is
@@ -35,9 +33,6 @@ ORD_COLS = [LSN_COL, TX_COL, TS_COL, OFFSET_COL]
 # consumers (main.go) have the same race — a CDC source that shards one
 # PRIMARY KEY across partitions without LSNs is operating outside any
 # ordering contract this engine could honor.
-
-# Columns an LWW winner carries (lww_aggregate's output row).
-CARRY_COLS = ["effective_op", "commit", "lang", "content", "extras", "route", *ORD_COLS]
 
 _SIGN_BIT = -(1 << 63)
 
@@ -71,17 +66,4 @@ def packed_ord(cols: list[str] = ORD_COLS):
         for c in cols
     ]
     return F.unhex(F.concat(*parts))
-
-
-def lww_aggregate(parsed: DataFrame) -> DataFrame:
-    """One-shuffle LWW: max_by(row-struct, packed ordering scalar); the
-    packed binary orders exactly as the oracle's (lsn, tx_id, ts_ms,
-    offset) sort key."""
-    ok = parsed.filter(F.col("status") == "ok")
-    row = F.struct(*[F.col(c) for c in CARRY_COLS])
-    return (
-        ok.groupBy(*KEY_COLS)
-        .agg(F.max_by(row, packed_ord()).alias("_w"))
-        .select(*KEY_COLS, "_w.*")
-    )
 

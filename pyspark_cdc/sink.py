@@ -9,8 +9,9 @@ WHEN NOT MATCHED INSERT` (SURVEY.md S5/S6/J2/J3) — on plain parquet:
 * Merge-on-read ingest: a batch appends its parsed rows as one DELTA —
   no table read, no sort, O(batch) per micro-batch (a 100 TB table
   cannot be rewritten per micro-batch). LWW resolves at read (small
-  backlogs via a broadcast key-set join against the base — zero
-  table-wide shuffle; large ones via the global aggregate) and at
+  backlogs via a broadcast key-set join against only the base buckets
+  the deltas touch — zero table-wide shuffle; large ones via the global
+  aggregate) and at
   TIERED compaction: every `compact_every` batches a MINOR fold merges
   the deltas among themselves (O(recent data), no base read), and every
   `major_every`-th compaction folds into the base — the Iceberg v2 /
@@ -22,12 +23,16 @@ WHEN NOT MATCHED INSERT` (SURVEY.md S5/S6/J2/J3) — on plain parquet:
   untouched buckets are carried forward by manifest reference. At
   100 TB you'd raise n_buckets so a bucket is a few GB — fold cost
   scales with the backlog's key spread, not table size.
-* Each commit writes an immutable snapshot manifest (bucket -> data dir,
-  applied batch ids, column list) and atomically swaps the `current`
-  pointer (os.replace). A crash mid-merge leaves the old snapshot
-  current; the streaming retry of the same epoch is detected via the
-  applied-batch-id log and becomes a no-op => idempotent foreachBatch,
-  exactly-once final state (SURVEY.md T1).
+* Each commit writes an immutable snapshot manifest (bucket -> data dir
+  and route list, delta entries with their path, format, routes, touched
+  buckets and bytes, the applied-batch watermark, column list) and
+  atomically swaps the `current` pointer (os.replace). A crash mid-merge
+  leaves the old snapshot current; the streaming retry of the same epoch
+  is detected via the applied-batch watermark and becomes a no-op =>
+  idempotent foreachBatch, exactly-once final state (SURVEY.md T1).
+  Every manifest is read through one loader (ParquetLake._load_manifest)
+  that refuses any other shape, so the rest of the module reads one
+  dialect.
 * Deletes are retained as tombstone rows (__deleted=true, with their
   lsn), so a late-replayed OLDER upsert for a deleted key loses the LWW
   merge against the tombstone — strictly safer than the reference, which
@@ -102,6 +107,39 @@ SNAPSHOT_RETENTION = 8
 # change-type column emitted by read_changes (Delta Lake CDF's
 # _change_type naming, net-effect variant)
 CHANGE_TYPE_COL = "_change_type"
+
+# Keys every committed manifest carries, and every delta entry in it.
+MANIFEST_KEYS = ("id", "parent", "n_buckets", "minhash_bands",
+                 "extra_columns", "buckets", "deltas", "batch_wm",
+                 "recent_batch_ids")
+DELTA_ENTRY_KEYS = ("path", "format", "routes", "buckets", "bytes")
+
+
+def _manifest_problem(meta: dict) -> str | None:
+    """Why `meta` is not a manifest this engine writes, or None. The
+    engine reads one dialect: dict delta entries that record their route
+    list, touched buckets and byte count, a route list per base bucket,
+    and an applied-batch watermark. Older shapes (string delta entries,
+    entries without those fields, the `batch_ids` list that predates the
+    watermark, buckets without route lists) are refused, not converted."""
+    if "batch_ids" in meta:
+        return "records applied batches as a `batch_ids` list"
+    missing = [k for k in MANIFEST_KEYS if k not in meta]
+    if missing:
+        return f"has no {', '.join(missing)}"
+    for entry in meta["deltas"]:
+        if not isinstance(entry, dict):
+            return f"has a delta entry {entry!r} that is not a dict"
+        missing = [k for k in DELTA_ENTRY_KEYS if k not in entry]
+        if missing:
+            return (f"has a delta entry {entry.get('path')!r} with no "
+                    f"{', '.join(missing)}")
+    routes = meta.get("bucket_routes", {})
+    unrouted = sorted((b for b in meta["buckets"] if b not in routes), key=int)
+    if unrouted:
+        return f"has base buckets {unrouted} with no bucket_routes entry"
+    return None
+
 
 # ---- optimistic concurrency (decoupled maintenance vs ingest) ----
 # The commit lock is held ONLY for the O(ms) manifest check+write+swap,
@@ -237,11 +275,17 @@ def _xxh64(data: bytes, seed: int) -> int:
 def key_bucket_of(key: tuple[str, str], n_buckets: int) -> int:
     """bucket_expr(n_buckets) of one primary key, on the driver: Spark's
     xxhash64 chains the key columns through the seed (42 first; a null
-    column leaves the hash unchanged), and pmod of the signed result."""
+    column leaves the hash unchanged), and pmod of the signed result.
+    Key columns are strings: any other element raises TypeError."""
     h = 42
     for v in key:
-        if v is not None:
+        if isinstance(v, str):
             h = _xxh64(v.encode("utf-8"), h)
+        elif v is not None:
+            raise TypeError(
+                f"key {key!r}: key columns are strings (or None), got "
+                f"{type(v).__name__} {v!r}"
+            )
     return (h - (1 << 64) if h >> 63 else h) % n_buckets
 
 
@@ -418,15 +462,36 @@ class ParquetLake:
         # silently mis-route keys (touched-bucket lookups against dirs
         # hashed under the old modulus -> stale duplicates survive).
         existing = self.current_meta()
-        if existing is not None and existing.get("n_buckets"):
+        if existing is not None:
             self.n_buckets = existing["n_buckets"]
-        if existing is not None and "minhash_bands" in existing:
             self.minhash_bands = existing["minhash_bands"]
 
     # ---------------- metadata ----------------
 
     def _current_path(self) -> str:
         return os.path.join(self._meta_dir, "current")
+
+    def _load_manifest(self, snapshot_id: int) -> dict:
+        """The one manifest reader: every snapshot manifest the lake
+        opens (current, time travel, change ranges, expiry) is checked
+        here, so no other code path handles an older shape. A shape this
+        engine never writes raises ValueError naming the snapshot and the
+        remedy. `bucket_routes`, which an older empty-base commit of this
+        dialect omits, is filled in as {}. (`minor_count` stays optional:
+        a major fold or rebucket resets it to 0 by leaving it out.)"""
+        with open(os.path.join(self._meta_dir, f"snap-{snapshot_id}.json")) as f:
+            meta = json.load(f)
+        problem = _manifest_problem(meta)
+        if problem is not None:
+            raise ValueError(
+                f"snapshot {snapshot_id} of the lake at {self.table_dir} "
+                f"{problem}: the engine no longer reads this manifest shape. "
+                "Rebuild the lake: export it with jobs/export_changes.py "
+                "--full on an engine release that still reads it, then "
+                "replay the export into a new lake with jobs/replay.py"
+            )
+        meta.setdefault("bucket_routes", {})
+        return meta
 
     def current_meta(self) -> dict | None:
         cp = self._current_path()
@@ -452,14 +517,12 @@ class ParquetLake:
             healed += 1
         if healed == 0:
             return None
-        with open(os.path.join(self._meta_dir, f"snap-{healed}.json")) as f:
-            return json.load(f)
+        return self._load_manifest(healed)
 
     def snapshot_meta(self, snapshot_id: int) -> dict:
         """Manifest of a historical snapshot (within the expire_snapshots
         retention window) — the time-travel entry point."""
-        with open(os.path.join(self._meta_dir, f"snap-{snapshot_id}.json")) as f:
-            return json.load(f)
+        return self._load_manifest(snapshot_id)
 
     # ---------------- pinned refs (retention protection) ----------------
 
@@ -724,6 +787,8 @@ class ParquetLake:
             "minhash_bands": self.minhash_bands,
             "extra_columns": [],
             "buckets": {},
+            "bucket_routes": {},
+            "minor_count": 0,
             "deltas": [],
             # Bounded applied-batch tracking: a long-running CDC tail job
             # commits unbounded batches, so the manifest stores a
@@ -761,7 +826,7 @@ class ParquetLake:
         the micro-batch before the checkpoint commits; the operator
         reopens the lake (adopting the new count) and the same epoch
         replays idempotently."""
-        mn = m.get("n_buckets") or self.n_buckets
+        mn = m["n_buckets"]
         if mn != self.n_buckets:
             raise RuntimeError(
                 f"table at {self.table_dir} was rebucketed underneath this "
@@ -772,8 +837,6 @@ class ParquetLake:
 
     @staticmethod
     def _batch_applied(meta: dict, batch_id) -> bool:
-        if "batch_ids" in meta:  # pre-watermark manifest
-            return batch_id in meta["batch_ids"]
         return (
             isinstance(batch_id, int) and batch_id <= meta["batch_wm"]
         ) or batch_id in meta["recent_batch_ids"]
@@ -786,10 +849,7 @@ class ParquetLake:
         delta, which the LWW merge is content-idempotent against (max is
         duplicate-insensitive), whereas the other direction would skip
         data."""
-        if "batch_ids" in meta:  # migrate pre-watermark manifest
-            wm, recent = -1, set(meta["batch_ids"])
-        else:
-            wm, recent = meta["batch_wm"], set(meta["recent_batch_ids"])
+        wm, recent = meta["batch_wm"], set(meta["recent_batch_ids"])
         recent.add(batch_id)
         while (wm + 1) in recent:
             wm += 1
@@ -805,10 +865,7 @@ class ParquetLake:
                 key=lambda b: (isinstance(b, int) is False, b if isinstance(b, int) else str(b)),
             )[-RECENT_BATCH_WINDOW:]
             recent = set(keep)
-        out = {k: v for k, v in meta.items() if k != "batch_ids"}
-        out["batch_wm"] = wm
-        out["recent_batch_ids"] = sorted(recent, key=str)
-        return out
+        return dict(meta, batch_wm=wm, recent_batch_ids=sorted(recent, key=str))
 
     def extra_columns(self) -> list[str]:
         meta = self.current_meta()
@@ -822,8 +879,6 @@ class ParquetLake:
         meta = self.current_meta()
         if not meta:
             return []
-        if "batch_ids" in meta:
-            return list(meta["batch_ids"])
         return list(range(meta["batch_wm"] + 1)) + list(meta["recent_batch_ids"])
 
     def applied_batch_count(self) -> int:
@@ -833,8 +888,6 @@ class ParquetLake:
         meta = self.current_meta()
         if not meta:
             return 0
-        if "batch_ids" in meta:
-            return len(meta["batch_ids"])
         return meta["batch_wm"] + 1 + len(meta["recent_batch_ids"])
 
     # ---------------- data plane ----------------
@@ -1037,9 +1090,9 @@ class ParquetLake:
                 "minhash_bands": self.minhash_bands,
                 "extra_columns": cols,
                 "buckets": dict(m["buckets"]),
-                "bucket_routes": dict(m.get("bucket_routes", {})),
+                "bucket_routes": dict(m["bucket_routes"]),
                 "minor_count": m.get("minor_count", 0),
-                "deltas": m.get("deltas", []) + [delta_entry],
+                "deltas": m["deltas"] + [delta_entry],
                 **{k: v for k, v in self._with_batch(m, batch_id).items()
                    if k in ("batch_wm", "recent_batch_ids")},
             }
@@ -1108,10 +1161,7 @@ class ParquetLake:
         """Deltas appended since the last compaction of any kind — the
         product of a MINOR fold (merged=True) does not re-trigger
         compaction by itself."""
-        return sum(
-            1 for d in meta.get("deltas", [])
-            if not (isinstance(d, dict) and d.get("merged"))
-        )
+        return sum(1 for d in meta["deltas"] if not d.get("merged"))
 
     def _maybe_compact(self, meta: dict) -> dict:
         """Tiered compaction policy: MAJOR (fold into the base) when no
@@ -1119,7 +1169,7 @@ class ParquetLake:
         since the last major; MINOR (merge the deltas among themselves)
         otherwise."""
         is_major = (
-            not meta.get("buckets")
+            not meta["buckets"]
             or meta.get("minor_count", 0) >= self.major_every - 1
         )
         if is_major:
@@ -1147,14 +1197,9 @@ class ParquetLake:
         # backlog would otherwise plan ~10^5 shuffle partitions and
         # write tasks, ~all empty — the partition COUNT is independent
         # of the bucket VALUES, so any count is winner-exact
-        touched_minor = self._delta_touched_buckets(meta)
-        n_parts = (
-            max(len(touched_minor), 1) if touched_minor is not None
-            else self.n_buckets
-        )
         merged = resolve_lww_clustered(
             delta.withColumn(BUCKET_COL, bucket_expr(self.n_buckets)),
-            n_parts,
+            max(len(self._delta_touched_buckets(meta)), 1),
         )
         if self.minhash_bands:
             # sign this fold's winners once; a previous minor fold's
@@ -1203,26 +1248,21 @@ class ParquetLake:
         # doesn't matter); abort if a concurrent COMPACTION already
         # consumed any input (our fold is then stale duplicate work —
         # dropping it is exact because the table never referenced it).
-        consumed = {d["path"] if isinstance(d, dict) else d
-                    for d in meta.get("deltas", [])}
+        consumed = {d["path"] for d in meta["deltas"]}
 
         def build(m: dict) -> dict | None:
-            if (m.get("n_buckets") or self.n_buckets) != self.n_buckets:
+            if m["n_buckets"] != self.n_buckets:
                 return None  # rebucketed underneath: this fold's output
                 # (bucket lists, dirs) is hashed with the OLD modulus —
                 # abort; the rebucket already folded the whole backlog
-            m_paths = {d["path"] if isinstance(d, dict) else d
-                       for d in m.get("deltas", [])}
-            if not consumed <= m_paths:
+            if not consumed <= {d["path"] for d in m["deltas"]}:
                 return None
             out = {
-                **{k: v for k, v in m.items()},
+                **m,
                 "id": m["id"] + 1,
                 "parent": m["id"],
                 "deltas": folded + [
-                    d for d in m.get("deltas", [])
-                    if (d["path"] if isinstance(d, dict) else d)
-                    not in consumed
+                    d for d in m["deltas"] if d["path"] not in consumed
                 ],
                 "minor_count": m.get("minor_count", 0) + 1,
             }
@@ -1245,27 +1285,20 @@ class ParquetLake:
     @staticmethod
     def _delta_touched_buckets(
         meta: dict, route: str | None = None
-    ) -> list[int] | None:
+    ) -> list[int]:
         """Union of the manifest's per-delta touched-bucket lists — the
-        base buckets a MAJOR fold must read. None when any delta entry
-        predates bucket tracking (legacy manifest): the safe fallback is
-        a full-table major, exactly the pre-subset behavior.
+        base buckets a MAJOR fold must read.
 
         route=X keeps only deltas whose manifest route list contains X
         (the same pruning _read_split applies to the delta scan), so a
         tenant-scoped subset read joins only the buckets touched by the
         TENANT'S own backlog — a bucket churned exclusively by other
-        tenants streams through the tenant's read join-free. Route-pruned
-        deltas are skipped BEFORE the legacy check: a delta whose rows
-        never enter the merge cannot need a fallback on their account."""
-        out: set[int] = set()
-        for d in meta.get("deltas", []):
-            if not ParquetLake._delta_matches_route(d, route):
-                continue
-            if not isinstance(d, dict) or "buckets" not in d:
-                return None
-            out.update(int(b) for b in d["buckets"])
-        return sorted(out)
+        tenants streams through the tenant's read join-free."""
+        return sorted({
+            int(b) for d in meta["deltas"]
+            if ParquetLake._delta_matches_route(d, route)
+            for b in d["buckets"]
+        })
 
     def _compact(self, meta: dict, full: bool = False) -> dict:
         """MAJOR compaction: fold the outstanding deltas into the base and
@@ -1287,9 +1320,8 @@ class ParquetLake:
         is purely an optimization (an expired tombstone is never WRONG to
         keep, it just occupies space until its bucket is next touched).
 
-        full=True (and any legacy manifest whose deltas predate bucket
-        tracking) folds every bucket — the pre-subset behavior, kept for
-        equivalence testing and as the migration fallback."""
+        full=True folds every bucket — the pre-subset behavior, kept for
+        equivalence testing and as an operational escape hatch."""
         from pyspark.sql import Observation
 
         extra_cols = list(meta["extra_columns"])
@@ -1365,19 +1397,16 @@ class ParquetLake:
         # concurrent compaction consumed any input delta or repointed any
         # base bucket the fold read: the output is then built on stale
         # inputs and is simply dropped (never referenced, so exact).
-        consumed = {d["path"] if isinstance(d, dict) else d
-                    for d in meta.get("deltas", [])}
+        consumed = {d["path"] for d in meta["deltas"]}
         read_buckets = (list(meta["buckets"]) if touched is None
                         else [str(b) for b in touched])
 
         def build(m: dict) -> dict | None:
-            if (m.get("n_buckets") or self.n_buckets) != self.n_buckets:
+            if m["n_buckets"] != self.n_buckets:
                 return None  # rebucketed underneath: the fold's buckets
                 # are hashed with the OLD modulus — abort (exact: the
                 # rebucket consumed every delta this fold read)
-            m_paths = {d["path"] if isinstance(d, dict) else d
-                       for d in m.get("deltas", [])}
-            if not consumed <= m_paths:
+            if not consumed <= {d["path"] for d in m["deltas"]}:
                 return None
             if any(m["buckets"].get(b) != meta["buckets"].get(b)
                    for b in read_buckets):
@@ -1400,7 +1429,7 @@ class ParquetLake:
                 # output (or drop out entirely when the fold left them
                 # empty)
                 new_buckets = dict(m["buckets"])
-                bucket_routes = dict(m.get("bucket_routes", {}))
+                bucket_routes = dict(m["bucket_routes"])
                 for b in sorted(set(touched) | written):
                     if b in written:
                         new_buckets[str(b)] = os.path.join(
@@ -1420,13 +1449,9 @@ class ParquetLake:
                 "extra_columns": list(m["extra_columns"]),
                 "buckets": new_buckets,
                 "bucket_routes": bucket_routes,
-                "deltas": [
-                    d for d in m.get("deltas", [])
-                    if (d["path"] if isinstance(d, dict) else d)
-                    not in consumed
-                ],
-                **{k: v for k, v in m.items()
-                   if k in ("batch_wm", "recent_batch_ids", "batch_ids")},
+                "deltas": [d for d in m["deltas"] if d["path"] not in consumed],
+                "batch_wm": m["batch_wm"],
+                "recent_batch_ids": m["recent_batch_ids"],
             }
 
         new_meta = self._commit_with_rebase(meta, build)
@@ -1460,10 +1485,9 @@ class ParquetLake:
         meta = self.current_meta() or {}
         parts = []
         for d in meta.get("deltas", []):
-            entry = d if isinstance(d, dict) else {"path": d, "format": "flat"}
-            if entry.get("format") != "parsed":
+            if d["format"] != "parsed":
                 continue  # folded deltas hold only ok rows
-            dp = os.path.join(self.table_dir, entry["path"])
+            dp = os.path.join(self.table_dir, d["path"])
             df = (
                 self.spark.read.option("mergeSchema", "true")
                 .option("basePath", dp).parquet(dp)
@@ -1592,14 +1616,12 @@ class ParquetLake:
             if not (f_name.startswith("snap-") and f_name.endswith(".json")):
                 continue
             try:
-                with open(os.path.join(self._meta_dir, f_name)) as f:
-                    m = json.load(f)
+                m = self._load_manifest(int(f_name[len("snap-"):-len(".json")]))
             except OSError:
                 continue
-            for p in m.get("buckets", {}).values():
+            for p in m["buckets"].values():
                 referenced.add(p.split(os.sep + BUCKET_COL + "=", 1)[0])
-            for d in m.get("deltas", []):
-                referenced.add(d["path"] if isinstance(d, dict) else d)
+            referenced.update(d["path"] for d in m["deltas"])
 
         removed_dirs = 0
         data_root = os.path.join(self.table_dir, "data")
@@ -1642,7 +1664,7 @@ class ParquetLake:
         current manifest (unchanged when there was nothing to fold or the
         fold aborted)."""
         meta = self.current_meta()
-        if meta is None or not meta.get("deltas"):
+        if meta is None or not meta["deltas"]:
             return meta if meta is not None else self._empty_meta()
         if tier == "minor":
             return self._compact_minor(meta)
@@ -1685,7 +1707,7 @@ class ParquetLake:
         meta = self.current_meta()
         if meta is None:
             meta = self._empty_meta()
-        if (meta.get("n_buckets") or self.n_buckets) == new_n_buckets:
+        if meta["n_buckets"] == new_n_buckets:
             self.n_buckets = new_n_buckets
             return meta  # already at the requested count: no-op
 
@@ -1758,8 +1780,8 @@ class ParquetLake:
                     for b in sorted(written)
                 },
                 "deltas": [],
-                **{k: v for k, v in m.items()
-                   if k in ("batch_wm", "recent_batch_ids", "batch_ids")},
+                "batch_wm": m["batch_wm"],
+                "recent_batch_ids": m["recent_batch_ids"],
             }
 
         new_meta = self._commit_with_rebase(meta, build)
@@ -1793,13 +1815,8 @@ class ParquetLake:
         (exclude=False — the subset-major fold's input) or everything BUT
         them (exclude=True — the untouched side of the subset MoR read,
         which streams through with no join at all)."""
-        bucket_routes = meta.get("bucket_routes", {})
-
         def bucket_has_route(b: str) -> bool:
-            if route is None:
-                return True
-            routes = bucket_routes.get(b)
-            return routes is None or route in routes  # None: pre-route manifest
+            return route is None or route in meta["bucket_routes"][b]
 
         def bucket_selected(b: str) -> bool:
             if bucket_set is None:
@@ -1810,15 +1827,6 @@ class ParquetLake:
             b for b in meta["buckets"]
             if bucket_has_route(b) and bucket_selected(b)
         ]
-        if route is not None and any(b not in bucket_routes for b in selected):
-            # a bucket with no manifest route list was written before
-            # route partitioning: it has no per-tenant layout, and
-            # silently returning every tenant's rows would break the
-            # isolation contract, so refuse loudly
-            raise ValueError(
-                "route-scoped read on a base written without route "
-                "partitioning; run a compaction on the current engine first"
-            )
         base = self._read_bucket_tree(
             [os.path.join(self.table_dir, meta["buckets"][b]) for b in selected],
             self._row_schema(extra_cols),
@@ -1852,21 +1860,13 @@ class ParquetLake:
         the delta side is never bucket-filtered here — a subset fold
         consumes every outstanding delta whole."""
         bucket_set = None if buckets is None else {int(b) for b in buckets}
-
-        def delta_has_route(d: dict) -> bool:
-            return self._delta_matches_route(d, route)
-
-        deltas = [
-            d if isinstance(d, dict) else {"path": d, "format": "flat"}
-            for d in meta.get("deltas", [])
-        ]
         base = self._read_base(meta, extra_cols, route=route, bucket_set=bucket_set)
 
         # each delta is its own partitioned root — read separately (several
         # partitioned roots in one load trip partition discovery)
         delta_parts = []
-        for d in deltas:
-            if not delta_has_route(d):
+        for d in meta["deltas"]:
+            if not self._delta_matches_route(d, route):
                 continue
             dp = os.path.join(self.table_dir, d["path"])
             if d["format"] == "parsed":
@@ -1909,27 +1909,26 @@ class ParquetLake:
         tenant's own backlog, not the whole table's. Commits record each
         delta's byte count in its manifest entry (ok-partition only for
         parsed deltas — dead letters never merge), so the steady-state
-        read sums a handful of manifest integers; a walk happens only for
-        legacy entries without the field."""
-        total = 0
-        for d in meta.get("deltas", []):
-            if not self._delta_matches_route(d, route):
-                continue
-            if isinstance(d, dict) and "bytes" in d:
-                total += d["bytes"]
-                continue
-            p = os.path.join(self.table_dir, d["path"] if isinstance(d, dict) else d)
-            total += self._tree_bytes(p)
-        return total
+        read sums a handful of manifest integers and walks no files."""
+        return sum(
+            d["bytes"] for d in meta["deltas"]
+            if self._delta_matches_route(d, route)
+        )
 
     @staticmethod
-    def _delta_matches_route(d, route: str | None) -> bool:
-        """Manifest-level delta pruning for route-scoped reads; an entry
-        without a route list (pre-route manifest) matches every route."""
-        if route is None:
-            return True
-        routes = d.get("routes") if isinstance(d, dict) else None
-        return routes is None or route in routes
+    def _delta_matches_route(d: dict, route: str | None) -> bool:
+        """Manifest-level delta pruning for route-scoped reads: a delta
+        whose route list lacks X holds no row of route X."""
+        return route is None or route in d["routes"]
+
+    @staticmethod
+    def _bucket_pruned(meta: dict, buckets: set[int]) -> dict:
+        """`meta` keeping only the deltas whose touched-bucket list meets
+        `buckets`: any other delta holds no version of a key hashed into
+        them."""
+        return dict(meta, deltas=[
+            d for d in meta["deltas"] if not buckets.isdisjoint(d["buckets"])
+        ])
 
     def _read_mor_subset(
         self, meta: dict, extra_cols: list[str], route: str | None,
@@ -2058,36 +2057,31 @@ class ParquetLake:
         )
         extra_cols = list(meta["extra_columns"]) if meta else []
         unsigned_possible = False
-        if not meta or (not meta["buckets"] and not meta.get("deltas")):
+        if not meta or (not meta["buckets"] and not meta["deltas"]):
             df = self.spark.createDataFrame([], self._row_schema(extra_cols)).drop(BUCKET_COL)
         else:
             # merge-on-read: several versions of a key may coexist across
-            # base + deltas until compaction. Strategy by delta size,
-            # decided from the MANIFEST alone (delta bytes + touched-bucket
-            # lists) before any scan is constructed: small backlog (the
-            # steady state between compactions) => broadcast key-set join
-            # against ONLY the delta-touched buckets, untouched buckets
-            # stream through join-free (_read_mor_subset; legacy manifests
-            # without bucket lists fall back to the whole-base broadcast
-            # join); large backlog (or no base) => the global LWW
-            # aggregate.
+            # base + deltas until compaction. Three strategies, chosen
+            # from the MANIFEST alone (delta bytes + touched-bucket lists)
+            # before any scan is constructed: a small backlog over a base
+            # (the steady state between compactions) => broadcast key-set
+            # join against ONLY the delta-touched buckets, untouched
+            # buckets stream through join-free (_read_mor_subset); a large
+            # backlog over a base => the global LWW aggregate; a base or a
+            # backlog alone => a plain scan or the aggregate over it.
             # migration-exact tenant reads size and prune the delta side
             # WITHOUT the route (any route's newer version can evict this
             # tenant's key) and filter winners on route afterwards
             migration_exact = route is not None and not self.route_stable_keys
             prune_route = None if migration_exact else route
-            touched = (
-                self._delta_touched_buckets(meta, route=prune_route)
-                if meta.get("deltas") and meta["buckets"]
-                else None
-            )
             if (
-                touched is not None
+                meta["deltas"] and meta["buckets"]
                 and self._delta_bytes(meta, route=prune_route)
                 <= self.broadcast_delta_bytes
             ):
                 df, unsigned_possible = self._read_mor_subset(
-                    meta, extra_cols, route, touched,
+                    meta, extra_cols, route,
+                    self._delta_touched_buckets(meta, route=prune_route),
                     migration_exact=migration_exact,
                 )
             else:
@@ -2106,11 +2100,6 @@ class ParquetLake:
                     df = base  # compacted table: plain pruned scan, no agg
                 elif base is None:
                     df = resolve_lww(delta)
-                elif (
-                    self._delta_bytes(meta, route=prune_route)
-                    <= self.broadcast_delta_bytes
-                ):
-                    df = self._merge_read_broadcast(base, delta)
                 else:
                     df = resolve_lww(
                         base.unionByName(delta, allowMissingColumns=True)
@@ -2172,7 +2161,7 @@ class ParquetLake:
           PushedFilters, skipping row groups within the bucket);
         * outstanding deltas are manifest-pruned by their touched-bucket
           lists: a delta whose backlog cannot contain the key's bucket is
-          never read (legacy entries without bucket lists stay in);
+          never read;
         * LWW resolves over the surviving handful of rows — max over the
           key's base row and its delta versions, the same associativity
           argument as every other read path.
@@ -2227,22 +2216,15 @@ class ParquetLake:
         if (
             not keys
             or not meta
-            or (not meta["buckets"] and not meta.get("deltas"))
+            or (not meta["buckets"] and not meta["deltas"])
         ):
             return empty
         wset = set(
-            self.key_buckets(keys, n_buckets=meta.get("n_buckets")).values()
+            self.key_buckets(keys, n_buckets=meta["n_buckets"]).values()
         )
-        wanted = sorted(wset)
-        sub = dict(meta)
-        sub["deltas"] = [
-            d
-            for d in meta.get("deltas", [])
-            if not isinstance(d, dict)
-            or "buckets" not in d
-            or not wset.isdisjoint(int(x) for x in d["buckets"])
-        ]
-        base, delta = self._read_split(sub, extra_cols, buckets=wanted)
+        base, delta = self._read_split(
+            self._bucket_pruned(meta, wset), extra_cols, buckets=sorted(wset)
+        )
 
         if len(keys) <= self.LOOKUP_PREDICATE_MAX:
             pred = None
@@ -2344,22 +2326,15 @@ class ParquetLake:
         changing the modulus is a copy-on-write data commit (older lakes
         may hold them): its rows never reached a delta, so the range is
         refused rather than read short."""
-        prev = {
-            d["path"] if isinstance(d, dict) else d
-            for d in (from_meta or {}).get("deltas", [])
-        }
+        prev = {d["path"] for d in (from_meta or {}).get("deltas", [])}
         prev_meta = from_meta or {}
         entries: list[dict] = []
         for m in chain:
-            deltas = [
-                d if isinstance(d, dict) else {"path": d, "format": "flat"}
-                for d in m.get("deltas", [])
-            ]
-            cur = {d["path"] for d in deltas}
+            cur = {d["path"] for d in m["deltas"]}
             removed = prev - cur
             if not removed:
-                modulus = m.get("n_buckets")
-                if (m.get("buckets", {}) != prev_meta.get("buckets", {})
+                modulus = m["n_buckets"]
+                if (m["buckets"] != prev_meta.get("buckets", {})
                         and prev_meta.get("n_buckets", modulus) == modulus):
                     raise ValueError(
                         f"snapshot {m['id']} rewrote base buckets without "
@@ -2369,7 +2344,7 @@ class ParquetLake:
                         "changes from that commit onward"
                     )
                 entries.extend(
-                    d for d in deltas
+                    d for d in m["deltas"]
                     if d["path"] not in prev and not d.get("merged")
                 )
             prev = cur
@@ -2491,7 +2466,7 @@ class ParquetLake:
         parts = []
         for d in entries:
             dp = os.path.join(self.table_dir, d["path"])
-            if d.get("format") == "parsed":
+            if d["format"] == "parsed":
                 parts.append(
                     self._flatten_parsed_delta(
                         dp, extra_cols, route=prune_route
@@ -2530,17 +2505,14 @@ class ParquetLake:
 
         # -- prior state of the changed keys, read from ONLY the buckets
         # the range touched (under the FROM snapshot's modulus). When no
-        # fold/rebucket in the range changed the modulus and every entry
-        # carries a bucket list, the union of the manifest lists IS the
-        # touched set (zero extra jobs); otherwise recompute the buckets
-        # of the changed keys with the engine's own bucket expression —
-        # one tiny job over the O(changes) winners, collecting <= n_A ints.
-        n_a = from_meta.get("n_buckets") or self.n_buckets
-        same_modulus = all(
-            (m.get("n_buckets") or self.n_buckets) == n_a for m in chain
-        )
-        if same_modulus and all("buckets" in d for d in entries):
-            wset = {int(b) for d in entries for b in d["buckets"]}
+        # rebucket in the range changed the modulus, the union of the
+        # entries' manifest bucket lists IS the touched set (zero extra
+        # jobs); across a rebucket, recompute the buckets of the changed
+        # keys with the engine's own bucket expression — one tiny job
+        # over the O(changes) winners, collecting <= n_A ints.
+        n_a = from_meta["n_buckets"]
+        if all(m["n_buckets"] == n_a for m in chain):
+            wset = {b for d in entries for b in d["buckets"]}
         else:
             wset = {
                 int(r["b"])
@@ -2548,15 +2520,9 @@ class ParquetLake:
                     bucket_expr(n_a).alias("b")
                 ).distinct().collect()
             }
-        sub = dict(from_meta)
-        sub["deltas"] = [
-            d for d in from_meta.get("deltas", [])
-            if not isinstance(d, dict)
-            or "buckets" not in d
-            or not wset.isdisjoint(int(b) for b in d["buckets"])
-        ]
         base, delta = self._read_split(
-            sub, extra_cols, route=prune_route, buckets=sorted(wset)
+            self._bucket_pruned(from_meta, wset), extra_cols,
+            route=prune_route, buckets=sorted(wset),
         )
         if base is None and delta is None:
             prior = None
@@ -2585,11 +2551,7 @@ class ParquetLake:
         # O(changes). Semi-prune prior down to the changed keys first;
         # small ranges (manifest byte counts, the read() switch) broadcast
         # both sides of the probe — the base-side scan never shuffles.
-        small = (
-            sum(int(d.get("bytes", self.broadcast_delta_bytes + 1))
-                for d in entries)
-            <= self.broadcast_delta_bytes
-        )
+        small = sum(d["bytes"] for d in entries) <= self.broadcast_delta_bytes
         wkeys = winners.select(*KEY_COLS)
         if small:
             wkeys = F.broadcast(wkeys)

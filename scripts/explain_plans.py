@@ -17,6 +17,7 @@ from __future__ import annotations
 import contextlib
 import io
 import os
+import shutil
 import sys
 import tempfile
 
@@ -33,20 +34,30 @@ def formatted(df) -> str:
 
 
 def main() -> int:
-    from pyspark.sql import functions as F
-
-    from pyspark_cdc import generate
-    from pyspark_cdc.order import CARRY_COLS
-    from pyspark_cdc.parse import parse_envelopes
-    from pyspark_cdc.queries import REGISTRY
-    from pyspark_cdc.schemas import KAFKA_SHAPE, KEY_COLS
     from pyspark_cdc.session import get_spark
-    from pyspark_cdc.sink import BUCKET_COL, ParquetLake, bucket_expr
 
     spark = get_spark(cores=8)
     spark.sparkContext.setLogLevel("ERROR")
-
     work = tempfile.mkdtemp(prefix="plans_")
+    try:
+        return write_plans(spark, work)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def write_plans(spark, work: str) -> int:
+    """Build every plan over a log and lakes under `work` and write
+    PLANS.md; returns 1 if any asserted property fails, else 0."""
+    from pyspark.sql import functions as F
+
+    from pyspark_cdc import generate
+    from pyspark_cdc.order import ORD_COLS
+    from pyspark_cdc.parse import parse_envelopes
+    from pyspark_cdc.queries import REGISTRY
+    from pyspark_cdc.schemas import DOMAIN_COLS, KAFKA_SHAPE
+    from pyspark_cdc.sink import (BUCKET_COL, ROUTE_COL, ParquetLake,
+                                  bucket_expr, resolve_lww)
+
     log_dir = os.path.join(work, "log")
     generate.write_log(spark, log_dir, n_events=20_000, n_keys=2_000, n_files=8)
 
@@ -97,17 +108,10 @@ def main() -> int:
     # and folds resolve LWW with — the one-key-shuffle claim)
     src = (
         parsed.filter(F.col("status") == "ok")
-        .select(*KEY_COLS, *CARRY_COLS)
+        .select(*DOMAIN_COLS, "effective_op", "extras", ROUTE_COL, *ORD_COLS)
         .withColumn(BUCKET_COL, bucket_expr(16))
     )
-    from pyspark_cdc.order import packed_ord
-
-    row = F.struct(*[F.col(c) for c in src.columns if c not in KEY_COLS])
-    merged = (
-        src.groupBy(*KEY_COLS)
-        .agg(F.max_by(row, packed_ord()).alias("_w"))
-        .select(*KEY_COLS, "_w.*")
-    )
+    merged = resolve_lww(src)
     plan = formatted(merged)
     n_exchanges = plan.count("hashpartitioning(repo")
     # The ordering tuple is packed into ONE binary scalar (order.packed_ord,

@@ -233,7 +233,8 @@ def test_empty_range_and_validation(spark, tmp_path):
     # delta) left no delta trail: the range is refused, not read short
     meta = lake.current_meta()
     lake._commit_snapshot(dict(meta, id=b + 1, parent=b,
-                               buckets={"0": "data/s-cow/__bucket=0"}))
+                               buckets={"0": "data/s-cow/__bucket=0"},
+                               bucket_routes={"0": ["t"]}))
     with pytest.raises(ValueError, match="copy-on-write"):
         lake.read_changes(b, b + 1)
 

@@ -251,9 +251,3 @@ def test_fold_abort_detection_under_concurrent_ingest():
     after_abort = {"deltas": [{"path": "data/d1"}, {"path": "data/d2"},
                               {"path": "data/d3"}]}
     assert fold_aborted(before, after_abort) is True
-
-    # legacy string-entry manifests
-    assert fold_aborted({"deltas": ["data/d1"]},
-                        {"deltas": ["data/d1"]}) is True
-    assert fold_aborted({"deltas": ["data/d1"]},
-                        {"deltas": ["data/m1"]}) is False

@@ -12,9 +12,8 @@ from conftest import assert_state_equal
 from pyspark.sql import functions as F
 
 from pyspark_cdc import generate, oracle
-from pyspark_cdc.order import lww_aggregate
 from pyspark_cdc.parse import parse_envelopes
-from pyspark_cdc.sink import ParquetLake
+from pyspark_cdc.sink import ParquetLake, resolve_lww
 from pyspark_cdc.stream import process_batch, replay_batch
 from pyspark_cdc.udfs import extract_doc_json, sha256_udf
 
@@ -105,11 +104,14 @@ def test_no_row_at_a_time_python_in_plans(spark, tmp_path):
     the hot path must contain no BatchEvalPython (row-wise Python) node;
     ArrowEvalPython (pandas UDF) is the only Python allowed."""
     log = generate.edge_case_df(spark)
-    deduped = lww_aggregate(parse_envelopes(log))
+    deduped = resolve_lww(parse_envelopes(log).filter("status = 'ok'"))
     plan = deduped._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan
     # and the parse hot path is pure JVM: not even ArrowEvalPython
     assert "ArrowEvalPython" not in plan
+    # the LWW aggregate combines map-side before its exchange, so a hot
+    # key ships one candidate per task instead of all its rows
+    assert "partial_max_by" in plan, plan
 
     udf_plan = (
         log.select(sha256_udf(F.col("value")))

@@ -1,15 +1,15 @@
-"""J1 last-writer-wins: shuffled input order, same-lsn tx tie-break, the
-map-side partial aggregate, and the fused ingest (LWW resolved inside the
-lake's read and folds) against the pure-Python oracle."""
+"""J1 last-writer-wins: shuffled input order, same-lsn tx tie-break
+(sink.resolve_lww over parsed rows), and the fused ingest (LWW resolved
+inside the lake's read and folds) against the pure-Python oracle."""
 
 from __future__ import annotations
 
 import json
 import random
 
-from pyspark_cdc.order import lww_aggregate
 from pyspark_cdc.parse import parse_envelopes
 from pyspark_cdc.schemas import KAFKA_SHAPE
+from pyspark_cdc.sink import resolve_lww
 
 
 def _log(spark, events):
@@ -18,6 +18,10 @@ def _log(spark, events):
         for i, v in enumerate(events)
     ]
     return parse_envelopes(spark.createDataFrame(recs, schema=KAFKA_SHAPE))
+
+
+def _lww(parsed):
+    return resolve_lww(parsed.filter("status = 'ok'"))
 
 
 def _env(repo, path, lsn, tx=0, content=None, op="u"):
@@ -39,7 +43,7 @@ def test_lww_shuffled_order(spark):
     rnd.shuffle(events)
     out = {
         (r["repo"], r["path"]): r["content"]
-        for r in lww_aggregate(_log(spark, events)).collect()
+        for r in _lww(_log(spark, events)).collect()
     }
     assert len(out) == 20
     assert all(v == "v10" for v in out.values())
@@ -50,20 +54,8 @@ def test_lww_tx_tiebreak(spark):
         _env("r", "p", 5, tx=1, content="first"),
         _env("r", "p", 5, tx=2, content="second"),
     ]
-    rows = lww_aggregate(_log(spark, events)).collect()
+    rows = _lww(_log(spark, events)).collect()
     assert len(rows) == 1 and rows[0]["content"] == "second"
-
-
-def test_lww_plan_has_partial_aggregate(spark):
-    """The scale property: max_by LWW must be a hash aggregate with a
-    map-side partial (two HashAggregate nodes around the exchange), so hot
-    keys combine before the shuffle."""
-    parsed = _log(spark, [_env("r", "p", 1)])
-    plan = lww_aggregate(parsed)._jdf.queryExecution().executedPlan().toString()
-    # max_by over a struct ordering compiles to SortAggregate with a
-    # partial_max_by BEFORE the exchange — the map-side combine that makes
-    # hot keys ship one candidate per task instead of all their rows.
-    assert "partial_max_by" in plan, plan
 
 
 def test_fused_merge_equals_oracle(spark, tmp_path):

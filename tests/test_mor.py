@@ -108,9 +108,8 @@ def test_compaction_expires_snapshots_and_orphan_dirs(spark, tmp_path):
     for f in snaps:
         m = _json.load(open(os.path.join(meta_dir, f)))
         referenced |= {p.split(os.sep + BUCKET_COL + "=", 1)[0]
-                       for p in m.get("buckets", {}).values()}
-        referenced |= {d["path"] if isinstance(d, dict) else d
-                       for d in m.get("deltas", [])}
+                       for p in m["buckets"].values()}
+        referenced |= {d["path"] for d in m["deltas"]}
     on_disk = {os.path.join("data", d)
                for d in os.listdir(str(tmp_path / "mor" / "data"))}
     assert on_disk <= referenced
@@ -703,11 +702,10 @@ def test_subset_mor_read_joins_only_touched_buckets(spark, tmp_path):
     """The read-path twin of the subset major: between compactions the
     steady-state MoR read broadcast-joins ONLY the base buckets the
     outstanding deltas touch (the manifest's per-delta bucket lists);
-    untouched buckets stream through join-free. All three paths must agree
-    row-for-row — the subset broadcast read (the new default), the
-    whole-base broadcast join (the legacy-manifest fallback) and the
-    global LWW aggregate — and equal the oracle's replay of the same
-    batches. The path-level proof is in inputFiles(): the join side's
+    untouched buckets stream through join-free. Both strategies over a
+    base plus backlog must agree row-for-row — the subset broadcast read
+    (the default) and the global LWW aggregate — and equal the oracle's
+    replay of the same batches. The path-level proof is in inputFiles(): the join side's
     base scan lists ONLY touched-bucket files, the pass-through side
     only the rest, and together they cover the base exactly."""
     from pyspark_cdc.schemas import KAFKA_SHAPE
@@ -754,16 +752,12 @@ def test_subset_mor_read_joins_only_touched_buckets(spark, tmp_path):
     touched = ParquetLake._delta_touched_buckets(meta)
     assert set(touched) == {touched_bucket, kb[new_key]}
 
-    # 1) the three strategies agree row-for-row and with the oracle
+    # 1) the strategies agree row-for-row and with the oracle
     got = _rows(lake)  # default path: subset broadcast (tiny delta bytes)
     assert got[tk[0]]["content"] == "v2000"
     assert got[tk[2]]["content"] == "v2300"
     assert got[new_key]["content"] == "v2200"
     assert tk[1] not in got
-
-    lake._delta_touched_buckets = lambda meta, route=None: None  # legacy: no bucket lists
-    assert _rows(lake) == got  # whole-base broadcast join fallback
-    del lake._delta_touched_buckets
 
     lake.broadcast_delta_bytes = -1
     assert _rows(lake) == got  # global LWW aggregate

@@ -8,6 +8,8 @@ from __future__ import annotations
 import random
 import uuid
 
+import pytest
+
 from pyspark_cdc import generate
 from pyspark_cdc.sink import ParquetLake, bucket_expr, key_bucket_of
 from pyspark_cdc.stream import process_batch
@@ -96,3 +98,17 @@ def test_key_bucket_of_matches_bucket_expr(spark):
         bad = [(r["repo"], r["path"]) for r in got
                if key_bucket_of((r["repo"], r["path"]), n) != r["b"]]
         assert not bad, (n, bad[:5])
+
+
+def test_non_string_key_element_raises_type_error(spark, tmp_path):
+    """Key columns are strings: a key element that is neither a str nor
+    None (an int path taken from a JSON key, say) is refused with a
+    TypeError naming the key, by key_bucket_of and by the lake's
+    key_buckets that lookup_many hashes with — not an AttributeError from
+    inside the hash."""
+    with pytest.raises(TypeError, match=r"\('r', 7\)"):
+        key_bucket_of(("r", 7), 8)
+    lake = ParquetLake(spark, str(tmp_path / "lake"), n_buckets=8)
+    with pytest.raises(TypeError, match="got int 7"):
+        lake.key_buckets([("r", "p"), ("r", 7)])
+    assert key_bucket_of(("r", None), 8) == key_bucket_of(("r",), 8)

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 import pytest
 from conftest import rows_by_key
@@ -194,29 +195,66 @@ def test_reopen_adopts_manifest_n_buckets(spark, tmp_table):
     assert reopened.applied_batch_count() == len(reopened.applied_batch_ids()) == 2
 
 
-def test_route_scoped_read_on_preroute_base_raises(spark, tmp_table):
-    """A base written without route partitioning cannot honor a
-    tenant-scoped read; silently returning every tenant's rows would
-    break the isolation contract, so read(route=X) must refuse loudly
-    (round-4 review). Plain read() keeps working (route backfills null)."""
-    lake = ParquetLake(spark, tmp_table, n_buckets=2,
-                       compact_every=1, major_every=1)
-    _merge(lake, [_env("r", "p", 1, content="v1")], 0)
-    meta = lake.current_meta()
-    # simulate a pre-route (round-2-era) base: rewrite one bucket dir
-    # without route dirs and strip the manifest's route lists
-    (bucket, rel), = meta["buckets"].items()
-    flat = spark.read.parquet(os.path.join(tmp_table, rel)).drop("route")
-    new_rel = os.path.join("data", "preroute_b" + bucket)
-    flat.write.parquet(os.path.join(tmp_table, new_rel))
-    meta2 = dict(meta, id=meta["id"] + 1, parent=meta["id"],
-                 buckets={bucket: new_rel})
-    meta2.pop("bucket_routes", None)
-    lake._commit_snapshot(meta2)
+def _string_entries(m):
+    m["deltas"] = [d["path"] for d in m["deltas"]]
 
-    assert rows_by_key(lake.read())[("r", "p")]["content"] == "v1"
-    with pytest.raises(ValueError, match="route-scoped read"):
-        lake.read(route="t").collect()
+
+def _bucketless_entry(m):
+    m["deltas"][0].pop("buckets")
+
+
+def _batch_ids_list(m):
+    m["batch_ids"] = list(range(m.pop("batch_wm") + 1))
+    m.pop("recent_batch_ids")
+
+
+def _unrouted_bucket(m):
+    m["bucket_routes"].pop(sorted(m["buckets"])[0])
+
+
+@pytest.fixture(scope="module")
+def folded_lake(spark, tmp_path_factory):
+    """A lake with a folded base and one outstanding parsed delta."""
+    table = str(tmp_path_factory.mktemp("dialect") / "lake")
+    lake = ParquetLake(spark, table, n_buckets=2, compact_every=None)
+    _merge(lake, [_env("r", "p", 1), _env("r", "q", 1), _env("s", "p", 1)], 0)
+    lake.compact_now(tier="major")
+    _merge(lake, [_env("r", "p", 2)], 1)
+    return table
+
+
+@pytest.mark.parametrize("legacy, problem", [
+    pytest.param(_string_entries, "delta entry 'data/.*' that is not a dict",
+                 id="string_delta_entry"),
+    pytest.param(_bucketless_entry, "delta entry 'data/.*' with no buckets",
+                 id="entry_without_buckets"),
+    pytest.param(_batch_ids_list, "`batch_ids` list", id="batch_ids"),
+    pytest.param(_unrouted_bucket,
+                 r"base buckets \['\d'\] with no bucket_routes entry",
+                 id="bucket_without_routes"),
+])
+def test_older_manifest_shapes_are_refused(spark, tmp_path, folded_lake,
+                                           legacy, problem):
+    """The lake reads one manifest dialect. A manifest in a shape the
+    engine no longer writes — string delta entries, an entry with no
+    bucket list, the `batch_ids` list from before the batch watermark, a
+    base bucket with no route list — is refused on load with a
+    ValueError naming the snapshot and the rebuild remedy: opening the
+    lake and read() both raise, instead of reading it some other way."""
+    table = str(tmp_path / "lake")
+    shutil.copytree(folded_lake, table)
+    lake = ParquetLake(spark, table)
+    meta = lake.current_meta()
+    assert meta["deltas"] and meta["buckets"]
+    legacy(meta)
+    meta.update(id=meta["id"] + 1, parent=meta["id"])
+    lake._commit_snapshot_unlocked(meta)
+
+    refused = rf"snapshot {meta['id']} of the lake at .*{problem}.*export_changes"
+    with pytest.raises(ValueError, match=refused):
+        ParquetLake(spark, table)
+    with pytest.raises(ValueError, match=refused):
+        lake.read()
 
 
 def test_clustered_lww_same_winners_single_exchange(spark, tmp_path):
