@@ -56,6 +56,7 @@ missing key is a no-op, revive-after-delete re-inserts
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -175,7 +176,7 @@ class CommitConflict(Exception):
 DLQ_STATUSES = ("ok", "tombstone", "malformed", "unknown_op",
                 "bad_payload", "missing_key", "missing_route")
 
-# The columns _flatten_parsed_delta reads from a parsed delta, typed as
+# The columns _read_delta reads from a parsed delta, typed as
 # parse.parse_envelopes writes them (`status` is the partition column).
 # A static read schema: no per-delta schema-inference job.
 PARSED_DELTA_SCHEMA = T.StructType([
@@ -362,7 +363,6 @@ class ParquetLake:
         tombstone_horizon_lsn: int | None = None,
         broadcast_delta_bytes: int = 32 * 1024 * 1024,
         major_every: int = 4,
-        full_major: bool = False,
         minhash_bands: bool = False,
         orphan_grace_sec: float = 0.0,
         snapshot_retention: int = SNAPSHOT_RETENTION,
@@ -392,10 +392,6 @@ class ParquetLake:
         # every compact_every*major_every batches, while the read path
         # sees at most compact_every-1 raw deltas plus one merged one.
         self.major_every = major_every
-        # full_major=True forces every MAJOR fold to rewrite the whole
-        # base (the pre-subset behavior) — kept for the subset≡full
-        # equivalence tests and as an operational escape hatch.
-        self.full_major = full_major
         # minhash_bands=True materializes the incremental-dedup LSH band
         # signature columns (signatures.SIG_COLS) on every row version
         # that WINS a fold or read (fill_band_columns after each LWW
@@ -684,16 +680,11 @@ class ParquetLake:
         """Commit one manifest with optimistic concurrency control: under
         the commit lock, the table must still be at meta['parent'] —
         another writer having advanced it raises CommitConflict carrying
-        the fresh manifest (callers rebase via _commit_with_rebase).
-        Re-committing the CURRENT snapshot byte-identically is a no-op
-        (idempotent), so retries and wrap-the-return-value callers are
-        safe."""
+        the fresh manifest (callers rebase via _commit_with_rebase)."""
         with self._commit_lock():
             current = self.current_meta()
             current_id = current["id"] if current is not None else 0
             if current_id != (meta.get("parent") or 0):
-                if current_id == meta["id"] and current == meta:
-                    return  # idempotent re-commit of the current snapshot
                 raise CommitConflict(current if current is not None else
                                      self._empty_meta(), meta)
             self._commit_snapshot_unlocked(meta)
@@ -923,31 +914,31 @@ class ParquetLake:
         The explicit schema and the session's listing threshold
         (session.ENGINE_SQL_CONF) leave building this DataFrame without
         a Spark job: no footer read, no parallel listing."""
-        if not paths:
-            return None
         groups: dict[str, list[str]] = {}
         for p in paths:
             groups.setdefault(os.path.dirname(p), []).append(p)
-        parts = [
+        return self._union([
             self.spark.read.schema(schema)
             .option("basePath", parent)
             .parquet(*sorted(ps))
             for parent, ps in sorted(groups.items())
-        ]
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-        return df
+        ])
 
-    def _read_flat_delta(self, dp: str, extra_cols: list[str],
-                         route: str | None = None) -> DataFrame:
-        """A flat delta root (a minor fold's output):
-        (bucket, route)-partitioned like the base, read under the
-        manifest's row schema with the bucket column dropped."""
-        flat = self.spark.read.schema(self._row_schema(extra_cols)).parquet(dp)
-        if route is not None:
-            flat = flat.filter(F.col(ROUTE_COL) == route)
-        return flat.drop(BUCKET_COL)
+    @staticmethod
+    def _union(parts: list[DataFrame]) -> DataFrame | None:
+        """unionByName of `parts` (a column some part lacks reads as
+        null), or None when there are none."""
+        if not parts:
+            return None
+        return functools.reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
+        )
+
+    def _empty_rows(self, extra_cols: list[str]) -> DataFrame:
+        """A zero-row frame in the flat row shape (bucket column dropped)."""
+        return self.spark.createDataFrame(
+            [], self._row_schema(extra_cols)
+        ).drop(BUCKET_COL)
 
     @staticmethod
     def _obs_get(obs, out_dir: str, **defaults) -> dict:
@@ -1116,17 +1107,25 @@ class ParquetLake:
         stats["snapshot"] = new_meta["id"]
         return stats
 
-    def _flatten_parsed_delta(
-        self, dp: str, extra_cols: list[str], route: str | None = None
+    def _read_delta(
+        self, entry: dict, extra_cols: list[str], route: str | None = None
     ) -> DataFrame:
-        """Parsed-format delta -> flat row shape (the base schema): keep
-        ok rows, turn effective_op into the tombstone flag, flatten extras
-        via the manifest's column list (complete — every delta recorded
-        its observed keys at commit), and null the payload of deleted rows
-        exactly like the flat write path. A route predicate here is a DATA
-        filter over an already manifest-pruned, compact_every-bounded
-        backlog (the status partition dirs still prune dead letters);
-        only the BASE carries route partition dirs."""
+        """One delta entry -> the flat row shape (the base schema, bucket
+        column dropped). A flat delta (a minor fold's output) is
+        (bucket, route)-partitioned like the base and reads under the
+        manifest's row schema. A parsed delta keeps its ok rows, turns
+        effective_op into the tombstone flag, flattens extras via the
+        manifest's column list (complete — every delta recorded its
+        observed keys at commit), and nulls the payload of deleted rows.
+        On a parsed delta a route predicate is a DATA filter over an
+        already manifest-pruned, compact_every-bounded backlog (the
+        status partition dirs still prune dead letters)."""
+        dp = os.path.join(self.table_dir, entry["path"])
+        if entry["format"] != "parsed":
+            flat = self.spark.read.schema(self._row_schema(extra_cols)).parquet(dp)
+            if route is not None:
+                flat = flat.filter(F.col(ROUTE_COL) == route)
+            return flat.drop(BUCKET_COL)
         df = (
             self.spark.read.schema(PARSED_DELTA_SCHEMA).parquet(dp)
             .filter(F.col("status") == "ok")
@@ -1173,7 +1172,7 @@ class ParquetLake:
             or meta.get("minor_count", 0) >= self.major_every - 1
         )
         if is_major:
-            return self._compact(meta, full=self.full_major)
+            return self._compact(meta)
         return self._compact_minor(meta)
 
     def _compact_minor(self, meta: dict) -> dict:
@@ -1185,62 +1184,35 @@ class ParquetLake:
         the base) may expire it past the horizon. LWW associativity makes
         the pre-merge exact: max over (base ∪ merged-deltas) equals max
         over (base ∪ raw deltas)."""
-        from pyspark.sql import Observation
-
-        extra_cols = list(meta["extra_columns"])
-        _, delta = self._read_split(meta, extra_cols)
-        # single-exchange fold: the repartition(bucket) inside
-        # resolve_lww_clustered already clusters the write's (bucket,
-        # route) leaves — one task per bucket writes its few route dirs
         # exchange sized by the backlog's TOUCHED buckets (manifest
         # union), not the table's modulus: at 10^5 buckets a small
         # backlog would otherwise plan ~10^5 shuffle partitions and
         # write tasks, ~all empty — the partition COUNT is independent
         # of the bucket VALUES, so any count is winner-exact
-        merged = resolve_lww_clustered(
-            delta.withColumn(BUCKET_COL, bucket_expr(self.n_buckets)),
-            max(len(self._delta_touched_buckets(meta)), 1),
+        data_rel, pairs = self._fold_write(
+            self._read_deltas(meta["deltas"], list(meta["extra_columns"])),
+            meta, "m", self.n_buckets,
+            max(len(self._delta_touched_buckets(meta)), 1), horizon=None,
         )
-        if self.minhash_bands:
-            # sign this fold's winners once; a previous minor fold's
-            # winners arrive already signed and are skipped per row
-            merged = fill_band_columns(merged)
-
-        # Row count + route list + bucket list ride the fold's own write
-        # job (Observation, same pattern as merge_parsed) — no post-write
-        # directory walk; the bucket list keeps the merged delta eligible
-        # for a later SUBSET major fold.
-        obs = Observation(f"compact_minor_{meta['id'] + 1}")
-        merged = merged.observe(
-            obs,
-            F.count(F.lit(1)).alias("n_rows"),
-            F.collect_set(F.col(ROUTE_COL)).alias("routes"),
-            F.collect_set(F.col(BUCKET_COL)).alias("buckets"),
-        )
-
-        data_rel = self._new_data_rel("m", meta)
         out_dir = os.path.join(self.table_dir, data_rel)
-        merged.write.partitionBy(BUCKET_COL, ROUTE_COL).mode("overwrite").parquet(out_dir)
-        got = self._obs_get(obs, out_dir, n_rows=0, routes=[], buckets=[])
 
-        # A backlog whose rows are ALL dead letters folds to ZERO ok rows:
-        # the write leaves only _SUCCESS (no partition dirs), and
-        # registering that directory as a flat delta would leave every
-        # later read listing a file-less dir. LWW associativity makes
-        # dropping the fold exact:
-        # max over (base ∪ ∅) == max over base, and dead-letter rows never
-        # participate in the merge anyway (any minor fold discards them).
-        wrote_rows = got["n_rows"] > 0
-        folded = (
-            [{"path": data_rel, "format": "flat", "merged": True,
-              "routes": sorted(got["routes"] or []),
-              "buckets": sorted(int(b) for b in got["buckets"] or []),
-              "bytes": self._tree_bytes(out_dir)}]
-            if wrote_rows
-            else []
-        )
-        if not wrote_rows:
-            shutil.rmtree(out_dir, ignore_errors=True)
+        # A backlog whose rows are ALL dead letters folds to ZERO ok rows
+        # and registers no delta: LWW associativity makes dropping the
+        # fold exact — max over (base ∪ ∅) == max over base, and
+        # dead-letter rows never participate in the merge anyway. The
+        # entry's route and bucket lists come from the fold's pair set;
+        # the bucket list keeps the merged delta eligible for a later
+        # SUBSET major fold.
+        folded = []
+        if pairs:
+            buckets, bucket_routes = self._bucket_maps(data_rel, pairs)
+            folded = [{
+                "path": data_rel, "format": "flat", "merged": True,
+                "routes": sorted({r for rs in bucket_routes.values()
+                                  for r in rs}),
+                "buckets": [int(b) for b in buckets],
+                "bytes": self._tree_bytes(out_dir),
+            }]
 
         # Optimistic commit: the fold consumed exactly meta's delta set.
         # Rebase over concurrent INGEST commits by keeping their newer
@@ -1300,71 +1272,62 @@ class ParquetLake:
             for b in d["buckets"]
         })
 
-    def _compact(self, meta: dict, full: bool = False) -> dict:
-        """MAJOR compaction: fold the outstanding deltas into the base and
-        drop the delta list. SUBSET major (the default): only the base
-        buckets the deltas actually touch — recorded per delta at commit
-        time, no re-scan — are read and rewritten; untouched buckets are
-        carried forward by manifest reference. LWW associativity makes the
-        subset fold exact: an untouched bucket has NO delta versions, so
-        max over (that bucket ∪ ∅) is the bucket unchanged. This makes
-        the recurring major cost O(touched base + backlog), not O(table)
-        — at 100 TB the difference between a runnable compaction cadence
-        and a full-table rewrite every compact_every*major_every batches.
+    def _fold_input(
+        self, meta: dict, extra_cols: list[str], buckets: list[int] | None
+    ) -> DataFrame:
+        """A major fold's or rebucket's input: the base rows of `buckets`
+        (None: every bucket) plus every outstanding delta's rows."""
+        rows = self._union([
+            p for p in self._read_split(meta, extra_cols, buckets=buckets)
+            if p is not None
+        ])
+        return rows if rows is not None else self._empty_rows(extra_cols)
 
-        Tombstones are RETAINED in the base by default (they guard
-        late-replayed older upserts); with `tombstone_horizon_lsn` set,
-        tombstones older than the source's replay horizon are expired
-        here. Under subset majors expiry is ON-TOUCH: only rewritten
-        buckets shed their expired tombstones — safe, because retention
-        is purely an optimization (an expired tombstone is never WRONG to
-        keep, it just occupies space until its bucket is next touched).
-
-        full=True folds every bucket — the pre-subset behavior, kept for
-        equivalence testing and as an operational escape hatch."""
-        from pyspark.sql import Observation
-
-        extra_cols = list(meta["extra_columns"])
-        touched = None if full else self._delta_touched_buckets(meta)
-        base, delta = self._read_split(meta, extra_cols, buckets=touched)
-        if base is None and delta is None:
-            fold_in = self.spark.createDataFrame(
-                [], self._row_schema(extra_cols)
-            ).drop(BUCKET_COL)
-        elif base is None:
-            fold_in = delta
-        elif delta is None:
-            fold_in = base
-        else:
-            fold_in = base.unionByName(delta, allowMissingColumns=True)
-        # single-exchange fold (see resolve_lww_clustered): aggregation,
-        # horizon filter, Observation, and the partitioned write below all
-        # run in one post-shuffle stage; a subset fold sizes the exchange
-        # by the touched-bucket count, not the table's
-        n_parts = self.n_buckets if touched is None else max(len(touched), 1)
+    def _fold_resolve(
+        self, rows: DataFrame, n_buckets: int, n_parts: int,
+        horizon: int | None,
+    ) -> DataFrame:
+        """What a fold writes: `rows` bucketed under the `n_buckets`
+        modulus and LWW-resolved by resolve_lww_clustered over `n_parts`
+        shuffle partitions — ONE exchange, with the horizon filter, the
+        signing and the partitioned write in its post-shuffle stage.
+        Tombstones with lsn < `horizon` are dropped (None keeps every
+        tombstone). With minhash_bands, winners that arrive unsigned (raw
+        delta rows) are signed here, once; stored signatures pass
+        through."""
         merged = resolve_lww_clustered(
-            fold_in.withColumn(BUCKET_COL, bucket_expr(self.n_buckets)),
-            n_parts,
+            rows.withColumn(BUCKET_COL, bucket_expr(n_buckets)), n_parts
         )
-        if self.tombstone_horizon_lsn is not None:
+        if horizon is not None:
             merged = merged.filter(
                 ~(
                     F.coalesce(F.col(DELETED_COL), F.lit(False))
-                    & (F.col(LSN_COL) < F.lit(self.tombstone_horizon_lsn))
+                    & (F.col(LSN_COL) < F.lit(horizon))
                 )
             )
         if self.minhash_bands:
-            # post-LWW signing: base winners keep their stored signature,
-            # raw-delta winners are signed here, once — O(winners), in
-            # the same post-shuffle stage as the write
             merged = fill_band_columns(merged)
+        return merged
 
-        # The written bucket set and per-bucket route lists ride the
-        # rewrite's own job (Observation): the distinct (bucket, route)
-        # pair set is O(n_buckets x routes) — tiny — where a directory
-        # walk over the new base would be O(table files) on the driver.
-        obs = Observation(f"compact_major_{meta['id'] + 1}")
-        merged = merged.observe(
+    def _fold_write(
+        self, rows: DataFrame, meta: dict, prefix: str, n_buckets: int,
+        n_parts: int, horizon: int | None,
+    ) -> tuple[str, list]:
+        """The one fold step (minor fold, major fold, rebucket): resolve
+        `rows` (_fold_resolve) and write them as a fresh
+        (bucket, route)-partitioned tree. Returns the tree's data-dir
+        name (relative to the table) and the distinct (bucket, route)
+        pairs it holds, which ride the write job itself (Observation —
+        O(buckets x routes), where a directory walk of the output would
+        be O(files) on the driver). A write of zero rows (every input row
+        a dead letter or an expired tombstone) leaves no pair and no
+        directory."""
+        from pyspark.sql import Observation
+
+        data_rel = self._new_data_rel(prefix, meta)
+        out_dir = os.path.join(self.table_dir, data_rel)
+        obs = Observation(f"fold_{os.path.basename(data_rel)}")
+        merged = self._fold_resolve(rows, n_buckets, n_parts, horizon).observe(
             obs,
             F.collect_set(
                 F.struct(
@@ -1373,21 +1336,61 @@ class ParquetLake:
                 )
             ).alias("pairs"),
         )
-
-        data_rel = self._new_data_rel("s", meta)
-        out_dir = os.path.join(self.table_dir, data_rel)
         merged.write.partitionBy(BUCKET_COL, ROUTE_COL).mode("overwrite").parquet(out_dir)
         pairs = self._obs_get(obs, out_dir, pairs=[])["pairs"] or []
         if not pairs:
-            # zero rows written (e.g. every touched row was an expired
-            # tombstone): drop the file-less dir rather than referencing it
             shutil.rmtree(out_dir, ignore_errors=True)
+        return data_rel, pairs
 
-        routes_by_bucket: dict[str, set] = {}
+    @staticmethod
+    def _bucket_maps(data_rel: str, pairs: list) -> tuple[dict, dict]:
+        """A fold's (bucket, route) pair set -> (bucket -> bucket dir,
+        bucket -> sorted route list), keyed by the bucket as a string, in
+        bucket order."""
+        routes: dict[str, set] = {}
         for p in pairs:
+            rs = routes.setdefault(p["b"], set())
             if p["r"] is not None:
-                routes_by_bucket.setdefault(p["b"], set()).add(p["r"])
-        written = {int(p["b"]) for p in pairs}
+                rs.add(p["r"])
+        order = sorted(routes, key=int)
+        return (
+            {b: os.path.join(data_rel, f"{BUCKET_COL}={b}") for b in order},
+            {b: sorted(routes[b]) for b in order},
+        )
+
+    def _compact(self, meta: dict, full: bool = False) -> dict:
+        """MAJOR compaction: fold the outstanding deltas into the base and
+        drop the delta list. Only the base buckets the deltas touch —
+        recorded per delta at commit time, no re-scan — are read and
+        rewritten; untouched buckets are carried forward by manifest
+        reference. LWW associativity makes the subset fold exact: an
+        untouched bucket has NO delta versions, so max over (that bucket
+        ∪ ∅) is the bucket unchanged. This makes the recurring major cost
+        O(touched base + backlog), not O(table) — at 100 TB the
+        difference between a runnable compaction cadence and a
+        full-table rewrite every compact_every*major_every batches.
+
+        Tombstones are RETAINED in the base by default (they guard
+        late-replayed older upserts); with `tombstone_horizon_lsn` set,
+        tombstones older than the source's replay horizon are expired
+        here. Expiry is ON-TOUCH: only rewritten buckets shed their
+        expired tombstones — safe, because retention is purely an
+        optimization (an expired tombstone is never WRONG to keep, it
+        just occupies space until its bucket is next touched).
+
+        full=True counts every base bucket as touched, so the same fold
+        rewrites the whole base (and expires tombstones everywhere)."""
+        touched = self._delta_touched_buckets(meta)
+        if full:
+            touched = sorted(set(touched) | {int(b) for b in meta["buckets"]})
+        # the exchange is sized by the touched-bucket count, not the
+        # table's modulus (see _compact_minor)
+        data_rel, pairs = self._fold_write(
+            self._fold_input(meta, list(meta["extra_columns"]), touched),
+            meta, "s", self.n_buckets, max(len(touched), 1),
+            self.tombstone_horizon_lsn,
+        )
+        written, written_routes = self._bucket_maps(data_rel, pairs)
 
         # Optimistic commit (the Iceberg RewriteFiles model): the fold is
         # a pure function of (the base buckets it read, the delta set it
@@ -1398,8 +1401,7 @@ class ParquetLake:
         # base bucket the fold read: the output is then built on stale
         # inputs and is simply dropped (never referenced, so exact).
         consumed = {d["path"] for d in meta["deltas"]}
-        read_buckets = (list(meta["buckets"]) if touched is None
-                        else [str(b) for b in touched])
+        read_buckets = {str(b) for b in touched}
 
         def build(m: dict) -> dict | None:
             if m["n_buckets"] != self.n_buckets:
@@ -1411,44 +1413,25 @@ class ParquetLake:
             if any(m["buckets"].get(b) != meta["buckets"].get(b)
                    for b in read_buckets):
                 return None
-            if touched is None and set(m["buckets"]) != set(meta["buckets"]):
-                return None  # full fold must have read the whole base
-            if touched is None:
-                # full fold: the new base is exactly what the fold wrote
-                new_buckets = {
-                    str(b): os.path.join(data_rel, f"{BUCKET_COL}={b}")
-                    for b in sorted(written)
-                }
-                bucket_routes = {
-                    b: sorted(routes_by_bucket.get(b, set()))
-                    for b in new_buckets
-                }
-            else:
-                # subset fold: untouched buckets carry forward by
-                # reference; touched buckets repoint to the fresh fold
-                # output (or drop out entirely when the fold left them
-                # empty)
-                new_buckets = dict(m["buckets"])
-                bucket_routes = dict(m["bucket_routes"])
-                for b in sorted(set(touched) | written):
-                    if b in written:
-                        new_buckets[str(b)] = os.path.join(
-                            data_rel, f"{BUCKET_COL}={b}"
-                        )
-                        bucket_routes[str(b)] = sorted(
-                            routes_by_bucket.get(str(b), set())
-                        )
-                    else:
-                        new_buckets.pop(str(b), None)
-                        bucket_routes.pop(str(b), None)
+            # untouched buckets carry forward by reference; touched
+            # buckets repoint to the fold output, or drop out entirely
+            # when the fold left them empty
             return {
                 "id": m["id"] + 1,
                 "parent": m["id"],
                 "n_buckets": self.n_buckets,
                 "minhash_bands": self.minhash_bands,
                 "extra_columns": list(m["extra_columns"]),
-                "buckets": new_buckets,
-                "bucket_routes": bucket_routes,
+                "buckets": {
+                    **{b: p for b, p in m["buckets"].items()
+                       if b not in read_buckets},
+                    **written,
+                },
+                "bucket_routes": {
+                    **{b: r for b, r in m["bucket_routes"].items()
+                       if b not in read_buckets},
+                    **written_routes,
+                },
                 "deltas": [d for d in m["deltas"] if d["path"] not in consumed],
                 "batch_wm": m["batch_wm"],
                 "recent_batch_ids": m["recent_batch_ids"],
@@ -1456,7 +1439,8 @@ class ParquetLake:
 
         new_meta = self._commit_with_rebase(meta, build)
         if new_meta is None:
-            shutil.rmtree(out_dir, ignore_errors=True)
+            shutil.rmtree(os.path.join(self.table_dir, data_rel),
+                          ignore_errors=True)
             return self.current_meta()
         # compaction doubles commit frequency vs plain appends, so it also
         # pays for the cleanup: expire old snapshots + orphaned data dirs
@@ -1494,13 +1478,11 @@ class ParquetLake:
                 .filter(F.col("status") != "ok")
             )
             parts.append(df)
-        if not parts:
+        out = self._union(parts)
+        if out is None:
             return self.spark.createDataFrame(
                 [], "status string, topic string, partition int, offset long"
             )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p, allowMissingColumns=True)
         if status is not None:
             out = out.filter(F.col("status") == status)
         return out
@@ -1660,7 +1642,8 @@ class ParquetLake:
 
         tier='auto' follows the tiered policy (minor folds, every
         major_every-th one major), 'minor'/'major' force a tier; full=True
-        forces a full-table (non-subset) major. Returns the resulting
+        forces a major that counts every base bucket as touched, so it
+        rewrites the whole base (_compact). Returns the resulting
         current manifest (unchanged when there was nothing to fold or the
         fold aborted)."""
         meta = self.current_meta()
@@ -1669,7 +1652,7 @@ class ParquetLake:
         if tier == "minor":
             return self._compact_minor(meta)
         if tier == "major" or full:
-            return self._compact(meta, full=full or self.full_major)
+            return self._compact(meta, full=full)
         return self._maybe_compact(meta)
 
     def rebucket(self, new_n_buckets: int) -> dict | None:
@@ -1697,11 +1680,12 @@ class ParquetLake:
         and lookup()/lookup_many() take the modulus from the manifest
         they read (including time travel ACROSS a rebucket boundary).
 
-        Tombstone-horizon expiry applies everywhere (it is a full
-        rewrite — every bucket is 'touched'). Returns the committed
-        manifest, or None if a concurrent commit aborted the rebucket."""
-        from pyspark.sql import Observation
-
+        The rewrite is the fold step every major fold runs (_fold_write)
+        on the new modulus, over every base bucket and every delta, so
+        tombstone-horizon expiry applies everywhere. It calls that step
+        directly rather than _compact: its commit is a fresh base, not a
+        swap of touched buckets. Returns the committed manifest, or None
+        if a concurrent commit aborted the rebucket."""
         if new_n_buckets < 1:
             raise ValueError(f"new_n_buckets must be >= 1, got {new_n_buckets}")
         meta = self.current_meta()
@@ -1711,56 +1695,14 @@ class ParquetLake:
             self.n_buckets = new_n_buckets
             return meta  # already at the requested count: no-op
 
-        extra_cols = list(meta["extra_columns"])
-        base, delta = self._read_split(meta, extra_cols)
-        if base is None and delta is None:
-            fold_in = self.spark.createDataFrame(
-                [], self._row_schema(extra_cols)
-            ).drop(BUCKET_COL)
-        elif base is None:
-            fold_in = delta
-        elif delta is None:
-            fold_in = base
-        else:
-            fold_in = base.unionByName(delta, allowMissingColumns=True)
-        # same single-exchange fold as a full major, but clustered on the
-        # NEW modulus: one shuffle re-homes every row to its new bucket
-        merged = resolve_lww_clustered(
-            fold_in.withColumn(BUCKET_COL, bucket_expr(new_n_buckets)),
-            new_n_buckets,
+        # one shuffle re-homes every row to its bucket under the NEW
+        # modulus
+        data_rel, pairs = self._fold_write(
+            self._fold_input(meta, list(meta["extra_columns"]), None),
+            meta, "s", new_n_buckets, new_n_buckets,
+            self.tombstone_horizon_lsn,
         )
-        if self.tombstone_horizon_lsn is not None:
-            merged = merged.filter(
-                ~(
-                    F.coalesce(F.col(DELETED_COL), F.lit(False))
-                    & (F.col(LSN_COL) < F.lit(self.tombstone_horizon_lsn))
-                )
-            )
-        if self.minhash_bands:
-            merged = fill_band_columns(merged)
-
-        obs = Observation(f"rebucket_{meta['id'] + 1}")
-        merged = merged.observe(
-            obs,
-            F.collect_set(
-                F.struct(
-                    F.col(BUCKET_COL).cast("string").alias("b"),
-                    F.col(ROUTE_COL).alias("r"),
-                )
-            ).alias("pairs"),
-        )
-        data_rel = self._new_data_rel("s", meta)
-        out_dir = os.path.join(self.table_dir, data_rel)
-        merged.write.partitionBy(BUCKET_COL, ROUTE_COL).mode("overwrite").parquet(out_dir)
-        pairs = self._obs_get(obs, out_dir, pairs=[])["pairs"] or []
-        if not pairs:
-            shutil.rmtree(out_dir, ignore_errors=True)
-
-        routes_by_bucket: dict[str, set] = {}
-        for p in pairs:
-            if p["r"] is not None:
-                routes_by_bucket.setdefault(p["b"], set()).add(p["r"])
-        written = {int(p["b"]) for p in pairs}
+        buckets, bucket_routes = self._bucket_maps(data_rel, pairs)
 
         def build(m: dict) -> dict | None:
             if m["id"] != meta["id"]:
@@ -1771,14 +1713,8 @@ class ParquetLake:
                 "n_buckets": new_n_buckets,
                 "minhash_bands": self.minhash_bands,
                 "extra_columns": list(m["extra_columns"]),
-                "buckets": {
-                    str(b): os.path.join(data_rel, f"{BUCKET_COL}={b}")
-                    for b in sorted(written)
-                },
-                "bucket_routes": {
-                    str(b): sorted(routes_by_bucket.get(str(b), set()))
-                    for b in sorted(written)
-                },
+                "buckets": buckets,
+                "bucket_routes": bucket_routes,
                 "deltas": [],
                 "batch_wm": m["batch_wm"],
                 "recent_batch_ids": m["recent_batch_ids"],
@@ -1786,7 +1722,8 @@ class ParquetLake:
 
         new_meta = self._commit_with_rebase(meta, build)
         if new_meta is None:
-            shutil.rmtree(out_dir, ignore_errors=True)
+            shutil.rmtree(os.path.join(self.table_dir, data_rel),
+                          ignore_errors=True)
             return None
         self.n_buckets = new_n_buckets
         self.expire_snapshots(keep_last=self.snapshot_retention)
@@ -1862,28 +1799,24 @@ class ParquetLake:
         bucket_set = None if buckets is None else {int(b) for b in buckets}
         base = self._read_base(meta, extra_cols, route=route, bucket_set=bucket_set)
 
-        # each delta is its own partitioned root — read separately (several
-        # partitioned roots in one load trip partition discovery)
-        delta_parts = []
-        for d in meta["deltas"]:
-            if not self._delta_matches_route(d, route):
-                continue
-            dp = os.path.join(self.table_dir, d["path"])
-            if d["format"] == "parsed":
-                delta_parts.append(
-                    self._flatten_parsed_delta(dp, extra_cols, route=route)
-                )
-            else:
-                delta_parts.append(
-                    self._read_flat_delta(dp, extra_cols, route=route)
-                )
-        delta = None
-        if delta_parts:
-            delta = delta_parts[0]
-            for p in delta_parts[1:]:
-                delta = delta.unionByName(p, allowMissingColumns=True)
-            delta = self._normalize_rows(delta, extra_cols)
+        delta = self._read_deltas(
+            [d for d in meta["deltas"] if self._delta_matches_route(d, route)],
+            extra_cols, route=route,
+        )
         return base, delta
+
+    def _read_deltas(
+        self, entries: list[dict], extra_cols: list[str],
+        route: str | None = None,
+    ) -> DataFrame | None:
+        """Delta entries' rows as one frame normalized to the full row
+        schema, or None for no entries. Each delta is its own partitioned
+        root, read separately (several partitioned roots in one load trip
+        partition discovery)."""
+        delta = self._union(
+            [self._read_delta(d, extra_cols, route=route) for d in entries]
+        )
+        return None if delta is None else self._normalize_rows(delta, extra_cols)
 
     def _tree_bytes(self, path: str) -> int:
         """Total file bytes under a path via the Hadoop FileSystem's
@@ -1977,18 +1910,21 @@ class ParquetLake:
             resolved = self._merge_read_broadcast(base_t, delta)
         if migration_exact and resolved is not None and route is not None:
             resolved = resolved.filter(F.col(ROUTE_COL) == route)
-        parts = [p for p in (resolved, base_u) if p is not None]
-        if not parts:
-            return (
-                self.spark.createDataFrame(
-                    [], self._row_schema(extra_cols)
-                ).drop(BUCKET_COL),
-                False,
-            )
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p, allowMissingColumns=True)
+        df = self._union([p for p in (resolved, base_u) if p is not None])
+        if df is None:
+            return self._empty_rows(extra_cols), False
         return df, delta is not None
+
+    @staticmethod
+    def _resolve_split(base: DataFrame | None, delta: DataFrame | None):
+        """LWW state of a _read_split pair, or None when both are None.
+        Base rows are unique per key (every base writer is a resolve_lww
+        output), so a base alone is a plain scan with no aggregate."""
+        if delta is None:
+            return base
+        return resolve_lww(ParquetLake._union(
+            [p for p in (base, delta) if p is not None]
+        ))
 
     def _merge_read_broadcast(self, base: DataFrame, delta: DataFrame) -> DataFrame:
         """MoR read WITHOUT a table-wide shuffle, for the steady state
@@ -2058,7 +1994,7 @@ class ParquetLake:
         extra_cols = list(meta["extra_columns"]) if meta else []
         unsigned_possible = False
         if not meta or (not meta["buckets"] and not meta["deltas"]):
-            df = self.spark.createDataFrame([], self._row_schema(extra_cols)).drop(BUCKET_COL)
+            df = self._empty_rows(extra_cols)
         else:
             # merge-on-read: several versions of a key may coexist across
             # base + deltas until compaction. Three strategies, chosen
@@ -2092,18 +2028,9 @@ class ParquetLake:
                 # writer runs the post-LWW fill, so a base-only read
                 # carries a complete signature column set by construction
                 unsigned_possible = delta is not None
-                if base is None and delta is None:
-                    df = self.spark.createDataFrame(
-                        [], self._row_schema(extra_cols)
-                    ).drop(BUCKET_COL)
-                elif delta is None:
-                    df = base  # compacted table: plain pruned scan, no agg
-                elif base is None:
-                    df = resolve_lww(delta)
-                else:
-                    df = resolve_lww(
-                        base.unionByName(delta, allowMissingColumns=True)
-                    )
+                df = self._resolve_split(base, delta)
+                if df is None:
+                    df = self._empty_rows(extra_cols)
                 if migration_exact:
                     df = df.filter(F.col(ROUTE_COL) == route)
         if BUCKET_COL in df.columns:
@@ -2209,16 +2136,12 @@ class ParquetLake:
             else self.current_meta()
         )
         extra_cols = list(meta["extra_columns"]) if meta else []
-        empty = (
-            self.spark.createDataFrame([], self._row_schema(extra_cols))
-            .drop(BUCKET_COL, *INTERNAL, *SIG_COLS)
-        )
         if (
             not keys
             or not meta
             or (not meta["buckets"] and not meta["deltas"])
         ):
-            return empty
+            return self._empty_rows(extra_cols).drop(*INTERNAL, *SIG_COLS)
         wset = set(
             self.key_buckets(keys, n_buckets=meta["n_buckets"]).values()
         )
@@ -2243,12 +2166,9 @@ class ParquetLake:
             def match(df: DataFrame) -> DataFrame:
                 return df.join(keys_df, ["repo", "path"], "left_semi")
 
-        parts = [match(p) for p in (base, delta) if p is not None]
-        if not parts:
-            return empty
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p, allowMissingColumns=True)
+        df = self._union([match(p) for p in (base, delta) if p is not None])
+        if df is None:
+            return self._empty_rows(extra_cols).drop(*INTERNAL, *SIG_COLS)
         if delta is not None:
             # several versions of a key may coexist until compaction;
             # base-only lookups are already unique per key (base writers
@@ -2418,14 +2338,16 @@ class ParquetLake:
         extra_cols = list(to_meta["extra_columns"]) if to_meta else []
         sig = SIG_COLS if self.minhash_bands else []
         out_internal = list(INTERNAL) if include_internal else []
-        empty = (
-            self.spark.createDataFrame([], self._row_schema(extra_cols))
-            .drop(BUCKET_COL, *sig,
-                  *[c for c in INTERNAL if c not in out_internal])
-            .withColumn(CHANGE_TYPE_COL, F.lit(None).cast("string"))
-        )
+
+        def empty() -> DataFrame:
+            return (
+                self._empty_rows(extra_cols)
+                .drop(*sig, *[c for c in INTERNAL if c not in out_internal])
+                .withColumn(CHANGE_TYPE_COL, F.lit(None).cast("string"))
+            )
+
         if from_snapshot_id == to_snapshot_id:
-            return empty
+            return empty()
 
         chain = self._snapshot_chain(from_snapshot_id, to_snapshot_id)
         try:
@@ -2440,7 +2362,7 @@ class ParquetLake:
             ) from None
         entries = self._range_data_entries(chain, from_meta)
         if not entries:
-            return empty
+            return empty()
 
         # route=X scopes the feed to one tenant (a per-tenant downstream
         # consumer, the reference's one-index-per-collection shape).
@@ -2460,26 +2382,10 @@ class ParquetLake:
                 if self._delta_matches_route(d, prune_route)
             ]
             if not entries:
-                return empty
+                return empty()
 
         # -- winning version per key changed in the range: O(range bytes)
-        parts = []
-        for d in entries:
-            dp = os.path.join(self.table_dir, d["path"])
-            if d["format"] == "parsed":
-                parts.append(
-                    self._flatten_parsed_delta(
-                        dp, extra_cols, route=prune_route
-                    )
-                )
-            else:
-                parts.append(
-                    self._read_flat_delta(dp, extra_cols, route=prune_route)
-                )
-        versions = parts[0]
-        for p in parts[1:]:
-            versions = versions.unionByName(p, allowMissingColumns=True)
-        versions = self._normalize_rows(versions, extra_cols)
+        versions = self._read_deltas(entries, extra_cols, route=prune_route)
         winners = resolve_lww(versions).withColumn("__w_ord", packed_ord())
 
         w_del = F.coalesce(F.col(DELETED_COL), F.lit(False))
@@ -2524,17 +2430,7 @@ class ParquetLake:
             self._bucket_pruned(from_meta, wset), extra_cols,
             route=prune_route, buckets=sorted(wset),
         )
-        if base is None and delta is None:
-            prior = None
-        elif delta is None:
-            prior = base  # base rows are unique per key already
-        elif base is None:
-            prior = resolve_lww(delta)
-        else:
-            prior = resolve_lww(
-                base.unionByName(delta, allowMissingColumns=True)
-            )
-
+        prior = self._resolve_split(base, delta)
         if prior is None:
             return finish(
                 winners.filter(~w_del)

@@ -376,34 +376,42 @@ def write_plans(spark, work: str) -> int:
     mor4.LOOKUP_PREDICATE_MAX = ParquetLake.LOOKUP_PREDICATE_MAX
 
     # 4f. rebucket fold (round 5, bucket-count evolution): the whole-table
-    # rewrite is the same single-exchange fold as a full major, clustered
-    # on the NEW modulus — exactly one hash exchange, keyed by the new
-    # bucket expression, no Python, no window.
-    from pyspark_cdc.sink import resolve_lww_clustered
-
+    # rewrite runs the fold step every fold runs (ParquetLake._fold_resolve
+    # over _fold_input, as rebucket() calls it), clustered on the NEW
+    # modulus — exactly one hash exchange, keyed by the new bucket
+    # expression, no Python, no window. The notes count the same step's
+    # exchanges as mor4's minor and subset-major folds would run it.
     meta4b = mor4.current_meta()
     extra4 = list(meta4b["extra_columns"])
-    rb_base, rb_delta = mor4._read_split(meta4b, extra4)
-    rb_in = rb_base.unionByName(rb_delta, allowMissingColumns=True)
-    rb = resolve_lww_clustered(
-        rb_in.withColumn(BUCKET_COL, bucket_expr(48)), 48
-    )
-    plan = formatted(rb)
+    touched4 = mor4._delta_touched_buckets(meta4b)
+    folds = [
+        ("rebucket", mor4._fold_resolve(
+            mor4._fold_input(meta4b, extra4, None),
+            48, 48, mor4.tombstone_horizon_lsn)),
+        ("minor", mor4._fold_resolve(
+            mor4._read_deltas(meta4b["deltas"], extra4),
+            mor4.n_buckets, max(len(touched4), 1), None)),
+        ("major", mor4._fold_resolve(
+            mor4._fold_input(meta4b, extra4, touched4),
+            mor4.n_buckets, max(len(touched4), 1),
+            mor4.tombstone_horizon_lsn)),
+    ]
     check(
         "rebucket fold (one exchange on the NEW modulus)",
-        plan,
+        formatted(folds[0][1]),
         must=["partial_max_by"],
         must_not=["BatchEvalPython", "Window", "SortMergeJoin"],
     )
-    n_rb_ex = plan.count(f"hashpartitioning({BUCKET_COL}")
-    sections[-1][2].append(
-        f"{'OK ' if n_rb_ex == 1 else 'FAIL'} exactly one hash exchange on "
-        f"the new bucket column (found {n_rb_ex})"
-    )
-    if n_rb_ex != 1:
-        failures.append(
-            f"rebucket fold: {n_rb_ex} bucket-keyed exchanges, want exactly 1"
+    for fold_name, fold_df in folds:
+        n_ex = formatted(fold_df).count(f"hashpartitioning({BUCKET_COL}")
+        sections[-1][2].append(
+            f"{'OK ' if n_ex == 1 else 'FAIL'} {fold_name} fold: exactly one "
+            f"hash exchange on the bucket column (found {n_ex})"
         )
+        if n_ex != 1:
+            failures.append(
+                f"{fold_name} fold: {n_ex} bucket-keyed exchanges, want exactly 1"
+            )
 
     # 4g. incremental change read (round 5, CDF): read_changes(A, B) must
     # touch ONLY the delta files appended in the range plus the

@@ -341,3 +341,49 @@ def test_changes_stable_under_later_commits(spark, tmp_path):
         ("r", "p1"): "update", ("r", "p2"): "insert",
     }
     assert got[("r", "p1")]["content"] == "v2"  # not the later v9
+
+
+@pytest.mark.parametrize("compact_every", [100, 1], ids=["deltas", "folded"])
+def test_feed_suppresses_duplicates_stale_and_absent_deletes(
+    spark, tmp_path, compact_every
+):
+    """A four-batch log read back batch by batch: a duplicate delivery,
+    a stale replay, a delete of a key that never existed and a create and
+    delete inside one batch emit nothing; a delete of a live key emits a
+    delete and a revive after it an insert — with the backlog
+    outstanding as deltas and with every batch folded into the base."""
+    lake = ParquetLake(spark, str(tmp_path / "lake"), n_buckets=4,
+                       mode="mor", compact_every=compact_every,
+                       major_every=1, snapshot_retention=50)
+
+    def op(kind, i, v, lsn):
+        if kind == "d":
+            return _rec(_env("d", before={"repo": "r", "path": f"p{i}"},
+                             lsn=lsn), lsn)
+        return _rec(_env(kind, after=_row(i, v), lsn=lsn), lsn)
+
+    batches = [
+        # p1 delivered twice; p3 created and deleted inside the batch
+        [op("c", 1, 1, 1), op("c", 1, 1, 1), op("c", 2, 2, 2),
+         op("c", 3, 3, 3), op("d", 3, 0, 4)],
+        # stale replay of p1 v1; real update of p2; delete of never-seen p4
+        [op("c", 1, 1, 1), op("u", 2, 5, 5), op("d", 4, 0, 6)],
+        # delete p1
+        [op("d", 1, 0, 7)],
+        # revive p1; an OLDER stale update of p2
+        [op("c", 1, 8, 8), op("u", 2, 4, 4)],
+    ]
+    expected = [
+        {("r", "p1"): ("insert", "v1"), ("r", "p2"): ("insert", "v2")},
+        {("r", "p2"): ("update", "v5")},
+        {("r", "p1"): ("delete", None)},
+        {("r", "p1"): ("insert", "v8")},
+    ]
+    marks = [0]
+    for bid, recs in enumerate(batches):
+        _feed(spark, lake, bid, recs)
+        marks.append(lake.current_meta()["id"])
+    for (a, b), want in zip(zip(marks, marks[1:]), expected):
+        ch = _assert_applies(lake, a, b)
+        assert {k: (c[CHANGE_TYPE_COL], c["content"])
+                for k, c in ch.items()} == want

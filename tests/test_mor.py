@@ -562,14 +562,15 @@ def _buckets_of(spark, keys, n_buckets):
 
 
 def test_subset_major_equals_full_major(spark, tmp_path):
-    """The round-5 headline: a MAJOR fold reads and rewrites ONLY the
-    buckets the outstanding deltas touch; untouched buckets are carried
-    forward by manifest reference. Final visible state must be identical
-    to a full-table major on the same batch sequence — including
-    dead-letter-only batches and horizon-expired tombstones — and the
-    subset lake's manifest must PROVE the carry-forward (bucket paths
-    spanning more than one snapshot tree), while major cost tracks
-    touched buckets, not the table."""
+    """A MAJOR fold reads and rewrites ONLY the buckets the outstanding
+    deltas touch; untouched buckets are carried forward by manifest
+    reference. The visible state must equal the oracle's — including
+    dead-letter-only batches and horizon-expired tombstones — and must
+    not change under a full major (compact_now(full=True): the same fold
+    with every base bucket counted as touched). The subset manifest must
+    PROVE the carry-forward (bucket paths spanning more than one
+    snapshot tree); the full fold must rewrite the whole base and expire
+    the tombstone the subset folds left in an untouched bucket."""
     from pyspark_cdc.schemas import KAFKA_SHAPE
     from pyspark_cdc.stream import process_batch
 
@@ -589,80 +590,87 @@ def test_subset_major_equals_full_major(spark, tmp_path):
     assert len(tk) >= 3
     tomb_key = by_bucket[untouched_bucket][0]
 
-    def feed(lake, bid, recs_):
+    lake = ParquetLake(
+        spark, str(tmp_path / "lake"), n_buckets=n_buckets, mode="mor",
+        compact_every=2, major_every=2, tombstone_horizon_lsn=100,
+    )
+    recs = []
+
+    def feed(bid, recs_):
+        recs.extend(recs_)
         process_batch(
             spark.createDataFrame(recs_, schema=KAFKA_SHAPE), bid, lake)
 
-    def run(table_dir, full_major):
-        lake = ParquetLake(
-            spark, table_dir, n_buckets=n_buckets, mode="mor",
-            compact_every=2, major_every=2, tombstone_horizon_lsn=100,
-            full_major=full_major,
-        )
-        # b0: every key v1 (lsn 1..40); b1: tombstone for tomb_key at
-        # lsn 900 (newer than horizon 100 => retained by MAJOR #1)
-        feed(lake, 0, [upsert(r, p, 1 + i) for i, (r, p) in enumerate(keys)])
-        feed(lake, 1, [delete(*tomb_key, 900)])
-        # MAJOR #1 ran (no base before it): base exists, deltas empty
-        m = lake.current_meta()
-        assert m["buckets"] and m["deltas"] == []
-        base_after_major1 = dict(m["buckets"])
+    def parents(meta):
+        return {p.split(os.sep + "__bucket=", 1)[0]
+                for p in meta["buckets"].values()}
 
-        # horizon advances (source retention moved on): tombstones with
-        # lsn < 1000 are now expirable — but only where a fold touches
-        lake.tombstone_horizon_lsn = 1000
-
-        # b2+b3 -> MINOR #1; b4+b5 -> MAJOR #2, touching ONLY touched_bucket
-        feed(lake, 2, [upsert(*tk[0], 2000), delete(*tk[1], 2100)])
-        feed(lake, 3, [_rec('{"payload": {broken', 10), _rec("", 11)])
-        feed(lake, 4, [upsert(*tk[2], 2200)])
-        feed(lake, 5, [upsert(*tk[0], 2300)])
-        m = lake.current_meta()
-        assert m["deltas"] == [] and m.get("minor_count", 0) == 0  # MAJOR ran
-        return lake, base_after_major1
-
-    sub, sub_base1 = run(str(tmp_path / "subset"), full_major=False)
-    ful, _ = run(str(tmp_path / "full"), full_major=True)
-
-    # 1) visible state identical
-    assert _rows(sub) == _rows(ful)
-    state = _rows(sub)
-    assert state[tk[0]]["content"] == "v2300"
-    assert state[tk[2]]["content"] == "v2200"
-    assert tk[1] not in state and tomb_key not in state
-
-    # 2) manifest proof of carry-forward: the subset lake's untouched
-    # buckets still point at the MAJOR-#1 tree; the full lake rewrote all
-    sub_meta, ful_meta = sub.current_meta(), ful.current_meta()
-    sub_parents = {p.split(os.sep + "__bucket=", 1)[0]
-                   for p in sub_meta["buckets"].values()}
-    ful_parents = {p.split(os.sep + "__bucket=", 1)[0]
-                   for p in ful_meta["buckets"].values()}
-    assert len(ful_parents) == 1          # full major: one fresh tree
-    assert len(sub_parents) == 2          # subset: old tree + fold output
-    assert sub_meta["buckets"][str(untouched_bucket)] == \
-        sub_base1[str(untouched_bucket)]  # byte-identical carry-forward
-    assert sub_meta["buckets"][str(touched_bucket)] != \
-        sub_base1[str(touched_bucket)]    # touched bucket repointed
-
-    # 3) expire-on-touch: the full lake dropped tomb_key's now-expirable
-    # tombstone everywhere; the subset lake retains it in the untouched
-    # bucket (safe: never visible, just space until next touch)
-    def tombs(lake):
+    def tombs():
         return {
             (r["repo"], r["path"])
             for r in lake.read(include_deleted=True, include_internal=True)
             .filter("__deleted").collect()
         }
-    assert tomb_key in tombs(sub)
-    assert tomb_key not in tombs(ful)
-    # tk[1]'s tombstone (lsn 2100 >= 1000) is retained by BOTH
-    assert tk[1] in tombs(sub) and tk[1] in tombs(ful)
 
-    # 4) both lakes keep working identically afterwards
-    for lake in (sub, ful):
-        feed(lake, 6, [upsert("org/r", "src/f1.py", 3000, "v3000")])
-    assert _rows(sub) == _rows(ful)
+    # b0: every key v1 (lsn 1..40); b1: tombstone for tomb_key at
+    # lsn 900 (newer than horizon 100 => retained by MAJOR #1)
+    feed(0, [upsert(r, p, 1 + i) for i, (r, p) in enumerate(keys)])
+    feed(1, [delete(*tomb_key, 900)])
+    # MAJOR #1 ran (no base before it): base exists, deltas empty
+    m = lake.current_meta()
+    assert m["buckets"] and m["deltas"] == []
+    base1 = dict(m["buckets"])
+
+    # horizon advances (source retention moved on): tombstones with
+    # lsn < 1000 are now expirable — but only where a fold touches
+    lake.tombstone_horizon_lsn = 1000
+
+    # b2+b3 -> MINOR #1; b4+b5 -> MAJOR #2, touching ONLY touched_bucket
+    feed(2, [upsert(*tk[0], 2000), delete(*tk[1], 2100)])
+    feed(3, [_rec('{"payload": {broken', 10), _rec("", 11)])
+    feed(4, [upsert(*tk[2], 2200)])
+    feed(5, [upsert(*tk[0], 2300)])
+    sub_meta = lake.current_meta()
+    assert sub_meta["deltas"] == [] and sub_meta.get("minor_count", 0) == 0
+
+    # 1) visible state = the oracle's
+    state = _rows(lake)
+    oracle_state = replay(sorted(recs, key=lambda r: r["offset"]))["state"]
+    assert_state_equal(state, oracle_state)
+    assert state[tk[0]]["content"] == "v2300"
+    assert state[tk[2]]["content"] == "v2200"
+    assert tk[1] not in state and tomb_key not in state
+
+    # 2) manifest proof of carry-forward: untouched buckets still point
+    # at the MAJOR-#1 tree, the touched bucket at the fold output
+    assert len(parents(sub_meta)) == 2    # old tree + fold output
+    assert sub_meta["buckets"][str(untouched_bucket)] == \
+        base1[str(untouched_bucket)]      # byte-identical carry-forward
+    assert sub_meta["buckets"][str(touched_bucket)] != \
+        base1[str(touched_bucket)]        # touched bucket repointed
+
+    # 3) expire-on-touch: the subset fold retains tomb_key's now-expirable
+    # tombstone in the untouched bucket (safe: never visible, just space
+    # until next touch); tk[1]'s (lsn 2100 >= 1000) is live
+    assert tomb_key in tombs() and tk[1] in tombs()
+
+    # 4) a full major over a backlog that touches no bucket (one
+    # dead-letter-only batch) rewrites every bucket into one fresh tree
+    # and expires tomb_key's tombstone there; the visible state is
+    # unchanged
+    feed(6, [_rec("", 12)])
+    full_meta = lake.compact_now(tier="major", full=True)
+    assert full_meta["deltas"] == [] and full_meta["id"] > sub_meta["id"]
+    assert len(parents(full_meta)) == 1
+    assert _rows(lake) == state
+    assert tomb_key not in tombs() and tk[1] in tombs()
+
+    # 5) the lake keeps working after the full fold
+    feed(7, [upsert("org/r", "src/f1.py", 3000, "v3000")])
+    assert_state_equal(
+        _rows(lake),
+        replay(sorted(recs, key=lambda r: r["offset"]))["state"],
+    )
 
 
 def test_subset_major_all_dead_letter_backlog_skips_base(spark, tmp_path):

@@ -138,6 +138,29 @@ def test_duplicate_batch_race_drops_loser_and_its_dir(spark, tmp_path):
     )
 
 
+def test_duplicate_empty_batch_race_reports_one_commit(spark, tmp_path):
+    """Two workers replay the SAME empty batch id on one parent: both
+    build the identical empty-batch manifest, but only one commits it.
+    The loser's rebase finds the batch applied and reports
+    skipped_duplicate_batch, so exactly one worker reports the commit."""
+    a = _mor(spark, tmp_path / "t")
+    b = _mor(spark, tmp_path / "t")
+    bdf, _ = _upserts(spark, [1], 1, 10)
+    process_batch(bdf, 0, a)
+    parent = a.current_meta()["id"]
+
+    empty = spark.createDataFrame([], schema=KAFKA_SHAPE)
+    racer = {}
+    _one_shot(a, lambda: racer.update(process_batch(empty, 1, b)))
+    s = process_batch(empty, 1, a)
+
+    assert racer["status"] == "empty_batch"
+    assert racer["snapshot"] == parent + 1
+    assert s["status"] == "skipped_duplicate_batch"
+    assert a.current_meta()["id"] == parent + 1
+    assert sorted(a.applied_batch_ids()) == [0, 1]
+
+
 def test_compaction_rebases_over_concurrent_ingest(spark, tmp_path):
     """The decoupled maintenance fold races the ingest job: ingest
     commits a NEW delta between the fold's read and its commit. The fold

@@ -89,20 +89,22 @@ def _record(ev, offset):
 
 
 def _engine_state(spark, tmp_dir, batches, tombstone_horizon_lsn=None,
-                  full_major=False):
+                  full=None):
     # compact_every=2 + major_every=2 exercises BOTH compaction tiers
     # (major on the first fold, minor on the next) and the broadcast MoR
     # read path under arbitrary event interleavings and batch splits;
-    # full_major toggles subset vs full-table MAJOR folds so hypothesis
-    # explores touched/untouched bucket interleavings on both paths
+    # full=True/False closes with a full or subset major over whatever
+    # backlog is left, so hypothesis explores touched/untouched bucket
+    # interleavings on both
     lake = ParquetLake(
         spark, tmp_dir, n_buckets=4, mode="mor", compact_every=2,
         major_every=2, tombstone_horizon_lsn=tombstone_horizon_lsn,
-        full_major=full_major,
     )
     for i, batch in enumerate(batches):
         df = spark.createDataFrame(batch, schema=KAFKA_SHAPE)
         process_batch(df, i, lake)
+    if full is not None:
+        lake.compact_now(tier="major", full=full)
     return {
         (r["repo"], r["path"]): r.asDict() for r in lake.read().collect()
     }
@@ -171,10 +173,10 @@ def test_tombstone_horizon_interleavings_match_oracle(
         if recs[prev:c]:
             batches.append(recs[prev:c])
         prev = c
-    full_major = data.draw(st.booleans(), label="full_major")
+    full = data.draw(st.booleans(), label="full")
     tmp = str(tmp_path_factory.mktemp("prop_lake"))
     got = _engine_state(spark, tmp, batches, tombstone_horizon_lsn=20,
-                        full_major=full_major)
+                        full=full)
     _assert_matches_oracle(got, recs)
 
 

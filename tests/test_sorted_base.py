@@ -32,7 +32,7 @@ def test_base_files_key_sorted_with_tight_rowgroup_stats(spark, tmp_path):
     lake = ParquetLake(spark, str(tmp_path / "lake"), n_buckets=4,
                        mode="mor", compact_every=10**9)
     replay_batch(spark, log, lake, batch_id=0)
-    lake._commit_snapshot(lake._compact(lake.current_meta(), full=True))
+    lake.compact_now(tier="major", full=True)
 
     files = sorted(glob.glob(
         str(tmp_path / "lake" / "data" / "s*" / "__bucket=*" / "**" /
