@@ -83,6 +83,7 @@ def main(argv=None) -> int:
     from pyspark.sql import SparkSession
 
     from pyspark_cdc.session import apply_engine_conf
+    from pyspark_cdc.manifest import raw_delta_count
     from pyspark_cdc.sink import ParquetLake
 
     spark = SparkSession.builder.appName("pyspark-cdc-maintain").getOrCreate()
@@ -119,13 +120,12 @@ def main(argv=None) -> int:
     folds = 0
     while True:
         meta = lake.current_meta()
-        backlog = (ParquetLake._raw_delta_count(meta)
-                   if meta is not None else 0)
+        backlog = raw_delta_count(meta) if meta is not None else 0
         if backlog >= args.min_deltas:
             t0 = time.monotonic()
             new_meta = lake.compact_now(tier=args.tier, full=args.full)
             wall = time.monotonic() - t0
-            after = ParquetLake._raw_delta_count(new_meta)
+            after = raw_delta_count(new_meta)
             aborted = fold_aborted(meta, new_meta)
             folds += 0 if aborted else 1
             print(json.dumps({
@@ -149,7 +149,7 @@ def main(argv=None) -> int:
     print(json.dumps({
         "event": "done", "folds": folds,
         "runtime_sec": round(time.monotonic() - t_start, 3),
-        "backlog": ParquetLake._raw_delta_count(meta) if meta else 0,
+        "backlog": raw_delta_count(meta) if meta else 0,
         "snapshot": meta.get("id") if meta else None,
     }), flush=True)
     return 0

@@ -23,16 +23,17 @@ WHEN NOT MATCHED INSERT` (SURVEY.md S5/S6/J2/J3) — on plain parquet:
   untouched buckets are carried forward by manifest reference. At
   100 TB you'd raise n_buckets so a bucket is a few GB — fold cost
   scales with the backlog's key spread, not table size.
-* Each commit writes an immutable snapshot manifest (bucket -> data dir
-  and route list, delta entries with their path, format, routes, touched
-  buckets and bytes, the applied-batch watermark, column list) and
-  atomically swaps the `current` pointer (os.replace). A crash mid-merge
-  leaves the old snapshot current; the streaming retry of the same epoch
-  is detected via the applied-batch watermark and becomes a no-op =>
-  idempotent foreachBatch, exactly-once final state (SURVEY.md T1).
-  Every manifest is read through one loader (ParquetLake._load_manifest)
-  that refuses any other shape, so the rest of the module reads one
-  dialect.
+* Each commit writes an immutable snapshot manifest and atomically swaps
+  the `current` pointer (os.replace). The manifest's shape, the one
+  transition that derives each commit's manifest from its parent
+  (manifest.child) and the queries over it live in manifest.py; this
+  module adds the file I/O, the commit lock and the optimistic commit
+  loop. A crash mid-merge leaves the old snapshot current; the
+  streaming retry of the same epoch is detected via the applied-batch
+  watermark and becomes a no-op => idempotent foreachBatch,
+  exactly-once final state (SURVEY.md T1). Every manifest is read
+  through one loader (ParquetLake._load_manifest) that refuses any
+  other shape.
 * Deletes are retained as tombstone rows (__deleted=true, with their
   lsn), so a late-replayed OLDER upsert for a deleted key loses the LWW
   merge against the tombstone — strictly safer than the reference, which
@@ -68,12 +69,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import manifest
+from .manifest import BUCKET_COL
 from .order import ORD_COLS, packed_ord
 from .schemas import (DELETED_COL, DOMAIN_COLS, INTERNAL_COLS, KEY_COLS,
                       LSN_COL, OFFSET_COL, TS_COL, TX_COL)
 from .signatures import SIG_COLS, fill_band_columns
 
-BUCKET_COL = "__bucket"
 # Routing identity (SURVEY.md P8/Q11): the per-record index identity of
 # the reference ({app_name}_{collection}, sync.go:176-196) materialized
 # as a sink PARTITION column; functionally determined by the key's repo
@@ -101,46 +103,11 @@ INTERNAL = INTERNAL_COLS
 RESERVED_COLS = frozenset(
     [*INTERNAL_COLS, BUCKET_COL, ROUTE_COL, *DOMAIN_COLS, *SIG_COLS]
 )
-# out-of-order applied-batch-id window kept above the watermark
-RECENT_BATCH_WINDOW = 1024
 # snapshots kept by expire_snapshots (time-travel horizon)
 SNAPSHOT_RETENTION = 8
 # change-type column emitted by read_changes (Delta Lake CDF's
 # _change_type naming, net-effect variant)
 CHANGE_TYPE_COL = "_change_type"
-
-# Keys every committed manifest carries, and every delta entry in it.
-MANIFEST_KEYS = ("id", "parent", "n_buckets", "minhash_bands",
-                 "extra_columns", "buckets", "deltas", "batch_wm",
-                 "recent_batch_ids")
-DELTA_ENTRY_KEYS = ("path", "format", "routes", "buckets", "bytes")
-
-
-def _manifest_problem(meta: dict) -> str | None:
-    """Why `meta` is not a manifest this engine writes, or None. The
-    engine reads one dialect: dict delta entries that record their route
-    list, touched buckets and byte count, a route list per base bucket,
-    and an applied-batch watermark. Older shapes (string delta entries,
-    entries without those fields, the `batch_ids` list that predates the
-    watermark, buckets without route lists) are refused, not converted."""
-    if "batch_ids" in meta:
-        return "records applied batches as a `batch_ids` list"
-    missing = [k for k in MANIFEST_KEYS if k not in meta]
-    if missing:
-        return f"has no {', '.join(missing)}"
-    for entry in meta["deltas"]:
-        if not isinstance(entry, dict):
-            return f"has a delta entry {entry!r} that is not a dict"
-        missing = [k for k in DELTA_ENTRY_KEYS if k not in entry]
-        if missing:
-            return (f"has a delta entry {entry.get('path')!r} with no "
-                    f"{', '.join(missing)}")
-    routes = meta.get("bucket_routes", {})
-    unrouted = sorted((b for b in meta["buckets"] if b not in routes), key=int)
-    if unrouted:
-        return f"has base buckets {unrouted} with no bucket_routes entry"
-    return None
-
 
 # ---- optimistic concurrency (decoupled maintenance vs ingest) ----
 # The commit lock is held ONLY for the O(ms) manifest check+write+swap,
@@ -361,7 +328,6 @@ class ParquetLake:
         mode: str = "mor",
         compact_every: int | None = 10,
         tombstone_horizon_lsn: int | None = None,
-        broadcast_delta_bytes: int = 32 * 1024 * 1024,
         major_every: int = 4,
         minhash_bands: bool = False,
         orphan_grace_sec: float = 0.0,
@@ -402,11 +368,6 @@ class ParquetLake:
         # signed, some not) would break incremental==scratch, so
         # reopening adopts the manifest's value.
         self.minhash_bands = minhash_bands
-        # MoR read strategy switch: when the outstanding deltas are at most
-        # this many parquet bytes, read() resolves them with a BROADCAST
-        # key-set join against the base (scan-only, no table-wide shuffle);
-        # bigger backlogs fall back to the global LWW aggregate. See read().
-        self.broadcast_delta_bytes = broadcast_delta_bytes
         # Tombstone retention (SCALING.md section 7): a delete tombstone
         # only needs to outlive the SOURCE's replay horizon (Kafka
         # retention) — an older upsert can never be replayed after its
@@ -470,14 +431,15 @@ class ParquetLake:
     def _load_manifest(self, snapshot_id: int) -> dict:
         """The one manifest reader: every snapshot manifest the lake
         opens (current, time travel, change ranges, expiry) is checked
-        here, so no other code path handles an older shape. A shape this
-        engine never writes raises ValueError naming the snapshot and the
-        remedy. `bucket_routes`, which an older empty-base commit of this
-        dialect omits, is filled in as {}. (`minor_count` stays optional:
-        a major fold or rebucket resets it to 0 by leaving it out.)"""
+        here against the one shape manifest.py defines, so no other code
+        path handles an older shape. A shape this engine never writes
+        raises ValueError naming the snapshot and the remedy. The two
+        fields older commits of this dialect may omit are filled in:
+        `bucket_routes` (an empty-base commit) as {} and `minor_count` (a
+        major fold or rebucket) as 0."""
         with open(os.path.join(self._meta_dir, f"snap-{snapshot_id}.json")) as f:
             meta = json.load(f)
-        problem = _manifest_problem(meta)
+        problem = manifest.problem(meta)
         if problem is not None:
             raise ValueError(
                 f"snapshot {snapshot_id} of the lake at {self.table_dir} "
@@ -487,6 +449,7 @@ class ParquetLake:
                 "replay the export into a new lake with jobs/replay.py"
             )
         meta.setdefault("bucket_routes", {})
+        meta.setdefault("minor_count", 0)
         return meta
 
     def current_meta(self) -> dict | None:
@@ -514,6 +477,11 @@ class ParquetLake:
         if healed == 0:
             return None
         return self._load_manifest(healed)
+
+    def _head(self) -> dict:
+        """The current manifest, or snapshot 0 of a lake with no commit."""
+        return self.current_meta() or manifest.empty(
+            self.n_buckets, self.minhash_bands)
 
     def snapshot_meta(self, snapshot_id: int) -> dict:
         """Manifest of a historical snapshot (within the expire_snapshots
@@ -682,11 +650,9 @@ class ParquetLake:
         another writer having advanced it raises CommitConflict carrying
         the fresh manifest (callers rebase via _commit_with_rebase)."""
         with self._commit_lock():
-            current = self.current_meta()
-            current_id = current["id"] if current is not None else 0
-            if current_id != (meta.get("parent") or 0):
-                raise CommitConflict(current if current is not None else
-                                     self._empty_meta(), meta)
+            current = self._head()
+            if current["id"] != meta["parent"]:
+                raise CommitConflict(current, meta)
             self._commit_snapshot_unlocked(meta)
 
     def _commit_with_rebase(self, meta0: dict, build) -> dict | None:
@@ -751,9 +717,7 @@ class ParquetLake:
             with open(snap_file) as f:
                 existing = f.read()
             if existing != payload:
-                raise CommitConflict(
-                    self.current_meta() or self._empty_meta(), meta
-                )
+                raise CommitConflict(self._head(), meta)
             # identical content: our own crash-retry after writing the
             # snap but before the pointer swap — fall through to the swap
         finally:
@@ -769,25 +733,6 @@ class ParquetLake:
             os.fsync(dfd)  # persist the rename itself
         finally:
             os.close(dfd)
-
-    def _empty_meta(self) -> dict:
-        return {
-            "id": 0,
-            "parent": None,
-            "n_buckets": self.n_buckets,
-            "minhash_bands": self.minhash_bands,
-            "extra_columns": [],
-            "buckets": {},
-            "bucket_routes": {},
-            "minor_count": 0,
-            "deltas": [],
-            # Bounded applied-batch tracking: a long-running CDC tail job
-            # commits unbounded batches, so the manifest stores a
-            # high-watermark (every id <= wm is applied) plus the
-            # out-of-order ids above it — O(window), not O(n_batches).
-            "batch_wm": -1,
-            "recent_batch_ids": [],
-        }
 
     def _new_data_rel(self, prefix: str, meta: dict) -> str:
         """Unique data-dir name per WRITE ATTEMPT (snapshot id + random
@@ -825,38 +770,6 @@ class ParquetLake:
                 "lake (ParquetLake adopts the manifest's bucket count at "
                 "construction) and retry the batch"
             )
-
-    @staticmethod
-    def _batch_applied(meta: dict, batch_id) -> bool:
-        return (
-            isinstance(batch_id, int) and batch_id <= meta["batch_wm"]
-        ) or batch_id in meta["recent_batch_ids"]
-
-    @staticmethod
-    def _with_batch(meta: dict, batch_id) -> dict:
-        """New (wm, recent) after applying batch_id. If the recent window
-        ever overflows RECENT_BATCH_WINDOW, the NUMERICALLY lowest ids are
-        dropped — safe direction: a dropped id re-applies as a duplicate
-        delta, which the LWW merge is content-idempotent against (max is
-        duplicate-insensitive), whereas the other direction would skip
-        data."""
-        wm, recent = meta["batch_wm"], set(meta["recent_batch_ids"])
-        recent.add(batch_id)
-        while (wm + 1) in recent:
-            wm += 1
-            recent.discard(wm)
-        recent = {b for b in recent if not (isinstance(b, int) and b <= wm)}
-        if len(recent) > RECENT_BATCH_WINDOW:
-            # numeric-aware ordering: int ids compare by value (str sorting
-            # would drop '999' in favor of '1000'); non-int ids sort after
-            # ints so they are preferentially retained (rare, can't advance
-            # the watermark anyway).
-            keep = sorted(
-                recent,
-                key=lambda b: (isinstance(b, int) is False, b if isinstance(b, int) else str(b)),
-            )[-RECENT_BATCH_WINDOW:]
-            recent = set(keep)
-        return dict(meta, batch_wm=wm, recent_batch_ids=sorted(recent, key=str))
 
     def extra_columns(self) -> list[str]:
         meta = self.current_meta()
@@ -993,8 +906,8 @@ class ParquetLake:
         from pyspark.sql import Observation
 
         t_enter = time.monotonic()
-        meta = self.current_meta() or self._empty_meta()
-        if self._batch_applied(meta, batch_id):
+        meta = self._head()
+        if manifest.batch_applied(meta, batch_id):
             return {"status": "skipped_duplicate_batch", "batch_id": batch_id}
 
         obs = Observation(f"merge_parsed_{batch_id}")
@@ -1036,9 +949,8 @@ class ParquetLake:
         if got["n_records"] == 0:
             shutil.rmtree(out_dir, ignore_errors=True)
             new_meta = self._commit_with_rebase(
-                meta, lambda m: None if self._batch_applied(m, batch_id)
-                else dict(self._with_batch(m, batch_id),
-                          id=m["id"] + 1, parent=m["id"]))
+                meta, lambda m: None if manifest.batch_applied(m, batch_id)
+                else manifest.child(m, **manifest.with_batch(m, batch_id)))
             if new_meta is None:
                 stats["status"] = "skipped_duplicate_batch"
                 return stats
@@ -1069,24 +981,15 @@ class ParquetLake:
         }
 
         def build(m: dict) -> dict | None:
-            if self._batch_applied(m, batch_id):
+            if manifest.batch_applied(m, batch_id):
                 return None  # a concurrent writer applied this batch
             self._check_writer_modulus(m)
-            cols = list(m["extra_columns"])
-            cols += [c for c in extra_cols if c not in cols]
-            return {
-                "id": m["id"] + 1,
-                "parent": m["id"],
-                "n_buckets": self.n_buckets,
-                "minhash_bands": self.minhash_bands,
-                "extra_columns": cols,
-                "buckets": dict(m["buckets"]),
-                "bucket_routes": dict(m["bucket_routes"]),
-                "minor_count": m.get("minor_count", 0),
-                "deltas": m["deltas"] + [delta_entry],
-                **{k: v for k, v in self._with_batch(m, batch_id).items()
-                   if k in ("batch_wm", "recent_batch_ids")},
-            }
+            cols = m["extra_columns"]
+            return manifest.child(
+                m, **manifest.with_batch(m, batch_id),
+                extra_columns=cols + [c for c in extra_cols if c not in cols],
+                deltas=m["deltas"] + [delta_entry],
+            )
 
         # batch durable before compaction; a delta append rebases over ANY
         # concurrent commit — a decoupled compaction's fold can only have
@@ -1100,7 +1003,7 @@ class ParquetLake:
         stats["delta_dir"] = out_dir
 
         if (self.compact_every is not None
-                and self._raw_delta_count(new_meta) >= self.compact_every):
+                and manifest.raw_delta_count(new_meta) >= self.compact_every):
             t0 = time.monotonic()
             new_meta = self._maybe_compact(new_meta)
             stats["compact_sec"] = round(time.monotonic() - t0, 3)
@@ -1155,13 +1058,6 @@ class ParquetLake:
         # losing versions never pay the shingle cost
         return out
 
-    @staticmethod
-    def _raw_delta_count(meta: dict) -> int:
-        """Deltas appended since the last compaction of any kind — the
-        product of a MINOR fold (merged=True) does not re-trigger
-        compaction by itself."""
-        return sum(1 for d in meta["deltas"] if not d.get("merged"))
-
     def _maybe_compact(self, meta: dict) -> dict:
         """Tiered compaction policy: MAJOR (fold into the base) when no
         base exists yet or when `major_every` compactions have passed
@@ -1169,7 +1065,7 @@ class ParquetLake:
         otherwise."""
         is_major = (
             not meta["buckets"]
-            or meta.get("minor_count", 0) >= self.major_every - 1
+            or meta["minor_count"] >= self.major_every - 1
         )
         if is_major:
             return self._compact(meta)
@@ -1192,7 +1088,7 @@ class ParquetLake:
         data_rel, pairs = self._fold_write(
             self._read_deltas(meta["deltas"], list(meta["extra_columns"])),
             meta, "m", self.n_buckets,
-            max(len(self._delta_touched_buckets(meta)), 1), horizon=None,
+            max(len(manifest.touched_buckets(meta)), 1), horizon=None,
         )
         out_dir = os.path.join(self.table_dir, data_rel)
 
@@ -1205,7 +1101,7 @@ class ParquetLake:
         # SUBSET major fold.
         folded = []
         if pairs:
-            buckets, bucket_routes = self._bucket_maps(data_rel, pairs)
+            buckets, bucket_routes = manifest.bucket_maps(data_rel, pairs)
             folded = [{
                 "path": data_rel, "format": "flat", "merged": True,
                 "routes": sorted({r for rs in bucket_routes.values()
@@ -1215,62 +1111,30 @@ class ParquetLake:
             }]
 
         # Optimistic commit: the fold consumed exactly meta's delta set.
-        # Rebase over concurrent INGEST commits by keeping their newer
-        # deltas outstanding (LWW is order-insensitive, so list position
-        # doesn't matter); abort if a concurrent COMPACTION already
-        # consumed any input (our fold is then stale duplicate work —
-        # dropping it is exact because the table never referenced it).
-        consumed = {d["path"] for d in meta["deltas"]}
-
+        # It rebases over concurrent INGEST commits, whose newer deltas
+        # stay outstanding, and aborts when its inputs went stale.
         def build(m: dict) -> dict | None:
-            if m["n_buckets"] != self.n_buckets:
-                return None  # rebucketed underneath: this fold's output
-                # (bucket lists, dirs) is hashed with the OLD modulus —
-                # abort; the rebucket already folded the whole backlog
-            if not consumed <= {d["path"] for d in m["deltas"]}:
+            if not manifest.fold_still_applies(m, meta, self.n_buckets):
                 return None
-            out = {
-                **m,
-                "id": m["id"] + 1,
-                "parent": m["id"],
-                "deltas": folded + [
-                    d for d in m["deltas"] if d["path"] not in consumed
-                ],
-                "minor_count": m.get("minor_count", 0) + 1,
-            }
-            # a fold is NOT a rollback: carrying the parent's rollback
-            # markers forward (the blanket spread above) would make
-            # read_changes spuriously reject ranges STARTING AT the
-            # rollback commit — the exact recovery path rollback_to
-            # documents as working
-            out.pop("rollback", None)
-            out.pop("rolled_back_to", None)
-            return out
+            return manifest.child(
+                m, deltas=folded + manifest.unconsumed(m, meta),
+                minor_count=m["minor_count"] + 1,
+            )
 
+        return self._commit_fold(meta, data_rel, build) or self.current_meta()
+
+    def _commit_fold(self, meta: dict, data_rel: str, build) -> dict | None:
+        """Commit a fold (or rebucket) of `meta` whose output is the tree
+        `data_rel`; a fold commit also pays for the cleanup (expire old
+        snapshots and orphaned data dirs). Returns None when the fold
+        aborted: its output, never referenced, is dropped."""
         new_meta = self._commit_with_rebase(meta, build)
         if new_meta is None:
-            shutil.rmtree(out_dir, ignore_errors=True)
-            return self.current_meta()
+            shutil.rmtree(os.path.join(self.table_dir, data_rel),
+                          ignore_errors=True)
+            return None
         self.expire_snapshots(keep_last=self.snapshot_retention)
         return new_meta
-
-    @staticmethod
-    def _delta_touched_buckets(
-        meta: dict, route: str | None = None
-    ) -> list[int]:
-        """Union of the manifest's per-delta touched-bucket lists — the
-        base buckets a MAJOR fold must read.
-
-        route=X keeps only deltas whose manifest route list contains X
-        (the same pruning _read_split applies to the delta scan), so a
-        tenant-scoped subset read joins only the buckets touched by the
-        TENANT'S own backlog — a bucket churned exclusively by other
-        tenants streams through the tenant's read join-free."""
-        return sorted({
-            int(b) for d in meta["deltas"]
-            if ParquetLake._delta_matches_route(d, route)
-            for b in d["buckets"]
-        })
 
     def _fold_input(
         self, meta: dict, extra_cols: list[str], buckets: list[int] | None
@@ -1342,22 +1206,6 @@ class ParquetLake:
             shutil.rmtree(out_dir, ignore_errors=True)
         return data_rel, pairs
 
-    @staticmethod
-    def _bucket_maps(data_rel: str, pairs: list) -> tuple[dict, dict]:
-        """A fold's (bucket, route) pair set -> (bucket -> bucket dir,
-        bucket -> sorted route list), keyed by the bucket as a string, in
-        bucket order."""
-        routes: dict[str, set] = {}
-        for p in pairs:
-            rs = routes.setdefault(p["b"], set())
-            if p["r"] is not None:
-                rs.add(p["r"])
-        order = sorted(routes, key=int)
-        return (
-            {b: os.path.join(data_rel, f"{BUCKET_COL}={b}") for b in order},
-            {b: sorted(routes[b]) for b in order},
-        )
-
     def _compact(self, meta: dict, full: bool = False) -> dict:
         """MAJOR compaction: fold the outstanding deltas into the base and
         drop the delta list. Only the base buckets the deltas touch —
@@ -1380,7 +1228,7 @@ class ParquetLake:
 
         full=True counts every base bucket as touched, so the same fold
         rewrites the whole base (and expires tombstones everywhere)."""
-        touched = self._delta_touched_buckets(meta)
+        touched = manifest.touched_buckets(meta)
         if full:
             touched = sorted(set(touched) | {int(b) for b in meta["buckets"]})
         # the exchange is sized by the touched-bucket count, not the
@@ -1390,62 +1238,32 @@ class ParquetLake:
             meta, "s", self.n_buckets, max(len(touched), 1),
             self.tombstone_horizon_lsn,
         )
-        written, written_routes = self._bucket_maps(data_rel, pairs)
+        written, written_routes = manifest.bucket_maps(data_rel, pairs)
 
         # Optimistic commit (the Iceberg RewriteFiles model): the fold is
         # a pure function of (the base buckets it read, the delta set it
-        # consumed). Rebase over concurrent INGEST commits — their new
+        # consumed). It rebases over concurrent INGEST commits — their new
         # deltas stay outstanding, strictly newer than anything folded,
-        # so LWW over (folded base ∪ new deltas) is exact. Abort when a
-        # concurrent compaction consumed any input delta or repointed any
-        # base bucket the fold read: the output is then built on stale
-        # inputs and is simply dropped (never referenced, so exact).
-        consumed = {d["path"] for d in meta["deltas"]}
+        # so LWW over (folded base ∪ new deltas) is exact — and aborts
+        # when its inputs went stale. Untouched buckets carry forward by
+        # reference; touched buckets repoint to the fold output, or drop
+        # out entirely when the fold left them empty.
         read_buckets = {str(b) for b in touched}
 
-        def build(m: dict) -> dict | None:
-            if m["n_buckets"] != self.n_buckets:
-                return None  # rebucketed underneath: the fold's buckets
-                # are hashed with the OLD modulus — abort (exact: the
-                # rebucket consumed every delta this fold read)
-            if not consumed <= {d["path"] for d in m["deltas"]}:
-                return None
-            if any(m["buckets"].get(b) != meta["buckets"].get(b)
-                   for b in read_buckets):
-                return None
-            # untouched buckets carry forward by reference; touched
-            # buckets repoint to the fold output, or drop out entirely
-            # when the fold left them empty
-            return {
-                "id": m["id"] + 1,
-                "parent": m["id"],
-                "n_buckets": self.n_buckets,
-                "minhash_bands": self.minhash_bands,
-                "extra_columns": list(m["extra_columns"]),
-                "buckets": {
-                    **{b: p for b, p in m["buckets"].items()
-                       if b not in read_buckets},
-                    **written,
-                },
-                "bucket_routes": {
-                    **{b: r for b, r in m["bucket_routes"].items()
-                       if b not in read_buckets},
-                    **written_routes,
-                },
-                "deltas": [d for d in m["deltas"] if d["path"] not in consumed],
-                "batch_wm": m["batch_wm"],
-                "recent_batch_ids": m["recent_batch_ids"],
-            }
+        def carried(by_bucket: dict) -> dict:
+            return {b: v for b, v in by_bucket.items() if b not in read_buckets}
 
-        new_meta = self._commit_with_rebase(meta, build)
-        if new_meta is None:
-            shutil.rmtree(os.path.join(self.table_dir, data_rel),
-                          ignore_errors=True)
-            return self.current_meta()
-        # compaction doubles commit frequency vs plain appends, so it also
-        # pays for the cleanup: expire old snapshots + orphaned data dirs
-        self.expire_snapshots(keep_last=self.snapshot_retention)
-        return new_meta
+        def build(m: dict) -> dict | None:
+            if not manifest.fold_still_applies(
+                    m, meta, self.n_buckets, read_buckets):
+                return None
+            return manifest.child(
+                m, buckets={**carried(m["buckets"]), **written},
+                bucket_routes={**carried(m["bucket_routes"]), **written_routes},
+                deltas=manifest.unconsumed(m, meta), minor_count=0,
+            )
+
+        return self._commit_fold(meta, data_rel, build) or self.current_meta()
 
     def read_dead_letters(self, status: str | None = None) -> DataFrame:
         """The OUTSTANDING dead-letter queue: every poison record
@@ -1521,12 +1339,10 @@ class ParquetLake:
         def build(m: dict) -> dict | None:
             if m["id"] != cur["id"]:
                 return None  # concurrent commit: refuse (see docstring)
-            new = dict(target)
-            new["id"] = m["id"] + 1
-            new["parent"] = m["id"]
-            new["rollback"] = True
-            new["rolled_back_to"] = int(snapshot_id)
-            return new
+            return manifest.child(
+                m, **manifest.table(target),
+                rollback=True, rolled_back_to=int(snapshot_id),
+            )
 
         return self._commit_with_rebase(cur, build)
 
@@ -1643,12 +1459,15 @@ class ParquetLake:
         tier='auto' follows the tiered policy (minor folds, every
         major_every-th one major), 'minor'/'major' force a tier; full=True
         forces a major that counts every base bucket as touched, so it
-        rewrites the whole base (_compact). Returns the resulting
+        rewrites the whole base (_compact) — with no outstanding delta
+        too, which is how tombstones past a raised tombstone_horizon_lsn
+        expire in buckets no delta touches. Returns the resulting
         current manifest (unchanged when there was nothing to fold or the
         fold aborted)."""
-        meta = self.current_meta()
-        if meta is None or not meta["deltas"]:
-            return meta if meta is not None else self._empty_meta()
+        meta = self._head()
+        full_major = full and tier != "minor" and meta["buckets"]
+        if not meta["deltas"] and not full_major:
+            return meta
         if tier == "minor":
             return self._compact_minor(meta)
         if tier == "major" or full:
@@ -1688,9 +1507,7 @@ class ParquetLake:
         if a concurrent commit aborted the rebucket."""
         if new_n_buckets < 1:
             raise ValueError(f"new_n_buckets must be >= 1, got {new_n_buckets}")
-        meta = self.current_meta()
-        if meta is None:
-            meta = self._empty_meta()
+        meta = self._head()
         if meta["n_buckets"] == new_n_buckets:
             self.n_buckets = new_n_buckets
             return meta  # already at the requested count: no-op
@@ -1702,31 +1519,19 @@ class ParquetLake:
             meta, "s", new_n_buckets, new_n_buckets,
             self.tombstone_horizon_lsn,
         )
-        buckets, bucket_routes = self._bucket_maps(data_rel, pairs)
+        buckets, bucket_routes = manifest.bucket_maps(data_rel, pairs)
 
         def build(m: dict) -> dict | None:
             if m["id"] != meta["id"]:
                 return None  # any concurrent commit invalidates the rewrite
-            return {
-                "id": m["id"] + 1,
-                "parent": m["id"],
-                "n_buckets": new_n_buckets,
-                "minhash_bands": self.minhash_bands,
-                "extra_columns": list(m["extra_columns"]),
-                "buckets": buckets,
-                "bucket_routes": bucket_routes,
-                "deltas": [],
-                "batch_wm": m["batch_wm"],
-                "recent_batch_ids": m["recent_batch_ids"],
-            }
+            return manifest.child(
+                m, n_buckets=new_n_buckets, buckets=buckets,
+                bucket_routes=bucket_routes, deltas=[], minor_count=0,
+            )
 
-        new_meta = self._commit_with_rebase(meta, build)
-        if new_meta is None:
-            shutil.rmtree(os.path.join(self.table_dir, data_rel),
-                          ignore_errors=True)
-            return None
-        self.n_buckets = new_n_buckets
-        self.expire_snapshots(keep_last=self.snapshot_retention)
+        new_meta = self._commit_fold(meta, data_rel, build)
+        if new_meta is not None:
+            self.n_buckets = new_n_buckets
         return new_meta
 
     def _normalize_rows(self, df: DataFrame, extra_cols: list[str]) -> DataFrame:
@@ -1800,7 +1605,7 @@ class ParquetLake:
         base = self._read_base(meta, extra_cols, route=route, bucket_set=bucket_set)
 
         delta = self._read_deltas(
-            [d for d in meta["deltas"] if self._delta_matches_route(d, route)],
+            [d for d in meta["deltas"] if manifest.matches_route(d, route)],
             extra_cols, route=route,
         )
         return base, delta
@@ -1834,34 +1639,6 @@ class ParquetLake:
         if not fs.exists(jpath):
             return 0
         return int(fs.getContentSummary(jpath).getLength())
-
-    def _delta_bytes(self, meta: dict, route: str | None = None) -> int:
-        """Merge-relevant bytes of the outstanding deltas — only those a
-        route-scoped read actually keeps (manifest route pruning), so a
-        tenant read's broadcast-vs-aggregate switch is sized by the
-        tenant's own backlog, not the whole table's. Commits record each
-        delta's byte count in its manifest entry (ok-partition only for
-        parsed deltas — dead letters never merge), so the steady-state
-        read sums a handful of manifest integers and walks no files."""
-        return sum(
-            d["bytes"] for d in meta["deltas"]
-            if self._delta_matches_route(d, route)
-        )
-
-    @staticmethod
-    def _delta_matches_route(d: dict, route: str | None) -> bool:
-        """Manifest-level delta pruning for route-scoped reads: a delta
-        whose route list lacks X holds no row of route X."""
-        return route is None or route in d["routes"]
-
-    @staticmethod
-    def _bucket_pruned(meta: dict, buckets: set[int]) -> dict:
-        """`meta` keeping only the deltas whose touched-bucket list meets
-        `buckets`: any other delta holds no version of a key hashed into
-        them."""
-        return dict(meta, deltas=[
-            d for d in meta["deltas"] if not buckets.isdisjoint(d["buckets"])
-        ])
 
     def _read_mor_subset(
         self, meta: dict, extra_cols: list[str], route: str | None,
@@ -2012,12 +1789,12 @@ class ParquetLake:
             prune_route = None if migration_exact else route
             if (
                 meta["deltas"] and meta["buckets"]
-                and self._delta_bytes(meta, route=prune_route)
+                and manifest.delta_bytes(meta, route=prune_route)
                 <= self.broadcast_delta_bytes
             ):
                 df, unsigned_possible = self._read_mor_subset(
                     meta, extra_cols, route,
-                    self._delta_touched_buckets(meta, route=prune_route),
+                    manifest.touched_buckets(meta, route=prune_route),
                     migration_exact=migration_exact,
                 )
             else:
@@ -2107,6 +1884,12 @@ class ParquetLake:
     # idea (expression-tree size, no footer-stat benefit once the key set
     # spans most row groups) and a broadcast semi-join takes over
     LOOKUP_PREDICATE_MAX = 64
+    # MoR read strategy switch: when the outstanding deltas are at most
+    # this many parquet bytes, read() resolves them with a BROADCAST
+    # key-set join against the base (scan-only, no table-wide shuffle)
+    # and read_changes broadcasts its classification join; bigger
+    # backlogs fall back to the global LWW aggregate. See read().
+    broadcast_delta_bytes = 32 * 1024 * 1024
 
     def lookup_many(
         self,
@@ -2146,7 +1929,7 @@ class ParquetLake:
             self.key_buckets(keys, n_buckets=meta["n_buckets"]).values()
         )
         base, delta = self._read_split(
-            self._bucket_pruned(meta, wset), extra_cols, buckets=sorted(wset)
+            manifest.bucket_pruned(meta, wset), extra_cols, buckets=sorted(wset)
         )
 
         if len(keys) <= self.LOOKUP_PREDICATE_MAX:
@@ -2229,47 +2012,6 @@ class ParquetLake:
             cur = m.get("parent")
         chain.reverse()
         return chain
-
-    @staticmethod
-    def _range_data_entries(chain: list[dict], from_meta: dict | None) -> list[dict]:
-        """The delta entries APPENDED BY DATA COMMITS within the chain.
-        Per-commit manifest diff: a data commit adds exactly one delta
-        entry and removes none; a fold (minor/major) or rebucket removes
-        entries (its added merged entry only REORGANIZES rows already
-        counted — collecting it would double-count, and worse, a minor
-        fold can merge deltas that predate the range start); an
-        empty-batch commit changes nothing. The union of the returned
-        entries' files therefore holds exactly the row versions written
-        in the range, each once.
-
-        A commit that repoints base buckets without consuming a delta or
-        changing the modulus is a copy-on-write data commit (older lakes
-        may hold them): its rows never reached a delta, so the range is
-        refused rather than read short."""
-        prev = {d["path"] for d in (from_meta or {}).get("deltas", [])}
-        prev_meta = from_meta or {}
-        entries: list[dict] = []
-        for m in chain:
-            cur = {d["path"] for d in m["deltas"]}
-            removed = prev - cur
-            if not removed:
-                modulus = m["n_buckets"]
-                if (m["buckets"] != prev_meta.get("buckets", {})
-                        and prev_meta.get("n_buckets", modulus) == modulus):
-                    raise ValueError(
-                        f"snapshot {m['id']} rewrote base buckets without "
-                        "consuming a delta (a copy-on-write commit): it "
-                        "left no per-commit delta trail to read changes "
-                        "from — resync from a fresh bootstrap, or read "
-                        "changes from that commit onward"
-                    )
-                entries.extend(
-                    d for d in m["deltas"]
-                    if d["path"] not in prev and not d.get("merged")
-                )
-            prev = cur
-            prev_meta = m
-        return entries
 
     def read_changes(
         self,
@@ -2360,7 +2102,7 @@ class ParquetLake:
                 f"from snapshot {from_snapshot_id} has been expired by "
                 "expire_snapshots — sync within the retention window"
             ) from None
-        entries = self._range_data_entries(chain, from_meta)
+        entries = manifest.range_data_entries(chain, from_meta)
         if not entries:
             return empty()
 
@@ -2379,7 +2121,7 @@ class ParquetLake:
         if prune_route is not None:
             entries = [
                 d for d in entries
-                if self._delta_matches_route(d, prune_route)
+                if manifest.matches_route(d, prune_route)
             ]
             if not entries:
                 return empty()
@@ -2427,7 +2169,7 @@ class ParquetLake:
                 ).distinct().collect()
             }
         base, delta = self._read_split(
-            self._bucket_pruned(from_meta, wset), extra_cols,
+            manifest.bucket_pruned(from_meta, wset), extra_cols,
             route=prune_route, buckets=sorted(wset),
         )
         prior = self._resolve_split(base, delta)

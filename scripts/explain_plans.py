@@ -50,7 +50,7 @@ def write_plans(spark, work: str) -> int:
     PLANS.md; returns 1 if any asserted property fails, else 0."""
     from pyspark.sql import functions as F
 
-    from pyspark_cdc import generate
+    from pyspark_cdc import generate, manifest
     from pyspark_cdc.order import ORD_COLS
     from pyspark_cdc.parse import parse_envelopes
     from pyspark_cdc.queries import REGISTRY
@@ -209,7 +209,7 @@ def write_plans(spark, work: str) -> int:
     )
     mor3.merge_parsed(parse_envelopes(conf), 1)
     meta3 = mor3.current_meta()
-    touched3 = ParquetLake._delta_touched_buckets(meta3)
+    touched3 = manifest.touched_buckets(meta3)
     plan = formatted(mor3.read())
     check(
         "MoR SUBSET steady-state read (join only delta-touched buckets)",
@@ -383,7 +383,7 @@ def write_plans(spark, work: str) -> int:
     # exchanges as mor4's minor and subset-major folds would run it.
     meta4b = mor4.current_meta()
     extra4 = list(meta4b["extra_columns"])
-    touched4 = mor4._delta_touched_buckets(meta4b)
+    touched4 = manifest.touched_buckets(meta4b)
     folds = [
         ("rebucket", mor4._fold_resolve(
             mor4._fold_input(meta4b, extra4, None),

@@ -7,11 +7,12 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark_cdc.session import get_spark  # noqa: E402
-
 
 @pytest.fixture(scope="session")
 def spark():
+    # imported here, so a Spark-free test file never loads pyspark
+    from pyspark_cdc.session import get_spark
+
     s = get_spark(app_name="pyspark_cdc_tests", cores=4, shuffle_partitions=8)
     yield s
     s.stop()

@@ -14,6 +14,7 @@ import json
 
 import pytest
 
+from pyspark_cdc import manifest
 from pyspark_cdc.schemas import KAFKA_SHAPE
 from pyspark_cdc.sink import CHANGE_TYPE_COL, ParquetLake
 from pyspark_cdc.stream import process_batch
@@ -229,12 +230,14 @@ def test_empty_range_and_validation(spark, tmp_path):
     assert CHANGE_TYPE_COL in lake.read_changes(b, b).columns
     with pytest.raises(ValueError, match="newer than"):
         lake.read_changes(b, 0)
-    # a copy-on-write data commit (repoints a base bucket, consumes no
-    # delta) left no delta trail: the range is refused, not read short
+    # a copy-on-write data commit (applies a batch by repointing a base
+    # bucket, consumes no delta) left no delta trail: the range is
+    # refused, not read short
     meta = lake.current_meta()
     lake._commit_snapshot(dict(meta, id=b + 1, parent=b,
                                buckets={"0": "data/s-cow/__bucket=0"},
-                               bucket_routes={"0": ["t"]}))
+                               bucket_routes={"0": ["t"]},
+                               **manifest.with_batch(meta, 1)))
     with pytest.raises(ValueError, match="copy-on-write"):
         lake.read_changes(b, b + 1)
 

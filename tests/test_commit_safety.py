@@ -25,6 +25,7 @@ import os
 import pytest
 
 from jobs.maintain import fold_aborted
+from pyspark_cdc import manifest
 from pyspark_cdc.sink import CommitConflict, ParquetLake
 
 
@@ -36,7 +37,7 @@ def _lake(spark, tmp_path, **kw):
 
 
 def _meta(lake, snap_id: int, marker: str = "") -> dict:
-    m = lake._empty_meta()
+    m = manifest.empty(lake.n_buckets, lake.minhash_bands)
     m["id"] = snap_id
     m["parent"] = snap_id - 1
     if marker:

@@ -12,7 +12,7 @@ import importlib.util
 import json
 import os
 
-from pyspark_cdc import generate, oracle
+from pyspark_cdc import generate, manifest, oracle
 from pyspark_cdc.sink import ParquetLake
 
 
@@ -52,7 +52,7 @@ def test_decoupled_replay_then_maintain_matches_oracle(spark, tmp_path, capsys):
     lake = ParquetLake(spark, table, n_buckets=8, mode="mor",
                        compact_every=None)
     meta = lake.current_meta()
-    assert ParquetLake._raw_delta_count(meta) == 5, meta["deltas"]
+    assert manifest.raw_delta_count(meta) == 5, meta["deltas"]
 
     rc = maintain.main(["--table-dir", table, "--n-buckets", "8", "--once"])
     assert rc == 0

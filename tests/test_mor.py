@@ -9,7 +9,7 @@ import os
 
 from conftest import assert_state_equal
 
-from pyspark_cdc import generate
+from pyspark_cdc import generate, manifest
 from pyspark_cdc.oracle import replay, replay_parquet_log
 from pyspark_cdc.sink import ParquetLake
 from pyspark_cdc.stream import replay_batch, replay_stream
@@ -60,7 +60,7 @@ def test_mor_streaming_compacts_and_stays_correct(spark, tmp_path):
     # 8 batches with compact_every=3 => at least two compactions happened
     # and pending RAW deltas are below the threshold (a minor fold's
     # merged delta may ride along until the next major)
-    assert ParquetLake._raw_delta_count(meta) < 3
+    assert manifest.raw_delta_count(meta) < 3
     assert len(meta["deltas"]) <= 3
     assert len(mor.applied_batch_ids()) == 8
 
@@ -269,7 +269,7 @@ def test_tiered_compaction_minor_then_major(spark, tmp_path):
     feed(0, [rec(env("c", after=row(1, 1), lsn=1), 1)])
     feed(1, [rec(env("c", after=row(2, 2), lsn=2), 2)])
     m = lake.current_meta()
-    assert m["buckets"] and m["deltas"] == [] and m.get("minor_count", 0) == 0
+    assert m["buckets"] and m["deltas"] == [] and m["minor_count"] == 0
     base_buckets = dict(m["buckets"])
 
     # batches 2,3 (incl. a tombstone for p1) -> compaction #2: MINOR
@@ -292,7 +292,7 @@ def test_tiered_compaction_minor_then_major(spark, tmp_path):
     feed(4, [rec(env("u", after=row(4, 5), lsn=5), 5)])
     feed(5, [rec(env("u", after=row(5, 6), lsn=6), 6)])
     m = lake.current_meta()
-    assert m["deltas"] == [] and m.get("minor_count", 0) == 0
+    assert m["deltas"] == [] and m["minor_count"] == 0
     assert m["buckets"] != base_buckets  # base rewritten
 
     assert {k: v.get("content") for k, v in _rows(lake).items()} == {
@@ -470,7 +470,7 @@ def test_manifest_records_routes_and_bytes(spark, tmp_path):
     all_bytes = walk_bytes(os.path.join(mor.table_dir, delta["path"]))
     assert delta["bytes"] == ok_bytes < all_bytes
     # and read()'s switch consumes exactly the manifest sum
-    assert mor._delta_bytes(mor.current_meta()) == ok_bytes
+    assert manifest.delta_bytes(mor.current_meta()) == ok_bytes
     # the touched-bucket list is recorded for subset majors (one bucket
     # per ok key here at most, never the dead letter)
     assert 0 < len(delta["buckets"]) <= 2
@@ -631,7 +631,7 @@ def test_subset_major_equals_full_major(spark, tmp_path):
     feed(4, [upsert(*tk[2], 2200)])
     feed(5, [upsert(*tk[0], 2300)])
     sub_meta = lake.current_meta()
-    assert sub_meta["deltas"] == [] and sub_meta.get("minor_count", 0) == 0
+    assert sub_meta["deltas"] == [] and sub_meta["minor_count"] == 0
 
     # 1) visible state = the oracle's
     state = _rows(lake)
@@ -654,19 +654,18 @@ def test_subset_major_equals_full_major(spark, tmp_path):
     # until next touch); tk[1]'s (lsn 2100 >= 1000) is live
     assert tomb_key in tombs() and tk[1] in tombs()
 
-    # 4) a full major over a backlog that touches no bucket (one
-    # dead-letter-only batch) rewrites every bucket into one fresh tree
-    # and expires tomb_key's tombstone there; the visible state is
-    # unchanged
-    feed(6, [_rec("", 12)])
+    # 4) a full major with no outstanding delta rewrites every bucket
+    # into one fresh tree and expires tomb_key's tombstone there; the
+    # visible state is unchanged, so the change feed across it is empty
     full_meta = lake.compact_now(tier="major", full=True)
-    assert full_meta["deltas"] == [] and full_meta["id"] > sub_meta["id"]
+    assert full_meta["deltas"] == [] and full_meta["id"] == sub_meta["id"] + 1
     assert len(parents(full_meta)) == 1
     assert _rows(lake) == state
     assert tomb_key not in tombs() and tk[1] in tombs()
+    assert lake.read_changes(sub_meta["id"], full_meta["id"]).count() == 0
 
     # 5) the lake keeps working after the full fold
-    feed(7, [upsert("org/r", "src/f1.py", 3000, "v3000")])
+    feed(6, [upsert("org/r", "src/f1.py", 3000, "v3000")])
     assert_state_equal(
         _rows(lake),
         replay(sorted(recs, key=lambda r: r["offset"]))["state"],
@@ -757,7 +756,7 @@ def test_subset_mor_read_joins_only_touched_buckets(spark, tmp_path):
     meta = lake.current_meta()
     extra_cols = list(meta["extra_columns"])
     assert len(meta["deltas"]) == 2
-    touched = ParquetLake._delta_touched_buckets(meta)
+    touched = manifest.touched_buckets(meta)
     assert set(touched) == {touched_bucket, kb[new_key]}
 
     # 1) the strategies agree row-for-row and with the oracle

@@ -12,7 +12,7 @@ import json
 import threading
 import time
 
-from pyspark_cdc import oracle
+from pyspark_cdc import manifest, oracle
 from pyspark_cdc.schemas import KAFKA_SHAPE
 from pyspark_cdc.search_sync import SearchIndexSync
 from pyspark_cdc.sink import ParquetLake
@@ -70,7 +70,7 @@ def test_concurrent_ingest_maintenance_and_pinned_sync(spark, tmp_path):
         try:
             while not stop.is_set():
                 meta = maint.current_meta()
-                if meta is not None and ParquetLake._raw_delta_count(meta) >= 3:
+                if meta is not None and manifest.raw_delta_count(meta) >= 3:
                     maint.compact_now(tier="auto")
                 time.sleep(0.05)
         except BaseException as e:  # surface in the main thread

@@ -249,24 +249,34 @@ def test_rollback_interleavings_match_oracle(
 
 def test_minor_fold_does_not_inherit_the_rollback_marker(spark, tmp_path):
     """rollback_to documents that change reads STARTING AT the rollback
-    commit work normally. A MINOR fold's rebase spread used to copy the
-    parent manifest wholesale — including the rollback marker — so the
-    first minor fold after a rollback re-poisoned the chain and
-    read_changes(rb_id, current) raised 'crosses a rollback', forcing
-    the needless full resync the contract promises to avoid."""
+    commit work normally. A MINOR fold's rebase spread, and an empty
+    batch's, used to copy the parent manifest wholesale — including the
+    rollback marker — so the first such commit after a rollback
+    re-poisoned the chain and read_changes(rb_id, current) raised
+    'crosses a rollback', forcing the needless full resync the contract
+    promises to avoid."""
     lake = _lake(spark, tmp_path)
     _feed(spark, lake, 0, [_up(1, 1, 1)])
     a = lake.current_meta()["id"]
     _feed(spark, lake, 1, [_up(1, 666, 10)])  # the bad batch
-    rolled = lake.rollback_to(a)
-    rb_id = rolled["id"]
+
+    # a quiet source right after the rollback: an empty micro-batch
+    rb_id = lake.rollback_to(a)["id"]
+    raw = spark.createDataFrame([_up(2, 1, 15)], schema=KAFKA_SHAPE)
+    process_batch(raw.limit(0), 2, lake)
+    empty = lake.current_meta()
+    assert empty["id"] == rb_id + 1
+    assert "rollback" not in empty and "rolled_back_to" not in empty
+    assert lake.read_changes(rb_id, empty["id"]).count() == 0
 
     # the rolled-back manifest still holds batch 0's raw delta: a MINOR
     # fold right here is the natural next maintenance action
+    rb_id = lake.rollback_to(a)["id"]
     folded = lake.compact_now(tier="minor")
-    assert not folded.get("rollback"), "fold must not carry the marker"
+    assert folded["id"] == rb_id + 1
+    assert "rollback" not in folded and "rolled_back_to" not in folded
 
-    _feed(spark, lake, 2, [_up(3, 1, 20)])
+    _feed(spark, lake, 3, [_up(3, 1, 20)])
     changes = {(r["repo"], r["path"], r["_change_type"])
                for r in lake.read_changes(rb_id).collect()}
     assert changes == {("r", "p3", "insert")}

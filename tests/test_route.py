@@ -10,7 +10,7 @@ import json
 
 from pyspark.sql import functions as F
 
-from pyspark_cdc import generate
+from pyspark_cdc import generate, manifest
 from pyspark_cdc.sink import ParquetLake
 from pyspark_cdc.stream import process_batch
 
@@ -242,10 +242,10 @@ def test_route_scoped_subset_read_joins_only_own_touched_buckets(
     assert delta["routes"] == [route_a]
 
     # manifest-level: B's touched set is empty, A's is the delta's own
-    touched_all = ParquetLake._delta_touched_buckets(meta)
-    assert ParquetLake._delta_touched_buckets(meta, route=route_a) == touched_all
+    touched_all = manifest.touched_buckets(meta)
+    assert manifest.touched_buckets(meta, route=route_a) == touched_all
     assert touched_all  # the A backlog really touches buckets
-    assert ParquetLake._delta_touched_buckets(meta, route=route_b) == []
+    assert manifest.touched_buckets(meta, route=route_b) == []
 
     # plan-level: the B read is join-free (pure pruned base scan), the A
     # read still carries the broadcast merge join
