@@ -32,20 +32,27 @@ import time
 
 
 def fold_aborted(before_meta: dict | None, after_meta: dict | None) -> bool:
-    """Whether a compact_now call left the backlog it saw untouched.
+    """Whether a compact_now call left the lake as it found it.
 
     Must not infer from backlog_after < backlog_before: concurrent ingest
     can append deltas FASTER than the fold consumed them, making a
     successful fold look aborted (undercounting folds and reading like an
-    OCC livelock in the maintenance log). A committed fold always removes
-    at least one of the delta entries it saw; concurrent ingest only ADDS
-    entries — so "some pre-fold delta path disappeared" detects success
-    exactly, whatever the interleaving. (If a CONCURRENT compactor
-    consumed them while ours lost the race, the backlog is folded either
-    way — reporting success matches the observable table state.)"""
+    OCC livelock in the maintenance log). A committed fold either removes
+    a delta entry it saw or repoints base buckets (a full major of a lake
+    with no outstanding delta does only the latter); concurrent ingest
+    only ADDS delta entries and never touches the bucket map — so "some
+    pre-fold delta path disappeared, or the bucket map changed" detects
+    success exactly, whatever the interleaving. (If a CONCURRENT
+    compactor did that while ours lost the race, the backlog is folded
+    either way — reporting success matches the observable table state.)"""
     def paths(meta):
         return {d["path"] for d in (meta or {}).get("deltas", [])}
-    return paths(before_meta) <= paths(after_meta)
+
+    def buckets(meta):
+        return (meta or {}).get("buckets", {})
+
+    return (paths(before_meta) <= paths(after_meta)
+            and buckets(before_meta) == buckets(after_meta))
 
 
 def main(argv=None) -> int:

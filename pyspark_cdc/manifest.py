@@ -165,19 +165,12 @@ def matches_route(d: dict, route: str | None) -> bool:
 def touched_buckets(meta: dict, route: str | None = None) -> list[int]:
     """Union of the per-delta touched-bucket lists — the base buckets a
     MAJOR fold must read. route=X keeps only deltas whose route list
-    holds X, so a tenant-scoped subset read joins only the buckets its
-    own backlog touched."""
+    holds X, so a tenant-scoped read resolves only the buckets its own
+    backlog touched."""
     return sorted({
         int(b) for d in meta["deltas"] if matches_route(d, route)
         for b in d["buckets"]
     })
-
-
-def delta_bytes(meta: dict, route: str | None = None) -> int:
-    """Merge-relevant bytes of the outstanding deltas a route-scoped read
-    keeps, summed from the entries' byte counts (ok rows only for a
-    parsed delta): no file walk."""
-    return sum(d["bytes"] for d in meta["deltas"] if matches_route(d, route))
 
 
 def bucket_pruned(meta: dict, buckets: set[int]) -> dict:

@@ -8,14 +8,13 @@ WHEN NOT MATCHED INSERT` (SURVEY.md S5/S6/J2/J3) — on plain parquet:
 
 * Merge-on-read ingest: a batch appends its parsed rows as one DELTA —
   no table read, no sort, O(batch) per micro-batch (a 100 TB table
-  cannot be rewritten per micro-batch). LWW resolves at read (small
-  backlogs via a broadcast key-set join against only the base buckets
-  the deltas touch — zero table-wide shuffle; large ones via the global
-  aggregate) and at
-  TIERED compaction: every `compact_every` batches a MINOR fold merges
-  the deltas among themselves (O(recent data), no base read), and every
-  `major_every`-th compaction folds into the base — the Iceberg v2 /
-  Hudi / Paimon MoR + LSM-tiering design.
+  cannot be rewritten per micro-batch). LWW resolves at read (base
+  buckets no outstanding delta touches stream through as a plain scan;
+  the touched buckets and the deltas go through one per-key aggregate)
+  and at TIERED compaction: every `compact_every` batches a MINOR fold
+  merges the deltas among themselves (O(recent data), no base read), and
+  every `major_every`-th compaction folds into the base — the Iceberg v2
+  / Hudi / Paimon MoR + LSM-tiering design.
 * The base is hash-bucketed on the merge key: bucket =
   pmod(xxhash64(repo, path), n_buckets). A major fold reads and
   rewrites ONLY the buckets its deltas touch (copy-on-write at bucket
@@ -63,6 +62,7 @@ import os
 import shutil
 import time
 import uuid
+from collections.abc import Callable
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -1555,8 +1555,8 @@ class ParquetLake:
         buckets whose manifest route list contains X (the Q11 tenant
         read), and bucket_set keeps only those key-hash buckets
         (exclude=False — the subset-major fold's input) or everything BUT
-        them (exclude=True — the untouched side of the subset MoR read,
-        which streams through with no join at all)."""
+        them (exclude=True — the untouched side of _read_state, which
+        streams through with no aggregate)."""
         def bucket_has_route(b: str) -> bool:
             return route is None or route in meta["bucket_routes"][b]
 
@@ -1640,101 +1640,69 @@ class ParquetLake:
             return 0
         return int(fs.getContentSummary(jpath).getLength())
 
-    def _read_mor_subset(
-        self, meta: dict, extra_cols: list[str], route: str | None,
-        touched: list[int], migration_exact: bool = False,
-    ):
-        """Steady-state MoR read with the base SPLIT by the manifest's
-        touched-bucket lists: the bucket of a key is a pure function of the
-        key (bucket_expr), every delta commit records the buckets its ok
-        rows hash into, and every base writer lays rows out by the same
-        expression — so a delta key can only collide with base rows inside
-        a TOUCHED bucket. Untouched buckets therefore stream straight
-        through with NO join at all (not even the broadcast hash probe),
-        and only the touched buckets pay _merge_read_broadcast's two
-        scan-side passes (anti + semi). At a steady state where deltas
-        touch a small fraction f of the buckets, the base scan work drops
-        from 2x the table to (1+f)x — the read-path twin of the subset
-        MAJOR fold, driven by the same manifest bucket lists. Exactness is
-        the same argument as the subset major: an untouched bucket has no
-        delta versions, so LWW over (bucket ∪ ∅) is the bucket unchanged.
+    def _read_state(
+        self, meta: dict, extra_cols: list[str], route: str | None = None,
+        buckets: set[int] | None = None,
+        match: Callable[[DataFrame], DataFrame] | None = None,
+    ) -> DataFrame | None:
+        """LWW state of snapshot `meta` in the full row schema — the one
+        resolve behind read(), lookup_many and read_changes' prior state —
+        or None when no base bucket or delta survives pruning.
 
-        migration_exact=True is the tenant read under
-        route_stable_keys=False: the join branch reads the touched
-        buckets across ALL routes so any route's newer version can evict
-        the tenant's key, and its resolved winners are filtered on route
-        AFTERWARDS; the pass-through branch stays tenant-pruned either
-        way (an untouched bucket's base rows are global winners — their
-        stored route IS their winning route).
+        The base is split by the manifest's touched-bucket lists: a key's
+        bucket is a pure function of the key (bucket_expr), every delta
+        commit records the buckets its ok rows hash into, and every base
+        writer lays rows out by the same expression, so a delta version
+        can only meet a base row inside a TOUCHED bucket. Untouched
+        buckets stream through as a plain scan (base rows are unique per
+        key: every base writer is a resolve_lww output); the touched
+        buckets and the deltas go through one resolve_lww, so only the
+        touched base rows shuffle. Exact by the subset major's argument:
+        an untouched bucket has no delta versions, so LWW over
+        (bucket ∪ ∅) is the bucket unchanged.
 
-        Returns (df, unsigned_possible) — the second element feeds read()'s
-        signature fill (only delta-sourced winners can be unsigned)."""
-        join_route = None if migration_exact else route
-        base_t, delta = self._read_split(
-            meta, extra_cols, route=join_route, buckets=touched
-        )
-        base_u = self._read_base(
-            meta, extra_cols, route=route,
-            bucket_set={int(b) for b in touched}, exclude=True,
-        )
-        if delta is None:
-            # every delta was route-pruned away: this tenant's state is a
-            # plain (pruned) base scan
-            resolved = base_t
-        elif base_t is None:
-            resolved = resolve_lww(delta)
+        route=X is the tenant read (Q11): buckets and deltas whose
+        manifest route list lacks X are skipped and the route predicate
+        prunes the scans. Under route_stable_keys=False the resolved side
+        reads the touched buckets and deltas of ALL routes, so any route's
+        newer version can evict the tenant's key, and filters the winners
+        on route; the pass-through side stays tenant-pruned (an untouched
+        bucket's base rows are global winners, so their stored route is
+        their winning route).
+
+        buckets={...} keeps only those key-hash buckets of the base and
+        only the deltas whose bucket list meets them. A kept delta may
+        also hold versions of keys in other buckets, which come out
+        resolved without their base row: callers select their own keys,
+        either on the result or with `match`, a DataFrame -> DataFrame
+        key filter applied to every scan below the resolve (lookup_many's
+        key semi-join: the optimizer does not push a left-semi join
+        through resolve_lww's struct-unpacking projection)."""
+        migrating = route is not None and not self.route_stable_keys
+        scan_route = None if migrating else route
+        if buckets is not None:
+            meta = manifest.bucket_pruned(meta, buckets)
+        touched = set(manifest.touched_buckets(meta, route=scan_route))
+        if buckets is None:
+            passed = self._read_base(meta, extra_cols, route=route,
+                                     bucket_set=touched, exclude=True)
         else:
-            resolved = self._merge_read_broadcast(base_t, delta)
-        if migration_exact and resolved is not None and route is not None:
-            resolved = resolved.filter(F.col(ROUTE_COL) == route)
-        df = self._union([p for p in (resolved, base_u) if p is not None])
-        if df is None:
-            return self._empty_rows(extra_cols), False
-        return df, delta is not None
-
-    @staticmethod
-    def _resolve_split(base: DataFrame | None, delta: DataFrame | None):
-        """LWW state of a _read_split pair, or None when both are None.
-        Base rows are unique per key (every base writer is a resolve_lww
-        output), so a base alone is a plain scan with no aggregate."""
-        if delta is None:
-            return base
-        return resolve_lww(ParquetLake._union(
-            [p for p in (base, delta) if p is not None]
-        ))
-
-    def _merge_read_broadcast(self, base: DataFrame, delta: DataFrame) -> DataFrame:
-        """MoR read WITHOUT a table-wide shuffle, for the steady state
-        where the outstanding deltas are small relative to the base: base
-        rows not touched by any delta key stream straight through a
-        BROADCAST anti-join (scan-only, no exchange on the base), and the
-        LWW aggregate runs over just the overlapping base rows + delta
-        rows. Exact because every base writer is a resolve_lww output
-        (one row per key), so resolving a key needs only that key's base
-        row and its delta rows. Costs a second broadcast-join scan of the
-        base (the semi side) — two shuffle-free scans beat one full-table
-        shuffle at any scale where the base dominates.
-
-        INVARIANT: merge keys are non-null on BOTH sides — parse
-        dead-letters missing-key records ('missing_key' status) before any
-        merge, and every base/delta writer consumes only status='ok' rows.
-        This matters because left_anti/left_semi never match NULL keys: a
-        null-key base row would survive AND its delta version would win,
-        duplicating the key, where the groupBy of the aggregate path (and
-        of resolve_lww itself) treats nulls as one group. The guard below
-        makes the strategies interchangeable even if a future writer
-        violates the invariant: delta rows with any null key fold into the
-        winners aggregate against nothing (exactly what the global
-        aggregate would do with no null-key base rows to meet them)."""
-        null_key = None
-        for k in KEY_COLS:
-            c = F.col(k).isNull()
-            null_key = c if null_key is None else (null_key | c)
-        dk = delta.filter(~null_key).select(*KEY_COLS).distinct()
-        survivors = base.join(F.broadcast(dk), KEY_COLS, "left_anti")
-        overlap = base.join(F.broadcast(dk), KEY_COLS, "left_semi")
-        winners = resolve_lww(overlap.unionByName(delta, allowMissingColumns=True))
-        return survivors.unionByName(winners, allowMissingColumns=True)
+            touched &= buckets
+            passed = self._read_base(meta, extra_cols, route=route,
+                                     bucket_set=buckets - touched)
+        base, delta = self._read_split(meta, extra_cols, route=scan_route,
+                                       buckets=sorted(touched))
+        if match is not None:
+            passed, base, delta = (
+                None if p is None else match(p) for p in (passed, base, delta)
+            )
+        resolved = None
+        if delta is not None:
+            resolved = resolve_lww(
+                self._union([p for p in (base, delta) if p is not None]))
+            if migrating:
+                resolved = resolved.filter(F.col(ROUTE_COL) == route)
+        return self._union([p for p in (passed, resolved) if p is not None])
 
     # ---------------- read path ----------------
 
@@ -1769,55 +1737,18 @@ class ParquetLake:
             else self.current_meta()
         )
         extra_cols = list(meta["extra_columns"]) if meta else []
-        unsigned_possible = False
-        if not meta or (not meta["buckets"] and not meta["deltas"]):
+        # merge-on-read: several versions of a key may coexist across base
+        # and deltas until compaction; _read_state resolves them
+        df = self._read_state(meta, extra_cols, route=route) if meta else None
+        if df is None:
             df = self._empty_rows(extra_cols)
-        else:
-            # merge-on-read: several versions of a key may coexist across
-            # base + deltas until compaction. Three strategies, chosen
-            # from the MANIFEST alone (delta bytes + touched-bucket lists)
-            # before any scan is constructed: a small backlog over a base
-            # (the steady state between compactions) => broadcast key-set
-            # join against ONLY the delta-touched buckets, untouched
-            # buckets stream through join-free (_read_mor_subset); a large
-            # backlog over a base => the global LWW aggregate; a base or a
-            # backlog alone => a plain scan or the aggregate over it.
-            # migration-exact tenant reads size and prune the delta side
-            # WITHOUT the route (any route's newer version can evict this
-            # tenant's key) and filter winners on route afterwards
-            migration_exact = route is not None and not self.route_stable_keys
-            prune_route = None if migration_exact else route
-            if (
-                meta["deltas"] and meta["buckets"]
-                and manifest.delta_bytes(meta, route=prune_route)
-                <= self.broadcast_delta_bytes
-            ):
-                df, unsigned_possible = self._read_mor_subset(
-                    meta, extra_cols, route,
-                    manifest.touched_buckets(meta, route=prune_route),
-                    migration_exact=migration_exact,
-                )
-            else:
-                base, delta = self._read_split(
-                    meta, extra_cols, route=prune_route
-                )
-                # only delta-sourced winners can be unsigned: every base
-                # writer runs the post-LWW fill, so a base-only read
-                # carries a complete signature column set by construction
-                unsigned_possible = delta is not None
-                df = self._resolve_split(base, delta)
-                if df is None:
-                    df = self._empty_rows(extra_cols)
-                if migration_exact:
-                    df = df.filter(F.col(ROUTE_COL) == route)
-        if BUCKET_COL in df.columns:
-            df = df.drop(BUCKET_COL)
-        if self.minhash_bands and keep_signatures and unsigned_possible:
+        if self.minhash_bands and keep_signatures and meta and meta["deltas"]:
             # winners resolved from a still-raw delta backlog arrive
-            # unsigned; sign exactly those rows (stored base signatures
-            # pass through untouched). Skipped entirely when the caller
-            # drops the columns anyway, and on compacted base-only reads
-            # (nothing to sign — the fill's plan cost is not free).
+            # unsigned (every base writer runs the post-LWW fill); sign
+            # exactly those rows (stored base signatures pass through
+            # untouched). Skipped entirely when the caller drops the
+            # columns anyway, and on base-only reads (nothing to sign —
+            # the fill's plan cost is not free).
             df = fill_band_columns(df)
         if not include_deleted:
             df = df.filter(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
@@ -1884,11 +1815,9 @@ class ParquetLake:
     # idea (expression-tree size, no footer-stat benefit once the key set
     # spans most row groups) and a broadcast semi-join takes over
     LOOKUP_PREDICATE_MAX = 64
-    # MoR read strategy switch: when the outstanding deltas are at most
-    # this many parquet bytes, read() resolves them with a BROADCAST
-    # key-set join against the base (scan-only, no table-wide shuffle)
-    # and read_changes broadcasts its classification join; bigger
-    # backlogs fall back to the global LWW aggregate. See read().
+    # read_changes' classification join broadcasts both sides when the
+    # range's delta entries hold at most this many parquet bytes, and
+    # falls back to a shuffle join above it
     broadcast_delta_bytes = 32 * 1024 * 1024
 
     def lookup_many(
@@ -1906,12 +1835,13 @@ class ParquetLake:
         buckets of all keys are computed on the driver (key_buckets, no
         Spark job); only those base bucket dirs are listed; deltas whose
         manifest bucket list cannot intersect the key buckets are
-        skipped. Within the surviving scan, key matching
-        is an OR-of-conjunctions predicate (lands in PushedFilters —
-        row-group skipping) up to LOOKUP_PREDICATE_MAX keys, and a
-        broadcast left-semi join above it (the key list broadcasts; the
-        scan side never shuffles), so a 10^6-key batch lookup is still
-        one pass over only the touched buckets."""
+        skipped; the rest resolve through _read_state. Key matching runs
+        on every scan below the resolve: an OR-of-conjunctions predicate
+        (lands in PushedFilters — row-group skipping) up to
+        LOOKUP_PREDICATE_MAX keys, and a broadcast left-semi join above
+        that many (the key list broadcasts; the scan side never shuffles
+        for it), so a 10^6-key batch lookup is still one pass over only
+        the key buckets."""
         keys = list(dict.fromkeys((r, p) for r, p in keys))
         meta = (
             self.snapshot_meta(snapshot_id)
@@ -1919,46 +1849,29 @@ class ParquetLake:
             else self.current_meta()
         )
         extra_cols = list(meta["extra_columns"]) if meta else []
-        if (
-            not keys
-            or not meta
-            or (not meta["buckets"] and not meta["deltas"])
-        ):
-            return self._empty_rows(extra_cols).drop(*INTERNAL, *SIG_COLS)
-        wset = set(
-            self.key_buckets(keys, n_buckets=meta["n_buckets"]).values()
-        )
-        base, delta = self._read_split(
-            manifest.bucket_pruned(meta, wset), extra_cols, buckets=sorted(wset)
-        )
+        df = None
+        if keys and meta:
+            if len(keys) <= self.LOOKUP_PREDICATE_MAX:
+                pred = None
+                for r, p in keys:
+                    one = (F.col("repo") == r) & (F.col("path") == p)
+                    pred = one if pred is None else (pred | one)
 
-        if len(keys) <= self.LOOKUP_PREDICATE_MAX:
-            pred = None
-            for r, p in keys:
-                one = (F.col("repo") == r) & (F.col("path") == p)
-                pred = one if pred is None else (pred | one)
+                def match(d: DataFrame) -> DataFrame:
+                    return d.filter(pred)
+            else:
+                keys_df = F.broadcast(
+                    self.spark.createDataFrame(keys, ["repo", "path"]))
 
-            def match(df: DataFrame) -> DataFrame:
-                return df.filter(pred)
+                def match(d: DataFrame) -> DataFrame:
+                    return d.join(keys_df, ["repo", "path"], "left_semi")
 
-        else:
-            keys_df = F.broadcast(
-                self.spark.createDataFrame(keys, ["repo", "path"])
+            wset = set(
+                self.key_buckets(keys, n_buckets=meta["n_buckets"]).values()
             )
-
-            def match(df: DataFrame) -> DataFrame:
-                return df.join(keys_df, ["repo", "path"], "left_semi")
-
-        df = self._union([match(p) for p in (base, delta) if p is not None])
+            df = self._read_state(meta, extra_cols, buckets=wset, match=match)
         if df is None:
             return self._empty_rows(extra_cols).drop(*INTERNAL, *SIG_COLS)
-        if delta is not None:
-            # several versions of a key may coexist until compaction;
-            # base-only lookups are already unique per key (base writers
-            # are resolve_lww outputs)
-            df = resolve_lww(df)
-        if BUCKET_COL in df.columns:
-            df = df.drop(BUCKET_COL)
         if not include_deleted:
             df = df.filter(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
         return df.drop(*INTERNAL, *SIG_COLS)
@@ -2168,11 +2081,8 @@ class ParquetLake:
                     bucket_expr(n_a).alias("b")
                 ).distinct().collect()
             }
-        base, delta = self._read_split(
-            manifest.bucket_pruned(from_meta, wset), extra_cols,
-            route=prune_route, buckets=sorted(wset),
-        )
-        prior = self._resolve_split(base, delta)
+        prior = self._read_state(from_meta, extra_cols, route=prune_route,
+                                 buckets=wset)
         if prior is None:
             return finish(
                 winners.filter(~w_del)
@@ -2187,7 +2097,7 @@ class ParquetLake:
         )
         # classification join: prior is O(touched buckets), winners are
         # O(changes). Semi-prune prior down to the changed keys first;
-        # small ranges (manifest byte counts, the read() switch) broadcast
+        # small ranges (manifest byte counts, broadcast_delta_bytes) broadcast
         # both sides of the probe — the base-side scan never shuffles.
         small = sum(d["bytes"] for d in entries) <= self.broadcast_delta_bytes
         wkeys = winners.select(*KEY_COLS)

@@ -6,6 +6,8 @@ and assert the plan properties the design depends on:
 * the hot path stays inside WholeStageCodegen (no row-at-a-time Python:
   no BatchEvalPython nodes; Arrow-batched pandas UDFs only where declared),
 * the fused LWW+MERGE has exactly ONE exchange keyed on (repo, path),
+* a lake read resolves through one max_by aggregate over only the
+  delta-touched buckets, with no join,
 * the broadcast dimension join actually broadcasts.
 
 Run: python scripts/explain_plans.py  (writes PLANS.md, exits non-zero on
@@ -165,15 +167,12 @@ def write_plans(spark, work: str) -> int:
         must_not=["BatchEvalPython", "Window"],
     )
 
-    # 4b2. MoR STEADY-STATE read: compacted base + small delta => the
-    # broadcast key-set strategy. The base must NOT shuffle — the only
-    # exchanges in the plan are on the tiny delta side (key distinct +
-    # the overlap-winners aggregate); untouched base rows stream through
-    # a BroadcastHashJoin anti-join. Exchange volume is O(delta), not
-    # O(table): the property that holds the read path at 100 TB. (Wall
-    # parity at sandbox scale — shuffle is not the local bottleneck —
-    # measured 1.9-3.5s broadcast vs 1.6-2.5s agg on a 20M-row base with
-    # a 50k-event delta; the fallback threshold is broadcast_delta_bytes.)
+    # 4b2. MoR STEADY-STATE read: compacted base + small delta => ONE LWW
+    # aggregate over the delta-touched base buckets and the delta rows
+    # (the Union under the aggregate); base buckets no delta touches
+    # union in as a plain scan. No join anywhere: the touched base rows
+    # shuffle into the aggregate instead of being probed, so the exchange
+    # is O(touched base + delta), not O(table).
     mor2 = ParquetLake(
         spark, os.path.join(work, "mor2"), n_buckets=16, mode="mor",
         compact_every=1,
@@ -184,19 +183,18 @@ def write_plans(spark, work: str) -> int:
     mor2.merge_parsed(parse_envelopes(small), 1)
     plan = formatted(mor2.read())
     check(
-        "MoR steady-state read (broadcast delta resolve, no base shuffle)",
+        "MoR steady-state read (one LWW aggregate, no join)",
         plan,
-        must=["BroadcastHashJoin", "partial_max_by"],
-        must_not=["BatchEvalPython", "SortMergeJoin", "Window"],
+        must=["partial_max_by", "Union"],
+        must_not=["Join", "BatchEvalPython", "Window"],
     )
 
-    # 4b3. SUBSET steady-state read (round 5): when the outstanding
-    # deltas' manifest bucket lists cover only part of the base, the
-    # broadcast resolve joins ONLY those buckets; the untouched majority
-    # of the base unions in BELOW the join — pruned at the FILE level
-    # (those buckets' files never enter the join branches), not as a row
-    # filter. Plan: a Union whose joined branch carries the
-    # BroadcastHashJoins; file-level proof from inputFiles() in the note.
+    # 4b3. SUBSET steady-state read: when the outstanding deltas' manifest
+    # bucket lists cover only part of the base, the aggregate reads ONLY
+    # those buckets; the untouched majority of the base unions in beside
+    # it — pruned at the FILE level (those buckets' files never enter the
+    # aggregate's scans), not as a row filter. File-level proof from the
+    # physical plan's scans in the note.
     mor3 = ParquetLake(
         spark, os.path.join(work, "mor3"), n_buckets=16, mode="mor",
         compact_every=1,
@@ -210,29 +208,34 @@ def write_plans(spark, work: str) -> int:
     mor3.merge_parsed(parse_envelopes(conf), 1)
     meta3 = mor3.current_meta()
     touched3 = manifest.touched_buckets(meta3)
-    plan = formatted(mor3.read())
+    read3 = mor3.read()
+    plan = formatted(read3)
     check(
-        "MoR SUBSET steady-state read (join only delta-touched buckets)",
+        "MoR SUBSET steady-state read (aggregate over delta-touched buckets only)",
         plan,
-        must=["BroadcastHashJoin", "partial_max_by", "Union"],
-        must_not=["BatchEvalPython", "SortMergeJoin", "Window"],
+        must=["partial_max_by", "Union"],
+        must_not=["Join", "BatchEvalPython", "Window"],
     )
-    extra3 = list(meta3["extra_columns"])
-    base_t3, _d3 = mor3._read_split(meta3, extra3, buckets=touched3)
-    base_u3 = mor3._read_base(
-        meta3, extra3, bucket_set={int(b) for b in touched3}, exclude=True
-    )
-
-    def _bkts(df):
-        files = df.inputFiles() if df is not None else []
-        return {f.split("__bucket=", 1)[1].split("/", 1)[0] for f in files}
-
-    tb, ub = _bkts(base_t3), _bkts(base_u3)
-    split_ok = tb == {str(b) for b in touched3} and tb.isdisjoint(ub)
+    n_aggs = plan.count("partial_max_by")
     sections[-1][2].append(
-        f"{'OK ' if split_ok else 'FAIL'} file-level base split: join branch lists "
-        f"touched buckets {sorted(tb)} only; pass-through branch holds the "
-        f"{len(ub)} others, disjoint"
+        f"{'OK ' if n_aggs == 1 else 'FAIL'} exactly one max_by aggregate "
+        f"(found {n_aggs})"
+    )
+    if n_aggs != 1:
+        failures.append(f"subset read: {n_aggs} max_by aggregates, want 1")
+
+    def _bkts(files):
+        return {f.split("__bucket=", 1)[1].split("/", 1)[0] for f in files
+                if "__bucket=" in f}
+
+    scans3 = scan_files(read3)
+    tb, ub = _bkts(scans3[True]), _bkts(scans3[False])
+    split_ok = (tb == {str(b) for b in touched3} and tb.isdisjoint(ub)
+                and tb | ub == set(meta3["buckets"]))
+    sections[-1][2].append(
+        f"{'OK ' if split_ok else 'FAIL'} file-level base split: aggregate "
+        f"branch lists touched buckets {sorted(tb, key=int)} only; "
+        f"pass-through branch holds the {len(ub)} others, disjoint"
     )
     if not split_ok:
         failures.append(
@@ -271,11 +274,11 @@ def write_plans(spark, work: str) -> int:
     if not route_pushed:
         failures.append("tenant read: route not pushed down on the delta scan")
 
-    # 4c2. route-pruned touched union (round 5): the subset read's
-    # touched-bucket set is per-tenant, so when every outstanding delta
-    # belongs to OTHER tenants, a tenant read degrades to a pure pruned
-    # base scan — no join operator in the plan at all — while a tenant
-    # whose own backlog is outstanding still gets the broadcast merge.
+    # 4c2. route-pruned touched union (round 5): the read's touched-bucket
+    # set is per-tenant, so when every outstanding delta belongs to OTHER
+    # tenants, a tenant read degrades to a pure pruned base scan — no
+    # join and no aggregate in the plan at all — while a tenant whose own
+    # backlog is outstanding resolves it through the one aggregate.
     mor4 = ParquetLake(
         spark, os.path.join(work, "mor4"), n_buckets=16, mode="mor",
         compact_every=1,
@@ -287,16 +290,16 @@ def write_plans(spark, work: str) -> int:
     )
     mor4.merge_parsed(parse_envelopes(only_a), 1)
     check(
-        "tenant read, backlog all other tenants' (join-free pruned base scan)",
+        "tenant read, backlog all other tenants' (pruned base scan)",
         formatted(mor4.read(route=generate.TOPICS[1])),
         must=["PartitionFilters"],
-        must_not=["Join", "BatchEvalPython"],
+        must_not=["Join", "max_by", "BatchEvalPython"],
     )
     check(
-        "tenant read, own backlog outstanding (broadcast merge, own buckets only)",
+        "tenant read, own backlog outstanding (one aggregate, own buckets only)",
         formatted(mor4.read(route=generate.TOPICS[0])),
-        must=["BroadcastHashJoin", "PartitionFilters"],
-        must_not=["SortMergeJoin", "BatchEvalPython"],
+        must=["partial_max_by", "PartitionFilters"],
+        must_not=["Join", "BatchEvalPython"],
     )
 
     # 4d. primary-key point lookup (round 5): only the key's bucket dir is
@@ -348,32 +351,65 @@ def write_plans(spark, work: str) -> int:
     if not one_bucket:
         failures.append("lookup: base scan lists buckets beyond the key's")
 
-    # 4e. batched lookup, join strategy (round 5): above
-    # LOOKUP_PREDICATE_MAX keys the key list broadcasts into a left-semi
-    # join — never a shuffle — and the base side still lists only the
-    # union of the requested keys' bucket dirs.
-    many = [
-        (r["repo"], r["path"])
-        for r in mor4.read().select("repo", "path").limit(5).collect()
-    ]
-    mor4.LOOKUP_PREDICATE_MAX = 0  # force the join path
-    batched = mor4.lookup_many(many)
+    # 4e. batched lookups. Up to LOOKUP_PREDICATE_MAX keys the key match
+    # is one OR-of-conjunctions predicate that reaches every scan's
+    # PushedFilters; above it the key list broadcasts into a left-semi
+    # join applied to every scan BELOW the LWW aggregate (never a shuffle
+    # of the key list, never a resolve of rows no key asked for), and the
+    # base side still lists only the union of the requested keys' bucket
+    # dirs.
+    live = [(r["repo"], r["path"])
+            for r in mor4.read().select("repo", "path").limit(100).collect()]
+    few = mor4.lookup_many(live[:16])
+    plan = formatted(few)
     check(
-        "batched key lookup, join strategy (broadcast semi, key buckets only)",
+        "batched key lookup, predicate strategy (16 keys, PushedFilters)",
+        plan,
+        must=["PushedFilters", "partial_max_by"],
+        must_not=["Join", "BatchEvalPython"],
+    )
+    pf_lines = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
+    key_pushed = bool(pf_lines) and all(
+        "EqualTo(repo," in ln for ln in pf_lines
+    )
+    sections[-1][2].append(
+        f"{'OK ' if key_pushed else 'FAIL'} key predicate inside every "
+        f"scan's PushedFilters ({len(pf_lines)} scans)"
+    )
+    if not key_pushed:
+        failures.append("lookup_many: key predicate not pushed to every scan")
+
+    assert len(live) > ParquetLake.LOOKUP_PREDICATE_MAX
+    batched = mor4.lookup_many(live)
+    check(
+        f"batched key lookup, join strategy ({len(live)} keys, broadcast "
+        "semi-join below the aggregate, key buckets only)",
         formatted(batched),
-        must=["BroadcastHashJoin", "LeftSemi"],
+        must=["BroadcastHashJoin", "LeftSemi", "partial_max_by"],
         must_not=["SortMergeJoin", "BatchEvalPython"],
     )
-    want_dirs = {str(b) for b in mor4.key_buckets(many).values()}
+    nodes = [(n.nodeName(), anc) for n, anc in plan_nodes(batched)]
+    semi_below = (
+        any(n == "BroadcastHashJoin" and any("Aggregate" in a for a in anc)
+            for n, anc in nodes)
+        and not any("Aggregate" in n and any("Join" in a for a in anc)
+                    for n, anc in nodes)
+    )
+    sections[-1][2].append(
+        f"{'OK ' if semi_below else 'FAIL'} the semi-join sits below the "
+        "aggregate, and no aggregate below a join"
+    )
+    if not semi_below:
+        failures.append("lookup_many: key semi-join not below the aggregate")
+    want_dirs = {str(b) for b in mor4.key_buckets(live).values()}
     got_dirs = base_buckets_listed(batched)
     subset = got_dirs <= want_dirs
     sections[-1][2].append(
         f"{'OK ' if subset else 'FAIL'} base files from the {len(want_dirs)} "
-        f"key buckets only (saw {sorted(got_dirs)})"
+        f"key buckets only (saw {sorted(got_dirs, key=int)})"
     )
     if not subset:
         failures.append("lookup_many: base scan lists buckets beyond the keys'")
-    mor4.LOOKUP_PREDICATE_MAX = ParquetLake.LOOKUP_PREDICATE_MAX
 
     # 4f. rebucket fold (round 5, bucket-count evolution): the whole-table
     # rewrite runs the fold step every fold runs (ParquetLake._fold_resolve
@@ -537,6 +573,32 @@ def write_plans(spark, work: str) -> int:
     for f_ in failures:
         print("FAIL:", f_)
     return 1 if failures else 0
+
+
+def plan_nodes(df) -> list:
+    """(JVM node, ancestor node names) for every node of df's physical
+    plan as planned, before adaptive execution re-plans it."""
+    out = []
+
+    def walk(node, ancestors):
+        out.append((node, ancestors))
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i), ancestors + [node.nodeName()])
+
+    walk(df._jdf.queryExecution().sparkPlan(), [])
+    return out
+
+
+def scan_files(df) -> dict[bool, set[str]]:
+    """{True: files of the parquet scans below an aggregate, False: the
+    files of every other parquet scan} in df's physical plan."""
+    out: dict[bool, set[str]] = {True: set(), False: set()}
+    for node, ancestors in plan_nodes(df):
+        if node.getClass().getSimpleName() == "FileSourceScanExec":
+            in_agg = any("Aggregate" in a for a in ancestors)
+            out[in_agg] |= set(node.relation().inputFiles())
+    return out
 
 
 def lake_read_plan_df(lake, parsed):

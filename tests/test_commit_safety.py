@@ -252,3 +252,15 @@ def test_fold_abort_detection_under_concurrent_ingest():
     after_abort = {"deltas": [{"path": "data/d1"}, {"path": "data/d2"},
                               {"path": "data/d3"}]}
     assert fold_aborted(before, after_abort) is True
+
+    # a full major of a lake with no outstanding delta consumes no delta
+    # but repoints the base buckets: committed, even with concurrent
+    # ingest appending a delta meanwhile
+    base = {"deltas": [], "buckets": {"0": "data/s1/__bucket=0"}}
+    rewritten = {"deltas": [], "buckets": {"0": "data/s4/__bucket=0"}}
+    assert fold_aborted(base, rewritten) is False
+    assert fold_aborted(
+        base, dict(rewritten, deltas=[{"path": "data/d5"}])) is False
+    # ... and a lost race leaves both the bucket map and the deltas as
+    # they were (ingest only appends)
+    assert fold_aborted(base, dict(base, deltas=[{"path": "data/d5"}])) is True

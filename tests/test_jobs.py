@@ -124,6 +124,43 @@ def test_maintain_once_with_empty_backlog_is_a_noop(spark, tmp_path, capsys):
     assert done["snapshot"] == snap_before
 
 
+def test_maintain_full_major_without_deltas_counts_its_fold(
+    spark, tmp_path, capsys
+):
+    """maintain --min-deltas 0 --once --full on a lake with a base and no
+    outstanding delta commits a full major (the tombstone-expiry run) and
+    reports it as a fold, not as an abort."""
+    maintain = _load_job("maintain.py", "maintain_job_full")
+
+    table = str(tmp_path / "lake")
+    lake = ParquetLake(spark, table, n_buckets=8, mode="mor",
+                       compact_every=None)
+    df = spark.read.parquet(
+        generate.write_log(spark, str(tmp_path / "log"), n_events=300,
+                           n_files=1, n_keys=50, seed=3))
+    from pyspark_cdc.stream import process_batch
+    process_batch(df, 0, lake)
+    lake.compact_now("major")
+    before = lake.current_meta()
+    assert before["buckets"] and before["deltas"] == []
+    state = _final(lake)
+
+    rc = maintain.main(["--table-dir", table, "--n-buckets", "8", "--once",
+                        "--min-deltas", "0", "--full"])
+    assert rc == 0
+    lines = [json.loads(ln) for ln in
+             capsys.readouterr().out.strip().splitlines()]
+    fold = next(ln for ln in lines if ln["event"] == "fold")
+    assert not fold["aborted"]
+    assert fold["snapshot"] > before["id"]
+    done = next(ln for ln in lines if ln["event"] == "done")
+    assert done["folds"] == 1 and done["backlog"] == 0
+    after = ParquetLake(spark, table, n_buckets=8, mode="mor",
+                        compact_every=None)
+    assert after.current_meta()["buckets"] != before["buckets"]
+    assert _final(after) == state
+
+
 def test_maintain_rollback_flag(spark, tmp_path, capsys):
     """maintain --rollback-to N restores the retained snapshot as a new
     commit, reports it, and exits 0; rolling back to the current

@@ -174,8 +174,6 @@ def test_manifest_queries():
     assert manifest.touched_buckets(m, route="u") == [0, 1, 3]
     assert manifest.touched_buckets(m, route="t") == [0, 1, 3]
     assert manifest.touched_buckets(m, route="v") == []
-    assert manifest.delta_bytes(m) == 25
-    assert manifest.delta_bytes(m, route="u") == 15
     assert [d["path"] for d in manifest.bucket_pruned(m, {1})["deltas"]] == [
         "data/d5", "data/m8-dd"]
     pairs = [{"b": "10", "r": "t"}, {"b": "2", "r": "u"},

@@ -424,9 +424,9 @@ def test_major_compaction_expired_tombstones_only(spark, tmp_path):
 
 def test_manifest_records_routes_and_bytes(spark, tmp_path):
     """Every delta manifest entry carries its merge-relevant byte count
-    and ok-route list at commit time (ADVICE round 3: read() must sum
+    and ok-route list at commit time (ADVICE round 3: readers sum
     manifest integers, not re-walk delta trees — and dead-letter bytes
-    must not bias the broadcast-vs-aggregate switch)."""
+    must not bias read_changes' broadcast switch)."""
     import json
 
     from pyspark_cdc.schemas import KAFKA_SHAPE
@@ -469,8 +469,6 @@ def test_manifest_records_routes_and_bytes(spark, tmp_path):
         os.path.join(mor.table_dir, delta["path"], "status=ok"))
     all_bytes = walk_bytes(os.path.join(mor.table_dir, delta["path"]))
     assert delta["bytes"] == ok_bytes < all_bytes
-    # and read()'s switch consumes exactly the manifest sum
-    assert manifest.delta_bytes(mor.current_meta()) == ok_bytes
     # the touched-bucket list is recorded for subset majors (one bucket
     # per ok key here at most, never the dead letter)
     assert 0 < len(delta["buckets"]) <= 2
@@ -707,14 +705,13 @@ def test_subset_major_all_dead_letter_backlog_skips_base(spark, tmp_path):
 
 def test_subset_mor_read_joins_only_touched_buckets(spark, tmp_path):
     """The read-path twin of the subset major: between compactions the
-    steady-state MoR read broadcast-joins ONLY the base buckets the
-    outstanding deltas touch (the manifest's per-delta bucket lists);
-    untouched buckets stream through join-free. Both strategies over a
-    base plus backlog must agree row-for-row — the subset broadcast read
-    (the default) and the global LWW aggregate — and equal the oracle's
-    replay of the same batches. The path-level proof is in inputFiles(): the join side's
-    base scan lists ONLY touched-bucket files, the pass-through side
-    only the rest, and together they cover the base exactly."""
+    steady-state MoR read resolves ONLY the base buckets the outstanding
+    deltas touch (the manifest's per-delta bucket lists) together with
+    the deltas; untouched buckets stream through as a plain scan. The
+    read over a base plus backlog must equal the oracle's replay of the
+    same batches. The path-level proof is in inputFiles(): the resolved
+    side's base scan lists ONLY touched-bucket files, the pass-through
+    side only the rest, and together they cover the base exactly."""
     from pyspark_cdc.schemas import KAFKA_SHAPE
     from pyspark_cdc.stream import process_batch
 
@@ -759,20 +756,16 @@ def test_subset_mor_read_joins_only_touched_buckets(spark, tmp_path):
     touched = manifest.touched_buckets(meta)
     assert set(touched) == {touched_bucket, kb[new_key]}
 
-    # 1) the strategies agree row-for-row and with the oracle
-    got = _rows(lake)  # default path: subset broadcast (tiny delta bytes)
+    # 1) the read equals the oracle
+    got = _rows(lake)
     assert got[tk[0]]["content"] == "v2000"
     assert got[tk[2]]["content"] == "v2300"
     assert got[new_key]["content"] == "v2200"
     assert tk[1] not in got
 
-    lake.broadcast_delta_bytes = -1
-    assert _rows(lake) == got  # global LWW aggregate
-    lake.broadcast_delta_bytes = 32 * 1024 * 1024
-
     assert_state_equal(got, replay([r for b in batches for r in b])["state"])
 
-    # 2) path-level pruning proof: the join side scans only touched
+    # 2) path-level pruning proof: the resolved side scans only touched
     # buckets, the pass-through side only the rest, covering the base
     def bucket_dirs(files):
         return {f.split("__bucket=", 1)[1].split("/", 1)[0] for f in files}

@@ -91,8 +91,9 @@ def _record(ev, offset):
 def _engine_state(spark, tmp_dir, batches, tombstone_horizon_lsn=None,
                   full=None):
     # compact_every=2 + major_every=2 exercises BOTH compaction tiers
-    # (major on the first fold, minor on the next) and the broadcast MoR
-    # read path under arbitrary event interleavings and batch splits;
+    # (major on the first fold, minor on the next) and the MoR read's
+    # touched/untouched bucket split under arbitrary event interleavings
+    # and batch splits;
     # full=True/False closes with a full or subset major over whatever
     # backlog is left, so hypothesis explores touched/untouched bucket
     # interleavings on both

@@ -1,16 +1,19 @@
 """Lake reads are planned from the manifest: building a read's DataFrame
 launches no Spark job (no partition-discovery listing, no footer or
-schema-inference job, no key-hash job), and the driver-side key hash that
-makes lookups job-free is bit-exact with the engine's bucket_expr."""
+schema-inference job, no key-hash job), every read resolves through one
+aggregate over only the delta-touched buckets, and the driver-side key
+hash that makes lookups job-free is bit-exact with the engine's
+bucket_expr."""
 
 from __future__ import annotations
 
+import json
 import random
 import uuid
 
 import pytest
 
-from pyspark_cdc import generate
+from pyspark_cdc import generate, manifest
 from pyspark_cdc.sink import ParquetLake, bucket_expr, key_bucket_of
 from pyspark_cdc.stream import process_batch
 
@@ -75,6 +78,69 @@ def test_building_a_read_launches_no_spark_job(spark, tmp_path):
         df, jobs = _jobs_while(spark, build)
         assert jobs == [], f"building {name} ran Spark jobs {jobs}"
         assert df.count() > 0, name  # the action still answers
+
+
+def _scan_files(plan) -> dict[bool, set[str]]:
+    """{True: files of the parquet scans under an aggregate, False: the
+    rest} for a JVM physical plan."""
+    out: dict[bool, set[str]] = {True: set(), False: set()}
+
+    def walk(node, in_agg):
+        in_agg = in_agg or "Aggregate" in node.nodeName()
+        if node.getClass().getSimpleName() == "FileSourceScanExec":
+            out[in_agg] |= set(node.relation().inputFiles())
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i), in_agg)
+
+    walk(plan, False)
+    return out
+
+
+def test_read_is_one_aggregate_over_touched_buckets(spark, tmp_path):
+    """On a 64-bucket lake with a major-folded base and raw deltas whose
+    keys hash into buckets 0-15 only, read() and read(route=X) plan no
+    join and exactly one max_by aggregate; the aggregate's scans list
+    base files of the delta-touched buckets only, and the pass-through
+    scans list the other base buckets (for the tenant read: the other
+    buckets that hold the route)."""
+    log = generate.bulk_events_df(spark, 1_800, n_keys=300, seed=11).collect()
+    lake = ParquetLake(spark, str(tmp_path / "lake"), n_buckets=64,
+                       mode="mor", compact_every=None)
+
+    def low_bucket(row) -> bool:
+        try:
+            k = json.loads(row["key"])
+            return key_bucket_of((k["repo"], k["path"]), 64) < 16
+        except (TypeError, ValueError, KeyError):
+            return False
+
+    chunks = [log[:900]] + [
+        [r for r in log[900:][i::3] if low_bucket(r)] for i in range(3)]
+    for i, chunk in enumerate(chunks):
+        process_batch(
+            spark.createDataFrame(chunk, schema=generate.KAFKA_SHAPE), i, lake)
+        if i == 0:
+            lake.compact_now("major")
+    meta = lake.current_meta()
+    assert len(meta["deltas"]) == 3
+    base_dirs = {int(b): "/" + rel + "/" for b, rel in meta["buckets"].items()}
+
+    def base_buckets(files) -> set:
+        return {b for b, d in base_dirs.items() if any(d in f for f in files)}
+
+    for route in (None, generate.TOPICS[0]):
+        touched = set(manifest.touched_buckets(meta, route=route))
+        assert touched and max(touched) < 16
+        holding = {int(b) for b, rs in meta["bucket_routes"].items()
+                   if route is None or route in rs}
+        qe = lake.read(route=route)._jdf.queryExecution()
+        plan = qe.executedPlan().toString()
+        assert "Join" not in plan, route
+        assert plan.count("partial_max_by") == 1, route
+        files = _scan_files(qe.sparkPlan())
+        assert base_buckets(files[True]) == touched & holding, route
+        assert base_buckets(files[False]) == holding - touched, route
 
 
 def test_key_bucket_of_matches_bucket_expr(spark):

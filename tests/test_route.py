@@ -80,25 +80,6 @@ def test_unknown_route_reads_empty_without_other_tenants(spark, tmp_path):
     assert lake.read(route="cdc.public.no_such_tenant").count() == 0
 
 
-def test_broadcast_and_global_read_strategies_agree(spark, tmp_path):
-    """The two MoR read strategies — broadcast key-set join (small delta
-    backlog) and the global LWW aggregate (large backlog / forced here
-    via broadcast_delta_bytes=0) — must produce the identical table."""
-    lake = _mklake(spark, tmp_path, compact_every=2)  # base + deltas mix
-    assert lake.current_meta()["deltas"], "need outstanding deltas"
-    bcast = _rows(lake.read())
-    lake.broadcast_delta_bytes = 0  # force the global-aggregate fallback
-    agg = _rows(lake.read())
-    assert bcast == agg
-    # and per-tenant reads agree across strategies too
-    lake.broadcast_delta_bytes = 32 * 1024 * 1024
-    for route in generate.TOPICS:
-        b = _rows(lake.read(route=route))
-        lake.broadcast_delta_bytes = 0
-        assert b == _rows(lake.read(route=route))
-        lake.broadcast_delta_bytes = 32 * 1024 * 1024
-
-
 def test_numeric_route_stays_string(spark, tmp_path):
     """A numeric-looking tenant name ('123') must round-trip as a STRING
     through the route partition dirs (Hive partition type inference would
@@ -208,12 +189,12 @@ def test_manifest_level_delta_pruning(spark, tmp_path):
 def test_route_scoped_subset_read_joins_only_own_touched_buckets(
     spark, tmp_path
 ):
-    """Round-5 refinement: the subset MoR read's touched-bucket union is
-    route-pruned, so a tenant read broadcast-joins only the base buckets
-    the TENANT'S own backlog touched. The extreme: when the whole backlog
-    belongs to the other tenant, a tenant-scoped read is a pure pruned
-    base scan — no join operator in its plan at all — while still
-    returning exactly the filtered-full-read rows."""
+    """The read's touched-bucket union is route-pruned, so a tenant read
+    resolves (one LWW aggregate) only the base buckets the TENANT'S own
+    backlog touched. The extreme: when the whole backlog belongs to the
+    other tenant, a tenant-scoped read is a pure pruned base scan — no
+    join and no aggregate in its plan at all — while still returning
+    exactly the filtered-full-read rows."""
     lake = _mklake(spark, tmp_path, compact_every=3)  # 3 batches => major
     meta = lake.current_meta()
     assert meta["buckets"] and meta["deltas"] == []
@@ -247,16 +228,17 @@ def test_route_scoped_subset_read_joins_only_own_touched_buckets(
     assert touched_all  # the A backlog really touches buckets
     assert manifest.touched_buckets(meta, route=route_b) == []
 
-    # plan-level: the B read is join-free (pure pruned base scan), the A
-    # read still carries the broadcast merge join
+    # plan-level: the B read is a pure pruned base scan, the A read
+    # resolves its own touched buckets through one aggregate, join-free
     plan_b = (
         lake.read(route=route_b)._jdf.queryExecution().executedPlan().toString()
     )
-    assert "Join" not in plan_b
+    assert "Join" not in plan_b and "max_by" not in plan_b
     plan_a = (
         lake.read(route=route_a)._jdf.queryExecution().executedPlan().toString()
     )
-    assert "BroadcastHashJoin" in plan_a
+    assert "Join" not in plan_a
+    assert plan_a.count("partial_max_by") == 1
 
     # row-level: both tenants still read exactly the filtered full table
     full = lake.read()
