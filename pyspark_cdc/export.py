@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from .schemas import (DELETED_COL, KEY_COLS, LSN_COL, OFFSET_COL, TS_COL,
                       TX_COL)
-from .sink import CHANGE_TYPE_COL, ROUTE_COL, ParquetLake
+from .sink import CHANGE_TYPE_COL, ROUTE_COL, ParquetLake, quoted
 
 _N_PARTITIONS = 8
 
@@ -53,7 +53,7 @@ def changes_to_envelopes(changes: DataFrame) -> DataFrame:
     )]
     after = F.struct(
         *[F.col(k).alias(k) for k in KEY_COLS],
-        *[F.col(c).alias(c) for c in payload_cols],
+        *[F.col(quoted(c)).alias(c) for c in payload_cols],
     )
     before_key = F.struct(*[F.col(k).alias(k) for k in KEY_COLS])
     source = F.struct(

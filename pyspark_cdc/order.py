@@ -28,16 +28,28 @@ ORD_COLS = [LSN_COL, TX_COL, TS_COL, OFFSET_COL]
 # when source metadata is entirely absent, coalescing lsn/tx/ts to 0,
 # AND two partitions hold the same offset for the same key) leaves the
 # winner to max_by's first-encountered row: deterministic for a given
-# plan, not across partition orders. Kafka itself defines no
+# plan, not across partition orders (a lake read scans all raw deltas as
+# one file list, so rows meet in Spark's file-packing order rather than
+# commit order; only such an exact tie can tell). Kafka itself defines no
 # cross-partition order, and the reference's per-partition concurrent
 # consumers (main.go) have the same race — a CDC source that shards one
 # PRIMARY KEY across partitions without LSNs is operating outside any
 # ordering contract this engine could honor.
 
-_SIGN_BIT = -(1 << 63)
+
+# Each field is coalesced (null ranks as 0, matching the oracle's
+# missing-metadata coalesce; parse.py already coalesces, so this only
+# guards rows from exotic/legacy inputs), XORed with shiftleft(1L, 63)
+# (the long with only the sign bit set) and written as 16 fixed-width hex
+# digits. SQL text built once: resolves and feed classifications embed it
+# in their own expression strings instead of rebuilding a Column tree.
+PACKED_ORD_SQL = "unhex(concat({}))".format(", ".join(
+    f"lpad(hex(coalesce({c}, 0) ^ shiftleft(1L, 63)), 16, '0')"
+    for c in ORD_COLS
+))
 
 
-def packed_ord(cols: list[str] = ORD_COLS):
+def packed_ord():
     """The 4-field ordering tuple packed into ONE 32-byte big-endian BINARY
     whose unsigned lexicographic order equals the tuple's signed
     lexicographic order: each long's sign bit is flipped (an
@@ -54,16 +66,4 @@ def packed_ord(cols: list[str] = ORD_COLS):
     join back) is ~2.5x slower end-to-end because it re-shuffles the full
     rows a second time. The packed key is kept for the cheaper comparator
     and the simpler ordering contract."""
-    parts = [
-        # null ordering fields rank as 0, matching the oracle's
-        # missing-metadata coalesce (parse.py already coalesces, so this
-        # only guards rows from exotic/legacy inputs)
-        F.lpad(
-            F.hex(F.coalesce(F.col(c), F.lit(0)).bitwiseXOR(F.lit(_SIGN_BIT))),
-            16,
-            "0",
-        )
-        for c in cols
-    ]
-    return F.unhex(F.concat(*parts))
-
+    return F.expr(PACKED_ORD_SQL)

@@ -52,7 +52,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .schemas import KEY_COLS
-from .sink import CHANGE_TYPE_COL, ROUTE_COL, ParquetLake
+from .sink import CHANGE_TYPE_COL, ROUTE_COL, ParquetLake, quoted
 
 SEQ_COL = "__seq"
 SEG_DELETED_COL = "__seg_deleted"
@@ -174,7 +174,8 @@ class SearchIndexSync:
             status = "synced"
 
         seg = changes.select(
-            *[c for c in changes.columns if c != CHANGE_TYPE_COL],
+            *[F.col(quoted(c)) for c in changes.columns
+              if c != CHANGE_TYPE_COL],
             (F.col(CHANGE_TYPE_COL) == "delete").alias(SEG_DELETED_COL),
             F.lit(to_id).cast("long").alias(SEQ_COL),
         )
@@ -264,7 +265,7 @@ class SearchIndexSync:
             df = df.unionByName(p, allowMissingColumns=True)
         group = [*KEY_COLS, ROUTE_COL]
         non_key = [c for c in df.columns if c not in group]
-        row = F.struct(*[F.col(c) for c in non_key])
+        row = F.struct(*[F.col(quoted(c)) for c in non_key])
         return (
             df.groupBy(*group)
             .agg(F.max_by(row, F.col(SEQ_COL)).alias("_w"))

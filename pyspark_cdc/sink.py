@@ -71,7 +71,7 @@ from pyspark.sql import types as T
 
 from . import manifest
 from .manifest import BUCKET_COL
-from .order import ORD_COLS, packed_ord
+from .order import ORD_COLS, PACKED_ORD_SQL, packed_ord
 from .schemas import (DELETED_COL, DOMAIN_COLS, INTERNAL_COLS, KEY_COLS,
                       LSN_COL, OFFSET_COL, TS_COL, TX_COL)
 from .signatures import SIG_COLS, fill_band_columns
@@ -143,11 +143,11 @@ class CommitConflict(Exception):
 DLQ_STATUSES = ("ok", "tombstone", "malformed", "unknown_op",
                 "bad_payload", "missing_key", "missing_route")
 
-# The columns _read_delta reads from a parsed delta, typed as
-# parse.parse_envelopes writes them (`status` is the partition column).
-# A static read schema: no per-delta schema-inference job.
+# The columns a lake read takes from a parsed delta, typed as
+# parse.parse_envelopes writes them. Reads name each delta's status=ok
+# leaf dir, so `status` (the write's partition column) is not a column
+# here. A static read schema: no per-delta schema-inference job.
 PARSED_DELTA_SCHEMA = T.StructType([
-    T.StructField("status", T.StringType()),
     T.StructField("effective_op", T.StringType()),
     *[T.StructField(c, T.StringType()) for c in DOMAIN_COLS],
     T.StructField("extras", T.MapType(T.StringType(), T.StringType())),
@@ -257,6 +257,115 @@ def key_bucket_of(key: tuple[str, str], n_buckets: int) -> int:
     return (h - (1 << 64) if h >> 63 else h) % n_buckets
 
 
+def quoted(name: str) -> str:
+    """A column name as a SQL identifier. Manifest column names come from
+    source extras keys, so `a.b` or a name holding a backtick must stay
+    one name: every SQL text or F.col that names a lake column by a name
+    from the data goes through here."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_str(value: str | None) -> str:
+    """A SQL string literal of `value` (NULL for None) under Spark's
+    default backslash escapes: any quote, backslash, newline or non-ASCII
+    text reads back as itself."""
+    if value is None:
+        return "NULL"
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+@functools.lru_cache(maxsize=64)
+def _delta_projection(extra_cols: tuple[str, ...], signed: bool) -> tuple:
+    """The select list that turns parsed ok rows into the flat row shape
+    (bucket column excluded): effective_op becomes the tombstone flag,
+    extras flatten by the manifest's column list (complete — every delta
+    recorded its observed keys at commit), deleted rows lose their
+    payload, and signature columns (signed tables) read null — the
+    post-LWW fill_band_columns signs only the versions that WIN a fold or
+    read, so a raw backlog's losing versions never pay the shingle cost.
+    SQL text, built once per column list."""
+    dead = "effective_op = 'd'"
+
+    def payload(expr: str, name: str) -> str:
+        return f"CASE WHEN {dead} THEN NULL ELSE {expr} END AS {quoted(name)}"
+
+    return (
+        *[quoted(c) for c in KEY_COLS],
+        *[payload(quoted(c), c) for c in DOMAIN_COLS if c not in KEY_COLS],
+        quoted(ROUTE_COL),
+        *[payload(f"element_at(extras, {_sql_str(k)})", k) for k in extra_cols],
+        *[quoted(c) for c in ORD_COLS],
+        f"{dead} AS {quoted(DELETED_COL)}",
+        *[f"CAST(NULL AS STRING) AS {quoted(c)}"
+          for c in (SIG_COLS if signed else [])],
+    )
+
+
+@functools.lru_cache(maxsize=64)
+def _lww_winner(cols: tuple[str, ...]) -> str:
+    """max_by of the row struct of `cols` by the packed ordering scalar,
+    as SQL text aliased `_w`, built once per column list."""
+    row = ", ".join(quoted(c) for c in cols)
+    return f"max_by(struct({row}), {PACKED_ORD_SQL}) AS _w"
+
+
+# SQL text of the tombstone flag (reads keep rows where it is false) and
+# of read_changes' per-key classification over the winner row joined to
+# the prior state's __p_* columns (null when the key had none)
+_DELETED_SQL = f"coalesce({quoted(DELETED_COL)}, false)"
+_NEWER_SQL = "__p_ord IS NULL OR __w_ord > __p_ord"
+_EXISTED_SQL = "coalesce(NOT __p_deleted, false)"
+
+
+def _change_type_sql(here: str) -> str:
+    """'delete' / 'update' / 'insert' for a winner against its prior
+    state, null when the transition is invisible (a delete of a key that
+    was not `here`); `here` is the SQL test for "the prior state held the
+    key where the winner lives"."""
+    return (
+        f"CASE WHEN {_DELETED_SQL} AND {here} THEN 'delete' "
+        f"WHEN NOT {_DELETED_SQL} AND {here} THEN 'update' "
+        f"WHEN NOT {_DELETED_SQL} AND NOT {here} THEN 'insert' END"
+    )
+
+
+@functools.lru_cache(maxsize=64)
+def _migrating_feed_rows(cols: tuple[tuple[str, str], ...]) -> str:
+    """read_changes' route-aware output rows as SQL text aliased `_r`:
+    per joined row (winner columns plus the prior __p_* columns) an
+    explode of the ARRIVAL row (the winner with its change type; null
+    when the transition is invisible) and the DEPARTURE row (a delete
+    with the prior route and the tombstone shape — null payload, the key
+    identifies the document — when the key existed under another route).
+    `cols` are the (name, SQL type) pairs of the output columns; built
+    once per column list."""
+    same_route = f"__p_route <=> {quoted(ROUTE_COL)}"
+    ct = _change_type_sql(f"({_EXISTED_SQL} AND {same_route})")
+    keep = {*KEY_COLS, *ORD_COLS, BUCKET_COL}
+
+    def departed(name: str, typ: str) -> str:
+        if name in keep:
+            return quoted(name)
+        if name == ROUTE_COL:
+            return "__p_route"
+        if name == DELETED_COL:
+            return "true"
+        return f"CAST(NULL AS {typ})"
+
+    def row(fields: list[tuple[str, str]]) -> str:
+        return "named_struct({})".format(
+            ", ".join(f"{_sql_str(n)}, {e}" for n, e in fields))
+
+    arrival = row([(n, quoted(n)) for n, _ in cols] + [(CHANGE_TYPE_COL, ct)])
+    departure = row([(n, departed(n, t)) for n, t in cols]
+                    + [(CHANGE_TYPE_COL, "'delete'")])
+    return (
+        f"explode(array(CASE WHEN ({ct}) IS NOT NULL THEN {arrival} END, "
+        f"CASE WHEN {_EXISTED_SQL} AND NOT ({same_route}) THEN {departure} "
+        "END)) AS _r"
+    )
+
+
 def resolve_lww(df: DataFrame) -> DataFrame:
     """Per-key last-writer-wins over any mix of row versions: max_by of the
     full row by the packed (lsn, tx_id, ts_ms, offset) ordering scalar
@@ -265,11 +374,10 @@ def resolve_lww(df: DataFrame) -> DataFrame:
     exact-tie pair. Used by the read path; the folds use its clustered
     twin — max is associative, so resolving at compaction or at read
     time yields the identical winner."""
-    non_key = [c for c in df.columns if c not in KEY_COLS]
-    row = F.struct(*[F.col(c) for c in non_key])
+    non_key = tuple(c for c in df.columns if c not in KEY_COLS)
     return (
         df.groupBy(*KEY_COLS)
-        .agg(F.max_by(row, packed_ord(ORD_COLS)).alias("_w"))
+        .agg(F.expr(_lww_winner(non_key)))
         .select(*KEY_COLS, "_w.*")
     )
 
@@ -293,12 +401,12 @@ def resolve_lww_clustered(df: DataFrame, n_buckets: int) -> DataFrame:
     BUCKET_COL. Measured (10x4M-event delta backlog, 6.6M keys): fold wall
     58.8s -> 39.4s at 4 executors, 119.5s -> 94.4s at 1 (bit-identical
     output), and fold 1->4 scaling 2.03x -> 2.40x."""
-    non_key = [c for c in df.columns if c not in KEY_COLS and c != BUCKET_COL]
-    row = F.struct(*[F.col(c) for c in non_key])
+    non_key = tuple(
+        c for c in df.columns if c not in KEY_COLS and c != BUCKET_COL)
     return (
         df.repartition(n_buckets, F.col(BUCKET_COL))
-        .groupBy(F.col(BUCKET_COL), *KEY_COLS)
-        .agg(F.max_by(row, packed_ord(ORD_COLS)).alias("_w"))
+        .groupBy(BUCKET_COL, *KEY_COLS)
+        .agg(F.expr(_lww_winner(non_key)))
         .select(BUCKET_COL, *KEY_COLS, "_w.*")
     )
 
@@ -974,9 +1082,9 @@ class ParquetLake:
             # fold reads only these base buckets (subset major)
             "buckets": sorted(int(b) for b in got["ok_buckets"] or []),
             # ok-partition bytes recorded at commit (one filesystem
-            # summary call over the just-written files) so read()'s
-            # broadcast-vs-aggregate switch never re-walks the tree
-            # and never counts dead-letter bytes
+            # summary call over the just-written files): they size
+            # read_changes' classification join without re-walking the
+            # tree, and never count dead-letter bytes
             "bytes": self._tree_bytes(os.path.join(out_dir, "status=ok")),
         }
 
@@ -1010,54 +1118,6 @@ class ParquetLake:
         stats["snapshot"] = new_meta["id"]
         return stats
 
-    def _read_delta(
-        self, entry: dict, extra_cols: list[str], route: str | None = None
-    ) -> DataFrame:
-        """One delta entry -> the flat row shape (the base schema, bucket
-        column dropped). A flat delta (a minor fold's output) is
-        (bucket, route)-partitioned like the base and reads under the
-        manifest's row schema. A parsed delta keeps its ok rows, turns
-        effective_op into the tombstone flag, flattens extras via the
-        manifest's column list (complete — every delta recorded its
-        observed keys at commit), and nulls the payload of deleted rows.
-        On a parsed delta a route predicate is a DATA filter over an
-        already manifest-pruned, compact_every-bounded backlog (the
-        status partition dirs still prune dead letters)."""
-        dp = os.path.join(self.table_dir, entry["path"])
-        if entry["format"] != "parsed":
-            flat = self.spark.read.schema(self._row_schema(extra_cols)).parquet(dp)
-            if route is not None:
-                flat = flat.filter(F.col(ROUTE_COL) == route)
-            return flat.drop(BUCKET_COL)
-        df = (
-            self.spark.read.schema(PARSED_DELTA_SCHEMA).parquet(dp)
-            .filter(F.col("status") == "ok")
-        )
-        if route is not None:
-            df = df.filter(F.col(ROUTE_COL) == route)
-        deleted = F.col("effective_op") == "d"
-
-        def payload(c, name: str):
-            col = F.col(c) if isinstance(c, str) else c
-            return F.when(deleted, F.lit(None).cast("string")).otherwise(col).alias(name)
-
-        out = df.select(
-            *KEY_COLS,
-            *[payload(c, c) for c in DOMAIN_COLS if c not in KEY_COLS],
-            F.col(ROUTE_COL),
-            *[payload(F.element_at(F.col("extras"), k), k) for k in extra_cols],
-            F.col(LSN_COL),
-            F.col(TX_COL),
-            F.col(TS_COL),
-            F.col(OFFSET_COL),
-            deleted.alias(DELETED_COL),
-        )
-        # minhash_bands: flattened versions stay UNSIGNED (null sig
-        # columns via _normalize_rows) — the post-LWW fill_band_columns
-        # signs only the versions that WIN a fold/read, so a raw backlog's
-        # losing versions never pay the shingle cost
-        return out
-
     def _maybe_compact(self, meta: dict) -> dict:
         """Tiered compaction policy: MAJOR (fold into the base) when no
         base exists yet or when `major_every` compactions have passed
@@ -1085,8 +1145,10 @@ class ParquetLake:
         # backlog would otherwise plan ~10^5 shuffle partitions and
         # write tasks, ~all empty — the partition COUNT is independent
         # of the bucket VALUES, so any count is winner-exact
+        extra_cols = list(meta["extra_columns"])
+        rows = self._read_deltas(meta["deltas"], extra_cols)
         data_rel, pairs = self._fold_write(
-            self._read_deltas(meta["deltas"], list(meta["extra_columns"])),
+            rows if rows is not None else self._empty_rows(extra_cols),
             meta, "m", self.n_buckets,
             max(len(manifest.touched_buckets(meta)), 1), horizon=None,
         )
@@ -1534,23 +1596,13 @@ class ParquetLake:
             self.n_buckets = new_n_buckets
         return new_meta
 
-    def _normalize_rows(self, df: DataFrame, extra_cols: list[str]) -> DataFrame:
-        """Full row schema: bucket dropped, every route/extra (and, when
-        the table carries them, signature) column present."""
-        if BUCKET_COL in df.columns:
-            df = df.drop(BUCKET_COL)
-        sig = SIG_COLS if self.minhash_bands else []
-        for c in [ROUTE_COL, *extra_cols, *sig]:
-            if c not in df.columns:
-                df = df.withColumn(c, F.lit(None).cast("string"))
-        return df
-
     def _read_base(
         self, meta: dict, extra_cols: list[str], route: str | None = None,
         bucket_set: set[int] | None = None, exclude: bool = False,
     ):
-        """Base rows as one normalized DataFrame, or None when no bucket
-        survives pruning. Pruning happens at the PATH level — a pruned
+        """Base rows in the full row schema (bucket column dropped), or
+        None when no bucket survives pruning. Pruning happens at the PATH
+        level — a pruned
         bucket's files are never listed or opened: route=X keeps only
         buckets whose manifest route list contains X (the Q11 tenant
         read), and bucket_set keeps only those key-hash buckets
@@ -1576,15 +1628,15 @@ class ParquetLake:
         if base is not None:
             if route is not None:
                 base = base.filter(F.col(ROUTE_COL) == route)
-            base = self._normalize_rows(base, extra_cols)
+            base = base.drop(BUCKET_COL)
         return base
 
     def _read_split(
         self, meta: dict, extra_cols: list[str], route: str | None = None,
         buckets: list[int] | None = None,
     ):
-        """(base, delta) DataFrames, either possibly None, both normalized
-        to the full row schema. Base rows are UNIQUE per key (every base
+        """(base, delta) DataFrames, either possibly None, both in the full
+        row schema. Base rows are UNIQUE per key (every base
         writer — major fold and rebucket — is a resolve_lww output);
         deltas hold multi-version rows. Base bucket paths are bucket dirs
         (route-partitioned roots) while delta paths are their own
@@ -1593,9 +1645,10 @@ class ParquetLake:
 
         route=X is the tenant-pruned path (Q11): buckets and deltas whose
         manifest route list excludes X are skipped entirely (manifest
-        pruning), and the route predicate on the rest lands in the scan's
-        PartitionFilters (directory pruning) — other tenants' files are
-        never opened.
+        pruning), and the route predicate on the rest lands in the base
+        scans' PartitionFilters (directory pruning) — other tenants' base
+        files are never opened — and in the parsed-delta scan's
+        PushedFilters.
 
         buckets=[...] restricts the BASE side to those key-hash buckets
         (the subset-major fold's read: only buckets the deltas touch);
@@ -1614,14 +1667,43 @@ class ParquetLake:
         self, entries: list[dict], extra_cols: list[str],
         route: str | None = None,
     ) -> DataFrame | None:
-        """Delta entries' rows as one frame normalized to the full row
-        schema, or None for no entries. Each delta is its own partitioned
-        root, read separately (several partitioned roots in one load trip
-        partition discovery)."""
-        delta = self._union(
-            [self._read_delta(d, extra_cols, route=route) for d in entries]
-        )
-        return None if delta is None else self._normalize_rows(delta, extra_cols)
+        """Delta entries' rows in the full row schema (bucket column
+        dropped), or None when no entry holds an ok row. A flat delta (a
+        minor fold's output) is (bucket, route)-partitioned like the base
+        and reads under the manifest's row schema, one root each (several
+        partitioned roots in one load trip partition discovery). All
+        parsed deltas are ONE scan of their status=ok leaf dirs under one
+        glob path, through one cached projection (_delta_projection):
+        naming the leaf dirs keeps dead letters out at the file level,
+        skips a delta that holds only dead letters, and keeps building
+        the read's plan independent of the backlog depth. A route
+        predicate is a partition filter on flat deltas and a data filter
+        on parsed ones, over an already manifest-pruned,
+        compact_every-bounded backlog."""
+        schema = self._row_schema(extra_cols)
+        parts = [
+            self.spark.read.schema(schema)
+            .parquet(os.path.join(self.table_dir, d["path"]))
+            .drop(BUCKET_COL)
+            for d in entries if d["format"] != "parsed"
+        ]
+        ok_rels = [
+            d["path"] for d in entries
+            if d["format"] == "parsed"
+            and os.path.isdir(os.path.join(self.table_dir, d["path"], "status=ok"))
+        ]
+        if ok_rels:
+            glob = os.path.join(
+                self.table_dir, "{" + ",".join(ok_rels) + "}", "status=ok")
+            parts.append(
+                self.spark.read.schema(PARSED_DELTA_SCHEMA).parquet(glob)
+                .selectExpr(*_delta_projection(
+                    tuple(extra_cols), bool(self.minhash_bands)))
+            )
+        delta = self._union(parts)
+        if delta is not None and route is not None:
+            delta = delta.filter(F.col(ROUTE_COL) == route)
+        return delta
 
     def _tree_bytes(self, path: str) -> int:
         """Total file bytes under a path via the Hadoop FileSystem's
@@ -1751,7 +1833,7 @@ class ParquetLake:
             # the fill's plan cost is not free).
             df = fill_band_columns(df)
         if not include_deleted:
-            df = df.filter(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
+            df = df.filter(f"NOT {_DELETED_SQL}")
         if not include_internal:
             df = df.drop(*INTERNAL)
         if not keep_signatures:
@@ -1852,10 +1934,12 @@ class ParquetLake:
         df = None
         if keys and meta:
             if len(keys) <= self.LOOKUP_PREDICATE_MAX:
-                pred = None
-                for r, p in keys:
-                    one = (F.col("repo") == r) & (F.col("path") == p)
-                    pred = one if pred is None else (pred | one)
+                # one SQL text: a None key element compares to NULL and
+                # matches nothing
+                pred = " OR ".join(
+                    f"(repo = {_sql_str(r)} AND path = {_sql_str(p)})"
+                    for r, p in keys
+                )
 
                 def match(d: DataFrame) -> DataFrame:
                     return d.filter(pred)
@@ -1873,7 +1957,7 @@ class ParquetLake:
         if df is None:
             return self._empty_rows(extra_cols).drop(*INTERNAL, *SIG_COLS)
         if not include_deleted:
-            df = df.filter(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
+            df = df.filter(f"NOT {_DELETED_SQL}")
         return df.drop(*INTERNAL, *SIG_COLS)
 
     # ---------------- incremental change extraction (CDF) ----------------
@@ -2041,9 +2125,10 @@ class ParquetLake:
 
         # -- winning version per key changed in the range: O(range bytes)
         versions = self._read_deltas(entries, extra_cols, route=prune_route)
+        if versions is None:
+            return empty()  # the range holds dead letters only
         winners = resolve_lww(versions).withColumn("__w_ord", packed_ord())
 
-        w_del = F.coalesce(F.col(DELETED_COL), F.lit(False))
         # migration-exact tenant scope: filter OUTPUT rows on route (the
         # inputs were deliberately not pruned); no departures can exist
         # on the insert-only paths below (no prior state to depart from)
@@ -2060,7 +2145,7 @@ class ParquetLake:
         if from_meta is None:
             # since the beginning: every surviving winner is an insert
             return finish(
-                winners.filter(~w_del)
+                winners.filter(f"NOT {_DELETED_SQL}")
                 .withColumn(CHANGE_TYPE_COL, F.lit("insert"))
             )
 
@@ -2085,15 +2170,15 @@ class ParquetLake:
                                  buckets=wset)
         if prior is None:
             return finish(
-                winners.filter(~w_del)
+                winners.filter(f"NOT {_DELETED_SQL}")
                 .withColumn(CHANGE_TYPE_COL, F.lit("insert"))
             )
 
-        prior_sel = prior.select(
+        prior_sel = prior.selectExpr(
             *KEY_COLS,
-            F.coalesce(F.col(DELETED_COL), F.lit(False)).alias("__p_deleted"),
-            packed_ord().alias("__p_ord"),
-            F.col(ROUTE_COL).alias("__p_route"),
+            f"{_DELETED_SQL} AS __p_deleted",
+            f"{PACKED_ORD_SQL} AS __p_ord",
+            f"{quoted(ROUTE_COL)} AS __p_route",
         )
         # classification join: prior is O(touched buckets), winners are
         # O(changes). Semi-prune prior down to the changed keys first;
@@ -2108,23 +2193,16 @@ class ParquetLake:
             prior_small = F.broadcast(prior_small)
         joined = winners.join(prior_small, KEY_COLS, "left")
 
-        newer = F.col("__p_ord").isNull() | (F.col("__w_ord") > F.col("__p_ord"))
-        existed = F.coalesce(~F.col("__p_deleted"), F.lit(False))
         use_departures = (
             (not self.route_stable_keys) if departures is None
             else departures
         )
         if not use_departures:
-            ct = (
-                F.when(w_del & existed, F.lit("delete"))
-                .when(~w_del & existed, F.lit("update"))
-                .when(~w_del & ~existed, F.lit("insert"))
-                .otherwise(F.lit(None).cast("string"))
-            )
             return finish(
-                joined.filter(newer)
-                .withColumn(CHANGE_TYPE_COL, ct)
-                .filter(F.col(CHANGE_TYPE_COL).isNotNull())
+                joined.filter(_NEWER_SQL)
+                .withColumn(CHANGE_TYPE_COL,
+                            F.expr(_change_type_sql(_EXISTED_SQL)))
+                .filter(f"{CHANGE_TYPE_COL} IS NOT NULL")
             )
 
         # Route-aware classification for mutable routing fields. The
@@ -2141,44 +2219,14 @@ class ParquetLake:
         # classification-join subtree in the physical plan (Catalyst does
         # not share subplans across union branches), doubling the feed's
         # I/O for migrating lakes.
-        same_route = F.col("__p_route").eqNullSafe(F.col(ROUTE_COL))
-        existed_here = existed & same_route
-        ct = (
-            F.when(w_del & existed_here, F.lit("delete"))
-            .when(~w_del & existed_here, F.lit("update"))
-            .when(~w_del & ~existed_here, F.lit("insert"))
-            .otherwise(F.lit(None).cast("string"))
-        )
         helper = {"__w_ord", "__p_ord", "__p_deleted", "__p_route"}
-        ord_internal = [c for c in INTERNAL if c != DELETED_COL]
-        keep_as_is = set(KEY_COLS) | set(ord_internal) | {BUCKET_COL}
-        types = {f.name: f.dataType for f in joined.schema.fields}
-        out_cols = [c for c in joined.columns if c not in helper]
-
-        def row_struct(departure: bool):
-            fields = []
-            for c in out_cols:
-                if not departure or c in keep_as_is:
-                    fields.append(F.col(c).alias(c))
-                elif c == ROUTE_COL:
-                    fields.append(F.col("__p_route").alias(c))
-                elif c == DELETED_COL:
-                    fields.append(F.lit(True).alias(c))
-                else:
-                    # payload columns: the tombstone shape (null payload,
-                    # key identifies the document to remove)
-                    fields.append(F.lit(None).cast(types[c]).alias(c))
-            fields.append(
-                (F.lit("delete") if departure else ct)
-                .alias(CHANGE_TYPE_COL)
-            )
-            return F.struct(*fields)
-
-        normal_row = F.when(ct.isNotNull(), row_struct(False))
-        departure_row = F.when(existed & ~same_route, row_struct(True))
+        out_cols = tuple(
+            (f.name, f.dataType.simpleString())
+            for f in joined.schema.fields if f.name not in helper
+        )
         out = (
-            joined.filter(newer)
-            .select(F.explode(F.array(normal_row, departure_row)).alias("_r"))
+            joined.filter(_NEWER_SQL)
+            .select(F.expr(_migrating_feed_rows(out_cols)))
             .filter(F.col("_r").isNotNull())
             .select("_r.*")
         )

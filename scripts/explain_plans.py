@@ -154,18 +154,55 @@ def write_plans(spark, work: str) -> int:
         must_not=["BatchEvalPython"],
     )
 
-    # 4b. MoR read path: flatten parsed deltas + per-key LWW resolve —
-    # the status=ok partition filter must prune the dead-letter dirs at
-    # the source, and the resolve is the same single-key-shuffle agg.
+    # 4b. MoR read path over a raw backlog: 3 parsed deltas plan as ONE
+    # parquet scan below the one per-key LWW aggregate (the same
+    # single-key-shuffle agg), and that scan names only the deltas'
+    # status=ok leaf dirs — file-level proof that dead letters, which sit
+    # beside them on disk, are never listed or opened.
     mor = ParquetLake(spark, os.path.join(work, "mor"), n_buckets=16, mode="mor")
     mor.merge_parsed(parsed, 0)
-    plan = formatted(mor.read())
+    for bid, seed in ((1, 5), (2, 6)):
+        mor.merge_parsed(parse_envelopes(
+            generate.bulk_events_df(spark, 500, n_keys=100, seed=seed)), bid)
+    read_mor = mor.read()
     check(
-        "MoR read (delta flatten + LWW resolve)",
-        plan,
-        must=["partial_max_by", "PartitionFilters"],
+        "MoR read (3 raw deltas: one scan, one LWW resolve)",
+        formatted(read_mor),
+        must=["partial_max_by"],
         must_not=["BatchEvalPython", "Window"],
     )
+    roots = [os.path.join(mor.table_dir, d["path"])
+             for d in mor.current_meta()["deltas"]]
+    scans = [
+        (node, ancestors) for node, ancestors in plan_nodes(read_mor)
+        if node.getClass().getSimpleName() == "FileSourceScanExec"
+    ]
+    one_scan = len(scans) == 1 and any("Aggregate" in a for a in scans[0][1])
+    sections[-1][2].append(
+        f"{'OK ' if one_scan else 'FAIL'} {len(roots)} raw deltas plan as "
+        f"one parquet scan below the aggregate (found {len(scans)} scans)"
+    )
+    if not one_scan:
+        failures.append(f"MoR read: {len(scans)} scans for 3 raw deltas, want 1")
+    scanned = read_mor.inputFiles()
+    ok_dirs = [os.path.join(r, "status=ok") + os.sep for r in roots]
+    dead = [
+        f for r in roots for dirpath, _dirs, files in os.walk(r)
+        if os.path.basename(dirpath) != "status=ok"
+        for f in files if f.endswith(".parquet")
+    ]
+    ok_files = (
+        bool(dead)
+        and all(any(d in f for d in ok_dirs) for f in scanned)
+        and all(any(d in f for f in scanned) for d in ok_dirs)
+    )
+    sections[-1][2].append(
+        f"{'OK ' if ok_files else 'FAIL'} the scan's {len(scanned)} files lie "
+        f"under the {len(roots)} deltas' status=ok dirs, each one listed; "
+        f"the {len(dead)} dead-letter files beside them are not listed"
+    )
+    if not ok_files:
+        failures.append("MoR read: delta scan files are not exactly status=ok")
 
     # 4b2. MoR STEADY-STATE read: compacted base + small delta => ONE LWW
     # aggregate over the delta-touched base buckets and the delta rows

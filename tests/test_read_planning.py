@@ -1,9 +1,10 @@
 """Lake reads are planned from the manifest: building a read's DataFrame
 launches no Spark job (no partition-discovery listing, no footer or
-schema-inference job, no key-hash job), every read resolves through one
-aggregate over only the delta-touched buckets, and the driver-side key
-hash that makes lookups job-free is bit-exact with the engine's
-bucket_expr."""
+schema-inference job, no key-hash job) and a bounded number of py4j
+round trips that does not grow with the raw backlog, every read
+resolves through one aggregate over only the delta-touched buckets, and
+the driver-side key hash that makes lookups job-free is bit-exact with
+the engine's bucket_expr."""
 
 from __future__ import annotations
 
@@ -31,24 +32,21 @@ def _jobs_while(spark, build):
     return out, sorted(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_building_a_read_launches_no_spark_job(spark, tmp_path):
+def _backlog_lake(spark, tmp_path):
     """A 64-bucket MoR lake with a base, one minor-fold (flat) delta and
-    3 raw parsed deltas: building read(), read(route=X), lookup_many of 16
-    keys and read_changes(a, b) — before any action — runs 0 Spark jobs.
-
-    Exempt, and not built here: read_changes over a range in which a
-    rebucket changed the bucket modulus recomputes the changed keys'
-    buckets under the FROM snapshot's modulus with one small Spark job
-    (the manifest's bucket lists were hashed with another modulus)."""
+    3 raw parsed deltas. Returns (lake, ingest, a, builds): ingest(i, bid)
+    lands log chunk i as batch bid, `a` is the snapshot before the raw
+    deltas, and builds maps a name to a function building read(),
+    read(route=X), lookup_many of 16 keys and read_changes(a, current)."""
     log = generate.bulk_events_df(spark, 1_800, n_keys=300, seed=11).collect()
     lake = ParquetLake(spark, str(tmp_path / "lake"), n_buckets=64,
                        mode="mor", compact_every=None)
     chunks = [log[i::6] for i in range(6)]
 
-    def ingest(i):
+    def ingest(i, bid=None):
         process_batch(
             spark.createDataFrame(chunks[i], schema=generate.KAFKA_SHAPE),
-            i, lake,
+            i if bid is None else bid, lake,
         )
 
     ingest(0)
@@ -59,12 +57,6 @@ def test_building_a_read_launches_no_spark_job(spark, tmp_path):
     a = lake.current_meta()["id"]
     for i in (3, 4, 5):
         ingest(i)
-    meta = lake.current_meta()
-    assert len(meta["buckets"]) > 32  # above Spark's default listing threshold
-    assert [d["format"] for d in meta["deltas"]] == [
-        "flat", "parsed", "parsed", "parsed"]
-    assert "branch" in meta["extra_columns"]  # an evolved column is read too
-
     keys = sorted({(r["repo"], r["path"]) for r in lake.read().collect()})
     keys = random.Random(3).sample(keys, 16)
     route = generate.TOPICS[0]
@@ -72,12 +64,88 @@ def test_building_a_read_launches_no_spark_job(spark, tmp_path):
         "read": lambda: lake.read(),
         "read_route": lambda: lake.read(route=route),
         "lookup_many": lambda: lake.lookup_many(keys),
-        "read_changes": lambda: lake.read_changes(a, meta["id"]),
+        "read_changes": lambda: lake.read_changes(a, lake.current_meta()["id"]),
     }
+    return lake, ingest, a, builds
+
+
+def test_building_a_read_launches_no_spark_job(spark, tmp_path):
+    """On _backlog_lake's lake, building read(), read(route=X),
+    lookup_many of 16 keys and read_changes(a, b) — before any action —
+    runs 0 Spark jobs.
+
+    Exempt, and not built here: read_changes over a range in which a
+    rebucket changed the bucket modulus recomputes the changed keys'
+    buckets under the FROM snapshot's modulus with one small Spark job
+    (the manifest's bucket lists were hashed with another modulus)."""
+    lake, _ingest, _a, builds = _backlog_lake(spark, tmp_path)
+    meta = lake.current_meta()
+    assert len(meta["buckets"]) > 32  # above Spark's default listing threshold
+    assert [d["format"] for d in meta["deltas"]] == [
+        "flat", "parsed", "parsed", "parsed"]
+    assert "branch" in meta["extra_columns"]  # an evolved column is read too
+
     for name, build in builds.items():
         df, jobs = _jobs_while(spark, build)
         assert jobs == [], f"building {name} ran Spark jobs {jobs}"
         assert df.count() > 0, name  # the action still answers
+
+
+def _py4j_calls(spark, build) -> int:
+    """Python-to-JVM commands sent while build() runs, not counting the
+    gateway's memory commands (object releases, sent when Python's GC
+    runs, so their number is not the build's)."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    n = 0
+
+    def counting(command, *args, **kwargs):
+        nonlocal n
+        if not command.startswith("m\n"):
+            n += 1
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        build()
+    finally:
+        del client.send_command
+    return n
+
+
+# py4j round trips per build on _backlog_lake's lake. The engine before
+# the one-scan delta read sent 1,703 (read), 1,820 (read_route), 2,767
+# (lookup_many) and 2,949 (read_changes) there, +376 per extra raw delta;
+# each ceiling is under 40 % of that.
+PY4J_CEILING = {"read": 450, "read_route": 450, "lookup_many": 450,
+                "read_changes": 1_000}
+
+
+def test_building_a_read_costs_few_py4j_calls(spark, tmp_path):
+    """Building each read on _backlog_lake's lake sends at most
+    PY4J_CEILING py4j commands, and the same number with 6 raw deltas
+    outstanding as with 3: the parsed backlog is one scan through one
+    cached projection, so the cost of building a read does not grow
+    with the backlog's depth."""
+    lake, ingest, a, builds = _backlog_lake(spark, tmp_path)
+
+    def counts() -> dict[str, int]:
+        out = {}
+        for name, build in builds.items():
+            build()  # warm: the first build fills the projection caches
+            out[name] = _py4j_calls(spark, build)
+        return out
+
+    at3 = counts()
+    for i in (3, 4, 5):
+        ingest(i, bid=i + 3)
+    assert [d["format"] for d in lake.current_meta()["deltas"]] == [
+        "flat", *["parsed"] * 6]
+    at6 = counts()
+    for name, ceiling in PY4J_CEILING.items():
+        assert at3[name] <= ceiling, (name, at3[name])
+    assert at6 == at3
+    assert lake.read_changes(a, lake.current_meta()["id"]).count() > 0
 
 
 def _scan_files(plan) -> dict[bool, set[str]]:
